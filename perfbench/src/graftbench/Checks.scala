@@ -79,6 +79,16 @@ object Checks {
     else None
   }
 
+  /** The candidate probe against the pass: pipJoin's plan must expose
+    * its bbox passes and hits, the rows the refine kernel is timed on
+    * must be those bbox passes, and the probe's hits the pass's. */
+  def candidateCounts(bboxPass: Long, probeHits: Long, kernelRows: Long,
+      passHits: Long): Option[String] =
+    if (bboxPass <= 0 || probeHits <= 0) Some("pipJoin's plan exposed no bbox passes or hits")
+    else if (kernelRows != bboxPass) Some(s"bbox-passing rows $kernelRows != pipJoin's $bboxPass")
+    else if (probeHits != passHits) Some(s"probe hits $probeHits != pass hits $passHits")
+    else None
+
   /** Read-probe check after a commit: every upserted node owns triples,
     * no deleted object owns any, and the probe saw rows at all. */
   def probe(rows: Map[String, Long], upsertedNodes: Seq[String],

@@ -19,7 +19,7 @@ object ReplicateWorkload extends Workload {
       "Replicator.applyOps into the 4-layer store, then the batch's objects are read back " +
       "through the merge-on-read triple store's delta chain"
 
-  val Orders = 5000
+  val Orders = 2500
   val Events = 10000
   val BatchEvents = 1000
   val Buckets = 16

@@ -53,6 +53,12 @@ object SelfTest {
     expect("shifted tile count rejected",
       Checks.sameTiles(tiles.map { case (k, v) => k -> (v + 1) }, tiles).nonEmpty)
 
+    expect("matching candidate probe accepted", Checks.candidateCounts(50, 20, 50, 20).isEmpty)
+    expect("kernel rows off pipJoin's bbox passes rejected",
+      Checks.candidateCounts(50, 20, 49, 20).nonEmpty)
+    expect("probe hits off the pass's rejected", Checks.candidateCounts(50, 20, 50, 21).nonEmpty)
+    expect("plan without join rows rejected", Checks.candidateCounts(0, 0, 0, 0).nonEmpty)
+
     val rows = Map("node:1" -> 3L, "way:2" -> 5L)
     expect("right probe accepted", Checks.probe(rows, Seq("node:1"), Seq("rel:9")).isEmpty)
     expect("upserted node without triples rejected",

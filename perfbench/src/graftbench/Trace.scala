@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, Spark
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -28,11 +29,11 @@ final case class TaskRec(stageId: Int, launchMs: Long, finishMs: Long,
 final case class ScanRec(path: String, files: Long, bytes: Long)
 
 /** One SQL execution (by its execution id) as seen by the
-  * QueryExecutionListener: the write it performed (if any) and the
-  * files it scanned. */
+  * QueryExecutionListener: the write it performed (if any), the files
+  * it scanned, and each join's key names with its output rows. */
 final case class ExecRec(id: Long, writePath: Option[String], writeRows: Long,
     writeBytes: Long, writeFiles: Long, writeParts: Long,
-    scans: Seq[ScanRec])
+    scans: Seq[ScanRec], joins: Seq[(Seq[String], Long)])
 
 /** Span recorder. The untraced run uses [[Trace.Off]], whose spans are
   * plain calls, so end-to-end timings carry no listener or
@@ -128,9 +129,12 @@ final class Tracer(spark: SparkSession, val runId: String) extends Trace
       ScanRec(s.relation.location.rootPaths.mkString(","),
         metric(s, "numFiles"), metric(s, "filesSize"))
     }
+    val joins = collect(plan) { case j: BaseJoinExec =>
+      (j.leftKeys.flatMap(_.references.map(_.name)), metric(j, "numOutputRows"))
+    }
     def wm(k: String) = write.map(w => metric(w, k)).getOrElse(0L)
     ExecRec(-1L, path, wm("numOutputRows"), wm("numOutputBytes"), wm("numFiles"),
-      wm("numParts"), scans)
+      wm("numParts"), scans, joins)
   }
 
   def on = true
