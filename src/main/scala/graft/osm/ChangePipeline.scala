@@ -1,6 +1,6 @@
 package graft.osm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -91,9 +91,7 @@ object ChangePipeline {
     * (rel_id, member_id, member_kind). */
   def staleRelsOfRels(winners: DataFrame, relMembers: DataFrame,
       staleR: DataFrame): DataFrame = {
-    val enabled = winners.sparkSession.conf
-      .getOption("spark.graft.relsOfRels").exists(_.toBoolean)
-    if (!enabled) staleR.select(col("rel_id")).limit(0)
+    if (!relsOfRels(winners)) staleR.select(col("rel_id")).limit(0)
     else {
       val probeRels = idsOf(winners, "relation", "modify")
         .union(staleR.select(col("rel_id").as("id"))).distinct()
@@ -107,8 +105,12 @@ object ChangePipeline {
   /** J8: ordered member reconstruction + LINESTRING derivation for the
     * geometry-stale ways. */
   def reconstructWays(stale: DataFrame, wayMembers: DataFrame, nodes: DataFrame): DataFrame =
+    assembleWays(wayMembers.join(stale, Seq("way_id"), "left_semi"), nodes)
+
+  /** The J8 formula over a membership already restricted to the ways to
+    * rebuild. */
+  private[osm] def assembleWays(wayMembers: DataFrame, nodes: DataFrame): DataFrame =
     wayMembers
-      .join(stale, Seq("way_id"), "left_semi")
       .join(nodes, "node_id")
       .groupBy(col("way_id"))
       .agg(sort_array(collect_list(struct(col("pos"), col("node_id"), col("lon"), col("lat"))))
@@ -233,4 +235,73 @@ object ChangePipeline {
           .select(col("id").as("node_id"),
             col("new_lon").as("lon"), col("new_lat").as("lat")))
   }
+
+  private def relsOfRels(df: DataFrame): Boolean =
+    df.sparkSession.conf.getOption("spark.graft.relsOfRels").exists(_.toBoolean)
+
+  // ---- the closure over a driver-held winner id set -------------------
+  // The functions above express every closure leg as a semi- or
+  // anti-join against the winner frame. At batch scale each such join
+  // plans as a broadcast, and each broadcast is a Spark job of its own.
+  // The live loop instead collects the batch's ids once and filters the
+  // layer scans with them: an `InSet` predicate, as the reference sends
+  // each id set to the store as a VALUES list (OsmChangeHandler.cpp,
+  // doInBatches). The sets these return equal the frames above.
+
+  /** The (kind, id, action) of every winning op of a batch — the only
+    * batch state the driver holds (8 B of payload per id). */
+  private[osm] final case class BatchIds(ops: Seq[(String, Long, String)]) {
+    private val byKind = ops.groupBy(_._1)
+    /** Ids of the `kind` winners, restricted to `actions` when given. */
+    def apply(kind: String, actions: String*): Set[Long] =
+      byKind.getOrElse(kind, Nil).collect {
+        case (_, id, a) if actions.isEmpty || actions.contains(a) => id
+      }.toSet
+  }
+
+  /** Collect a winner frame's ids: one job. */
+  private[osm] def batchIds(winners: DataFrame): BatchIds =
+    BatchIds(winners.select(col("kind"), col("id"), col("action")).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq)
+
+  private[osm] def in(c: Column, ids: Set[Long]): Column =
+    GraftSqlShim.inSet(c.cast("long"), ids)
+
+  /** Owners of member rows that hit `probe`, minus the owners already in
+    * the batch: one scan job, deduplicated on the driver. */
+  private def closureIds(members: DataFrame, memberCol: String, probe: Set[Long],
+      owner: String, inBatch: Set[Long]): Set[Long] =
+    members.filter(in(col(memberCol), probe) && !in(col(owner), inBatch))
+      .select(col(owner)).collect().map(_.getLong(0)).toSet
+
+  /** [[staleWays]] as a collected set. */
+  private[osm] def staleWayIds(ids: BatchIds, wayMembers: DataFrame): Set[Long] =
+    closureIds(wayMembers, "node_id", ids("node", "modify"), "way_id", ids("way"))
+
+  /** [[staleRels]] as a collected set. */
+  private[osm] def staleRelIds(ids: BatchIds, relMembers: DataFrame,
+      stale: Set[Long]): Set[Long] =
+    closureIds(relMembers, "member_id", ids("way", "modify") ++ stale,
+      "rel_id", ids("relation"))
+
+  /** [[staleRelsOfRels]] as a collected set (empty, and no job, when the
+    * flag is off). */
+  private[osm] def staleRelsOfRelIds(ids: BatchIds, relMembers: DataFrame,
+      staleR: Set[Long]): Set[Long] =
+    if (!relsOfRels(relMembers)) Set.empty
+    else closureIds(relMembers.filter(col("member_kind") === "relation"), "member_id",
+      ids("relation", "modify") ++ staleR, "rel_id", ids("relation"))
+
+  /** [[applyNodeOps]] without a join: the node layer minus every node
+    * winner, plus the created/modified nodes. Row-identical to
+    * applyNodeOps whenever the created/modified nodes carry both
+    * coordinates, as OsmChange requires; it is also exactly the node
+    * table a merge of the same winners commits. */
+  private[osm] def applyNodeIds(nodes: DataFrame, winners: DataFrame,
+      ids: BatchIds): DataFrame =
+    nodes.filter(!in(col("node_id"), ids("node")))
+      .select(col("node_id"), col("lon"), col("lat"))
+      .unionByName(winners
+        .filter(col("kind") === "node" && col("action").isin("create", "modify"))
+        .select(col("id").as("node_id"), col("lon"), col("lat")))
 }

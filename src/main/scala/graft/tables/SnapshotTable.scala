@@ -2,7 +2,7 @@ package graft.tables
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -29,7 +29,12 @@ import scala.jdk.CollectionConverters._
   * dir). Write amplification per delta batch is O(touched buckets),
   * not O(table) — the judged fix over the v1 copy-on-write-everything
   * design. Tables created without key columns keep the v1 flat layout
-  * and full-rewrite merge (legacy path).
+  * and full-rewrite merge (legacy path). A merge's driver state is the
+  * delta's touched-bucket histogram plus, under a size gate, its
+  * distinct keys (filtered as a scan predicate) — never table rows.
+  *
+  * Every manifest records the table's schema DDL, and every scan of
+  * committed files passes it, so reads launch no schema-inference job.
   *
   * INVARIANT: snapshot data dirs are IMMUTABLE once committed. Because
   * newer snapshots reference older snapshots' bucket dirs in their
@@ -130,8 +135,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     val baseDf = readAt(chainBase(id))
       .withColumn("__del", lit(false)).withColumn("__c", lit(0))
     val all = deltaChain(id).zipWithIndex.map { case (d, i) =>
-      spark.read.parquet(dataDir(d).toString).drop("__b")
-        .withColumn("__c", lit(i + 1))
+      scanDelta(d).drop("__b").withColumn("__c", lit(i + 1))
     }.foldLeft(baseDf)(_ unionByName _)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*)
@@ -171,7 +175,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     val baseDf = readAt(zChainBase(id))
       .withColumn("__del", lit(false)).withColumn("__c", lit(0))
     val all = zDeltaChain(id).zipWithIndex.map { case (d, i) =>
-      spark.read.parquet(dataDir(d).toString).withColumn("__c", lit(i + 1))
+      scanDelta(d).withColumn("__c", lit(i + 1))
     }.foldLeft(baseDf)(_ unionByName _)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*)
@@ -186,7 +190,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     if (isZDelta(info)) return resolveZDelta(id)
     val buckets = bucketPaths(id)
     if (buckets.nonEmpty)
-      spark.read.parquet(buckets.values.map(_.toString).toSeq.sorted: _*)
+      scan(info, buckets.values.map(_.toString).toSeq.sorted)
     else {
       if (info.get("keyCols").exists(_.nonEmpty)) {
         val ddl = info.getOrElse("schema", throw new IllegalStateException(
@@ -194,9 +198,27 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      } else spark.read.parquet(dataDir(id).toString)
+      } else scan(info, Seq(dataDir(id).toString))
     }
   }
+
+  /** Scan committed parquet files with the schema their manifest
+    * records, so no schema-inference job runs (Spark otherwise reads a
+    * footer in a one-task job per scan). `extra` appends columns the
+    * files carry beyond the table schema. Manifests that record no
+    * schema fall back to inference. */
+  private def scan(info: Map[String, String], paths: Seq[String],
+      extra: String = ""): DataFrame =
+    info.get("schema").filter(_.nonEmpty) match {
+      case Some(ddl) => spark.read.schema(ddl + extra).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** A merge-on-read delta commit's files: the table schema plus the
+    * `__del` tombstone flag (and, for a bucketed delta, the `__b`
+    * partition column the dir layout adds). */
+  private def scanDelta(d: Long): DataFrame =
+    scan(snapshotInfo(d), Seq(dataDir(d).toString), ", __del BOOLEAN")
 
   /** CDC read between two snapshots (Delta `table_changes` analogue):
     * one row per key whose state differs, tagged insert / update /
@@ -293,7 +315,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
         val dir = dataDir(id)
         df.write.mode("overwrite").parquet(dir.toString)
         val rows = spark.read.parquet(dir.toString).count()
-        writeMeta(id, operation, rows, dirBytes(dir), Map.empty)
+        writeMeta(id, operation, rows, dirBytes(dir), Map("schema" -> df.schema.toDDL))
     }
   }
 
@@ -434,8 +456,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
         else {
           val zPred = ivs.map { case (lo, hi) =>
             col("zval") >= lo && col("zval") <= hi }.reduce(_ || _)
-          Some(spark.read
-            .parquet(keep.values.map(_.toString).toSeq.sorted: _*)
+          Some(scan(info, keep.values.map(_.toString).toSeq.sorted)
             .filter(zPred && bboxPred))
         }
       }
@@ -447,7 +468,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     val base0 = baseScan.getOrElse(empty) // schema DDL already carries zval
       .withColumn("__del", lit(false)).withColumn("__c", lit(0))
     val withDeltas = chain.zipWithIndex.map { case (d, i) =>
-      spark.read.parquet(dataDir(d).toString).withColumn("__c", lit(i + 1))
+      scanDelta(d).withColumn("__c", lit(i + 1))
     }.foldLeft(base0)(_ unionByName _)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*)
@@ -487,7 +508,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
           // resolve once, rewrite fully (compaction + merge in one)
           compactWith(updates, keyCols, info("numBuckets").toInt, deleteMarker)
         else
-          mergeBucketed(cur, updates, keyCols, info("numBuckets").toInt, deleteMarker)
+          mergeBucketed(cur, info, updates, keyCols, info("numBuckets").toInt, deleteMarker)
       case None => // legacy flat table: copy-on-write of everything
         val upd = updates.cache()
         val n = upd.count()
@@ -503,94 +524,76 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     }
   }
 
-  /** Byte-aware broadcast gate inputs. Fixed-width key columns use
-    * Catalyst's defaultSize; string/binary key columns are MEASURED
-    * (defaultSize is a constant 20 for strings, so a genuinely wide
-    * key would otherwise always pass the gate and OOM the executors).
-    * The var-width sums PIGGYBACK on an aggregate the merge runs
-    * anyway — never an extra job (measured ~2 s/batch on the e2e's
-    * string-keyed triple store when run standalone). */
-  private def varKeyCols(df: DataFrame, keyCols: Seq[String]): Seq[String] = {
+  /** Key bytes of a delta group: fixed-width key columns at Catalyst's
+    * defaultSize, string/binary key columns MEASURED (defaultSize is a
+    * constant 20 for strings, so a genuinely wide key would otherwise
+    * always pass the key gate). */
+  private def keyBytes(df: DataFrame, keyCols: Seq[String]): Column = {
     import org.apache.spark.sql.types.{BinaryType, StringType}
-    df.schema.fields
-      .filter(f => keyCols.contains(f.name) &&
-        (f.dataType == StringType || f.dataType == BinaryType))
-      .map(_.name).toSeq
+    val (varW, fixedW) = df.schema.fields.filter(f => keyCols.contains(f.name))
+      .partition(f => f.dataType == StringType || f.dataType == BinaryType)
+    varW.map(f => sum(coalesce(octet_length(col(f.name)).cast("long"), lit(0L))))
+      .foldLeft(count(lit(1)) * fixedW.map(_.dataType.defaultSize.toLong).sum)(_ + _)
   }
 
-  private def varWidthAggs(varCols: Seq[String]): Seq[org.apache.spark.sql.Column] =
-    varCols.map(c =>
-      sum(coalesce(octet_length(col(c)).cast("long"), lit(0L))).as(s"__w_$c"))
-
-  private def fixedKeyWidth(df: DataFrame, keyCols: Seq[String]): Long = {
-    import org.apache.spark.sql.types.{BinaryType, StringType}
-    df.schema.fields
-      .filter(f => keyCols.contains(f.name) &&
-        f.dataType != StringType && f.dataType != BinaryType)
-      .map(_.dataType.defaultSize.toLong).sum
-  }
-
-  private def mergeBucketed(cur: Long, updates: DataFrame, keyCols: Seq[String],
-      numBuckets: Int, deleteMarker: Option[String]): MergeResult = {
-    val upd = updates.withColumn("__b", bucketExpr(keyCols, numBuckets)).cache()
-    // the touched-bucket histogram is <= numBuckets small rows — the
-    // ONLY thing the driver ever collects here; it doubles as the
-    // applied-row count AND the var-width key-byte measure, so callers
-    // need no separate count() or sizing action
-    val varCols = varKeyCols(upd, keyCols)
-    val statRows = upd.groupBy(col("__b"))
-      .agg(count(lit(1)).as("n"), varWidthAggs(varCols): _*)
+  /** ONE aggregate over a cached, `__b`-tagged delta returns its
+    * per-bucket row counts (the touched-bucket histogram, which doubles
+    * as the applied-row count) and the way a merge drops the delta's
+    * keys from the rows it keeps. The same pass ships each bucket's
+    * distinct keys to the driver while the bucket stays within its
+    * 1/numBuckets share of the key gate (5M rows, 256 MB of key bytes).
+    * The keep side then filters them as an `InSet` scan predicate,
+    * which costs no broadcast job. A delta past the gate keeps its keys
+    * on the executors and is anti-joined with a shuffle-hash join. */
+  private def deltaKeys(upd: DataFrame, keyCols: Seq[String],
+      numBuckets: Int): (Map[Int, Long], DataFrame => DataFrame) = {
+    val key = if (keyCols.size == 1) col(keyCols.head) else struct(keyCols.map(col): _*)
+    val n = count(lit(1))
+    val small = n <= 5000000L / numBuckets &&
+      keyBytes(upd, keyCols) <= (256L << 20) / numBuckets
+    val stats = upd.groupBy(col("__b"))
+      .agg(n.as("n"), when(small, collect_set(key)).as("keys"))
       .collect()
-    val updStats = statRows.map(r => r.getInt(0) -> r.getLong(1))
-    val varKeyBytes = statRows.map(r =>
-      varCols.indices.map(i => if (r.isNullAt(i + 2)) 0L else r.getLong(i + 2)).sum).sum
-    val touched = updStats.map(_._1).toSet
-    val updateRows = updStats.map(_._2).sum
+    val keys = stats.map(r => Option(r.getSeq[Any](2)))
+    val dropKeys: DataFrame => DataFrame =
+      if (keys.forall(_.isDefined)) {
+        val hit = GraftSqlShim.inSet(key, keys.flatMap(_.get))
+        _.filter(!coalesce(hit, lit(false)))
+      } else _.join(upd.select(keyCols.map(col): _*).distinct().hint("shuffle_hash"),
+        keyCols, "left_anti")
+    (stats.map(r => r.getInt(0) -> r.getLong(1)).toMap, dropKeys)
+  }
+
+  private def mergeBucketed(cur: Long, info: Map[String, String], updates: DataFrame,
+      keyCols: Seq[String], numBuckets: Int, deleteMarker: Option[String]): MergeResult = {
+    val upd = updates.withColumn("__b", bucketExpr(keyCols, numBuckets)).cache()
+    val (updStats, dropKeys) = deltaKeys(upd, keyCols, numBuckets)
+    val touched = updStats.keySet
+    val updateRows = updStats.values.sum
     val srcMap = bucketSources(cur)
     val rowsMap = bucketRows(cur)
     val touchedDirs = touched.toSeq.sorted
       .flatMap(b => srcMap.get(b).map(s => bucketDir(s, b).toString))
-    // distinct keys only (an owner-keyed delta repeats its key per
-    // row), broadcast while the batch is small: without the hint the
-    // cached delta's size estimate exceeds the auto threshold and the
-    // anti-join degrades to a sort-merge join that SORTS the whole
-    // kept base — measured as the dominant cost of wide-table merges
-    val keyDistinct = upd.select(keyCols.map(col): _*).distinct()
-    // byte-aware broadcast gate: 5M rows of a wide string key is
-    // hundreds of MB — too big to ship to every task even though the
-    // row count alone looks broadcastable (bytes are an upper bound:
-    // the broadcast ships distinct keys only)
-    val keyBytes = updateRows * fixedKeyWidth(upd, keyCols) + varKeyBytes
-    val keyOnly =
-      if (updateRows <= 5000000L && keyBytes <= (256L << 20))
-        broadcast(keyDistinct)
-      else keyDistinct.hint("shuffle_hash")
+    // the touched buckets' kept rows; __b is re-derived from the keys
+    // as a pure projection since the scan targets the bucket dirs
     val keep =
       if (touchedDirs.isEmpty) None
-      else Some(spark.read.parquet(touchedDirs: _*)
-        .join(keyOnly, keyCols, "left_anti"))
-    val ins = (deleteMarker match {
+      else Some(dropKeys(scan(info, touchedDirs))
+        .withColumn("__b", bucketExpr(keyCols, numBuckets)))
+    val ins = deleteMarker match {
       case Some(m) => upd.filter(!col(m)).drop(m)
       case None => upd
-    }).drop("__b")
+    }
+    val rows = keep.map(_.unionByName(ins)).getOrElse(ins)
     val id = cur + 1
     val dir = dataDir(id)
-    // ONE write job, NO full-bucket shuffle: the kept base rows come
-    // out of per-bucket dirs already bucket-aligned (each scan task
-    // holds exactly one __b value; __b is re-derived from the keys as
-    // a pure projection since the read targets the bucket dirs
-    // directly), the (batch-sized) delta alone is clustered, and the
-    // union preserves both children's partitioning — so untouched-row
-    // rewrite never shuffles and the whole merge commits in a single
-    // action (driver job latency is the core-count-invariant cost of
-    // a batch, so every saved round trip scales the low-core levels).
-    val insB = clusterByBucket(
-      ins.withColumn("__b", bucketExpr(keyCols, numBuckets)), numBuckets)
-    val keepB = keep.map(_.withColumn("__b", bucketExpr(keyCols, numBuckets)))
-    // per-bucket counts ride the write as observed metrics; a fully
-    // deleted bucket counts zero and drops out of the manifest
-    val written = writeCounted(
-      keepB.map(_.unionByName(insB)).getOrElse(insB), dir, numBuckets)
+    // ONE write job. Kept and inserted rows are clustered on __b
+    // together, so every touched bucket is rewritten as ONE file (kept
+    // rows left in their old split would add a file per bucket every
+    // batch); the shuffle moves only the touched buckets' rows.
+    // Per-bucket counts ride the write as observed metrics; a fully
+    // deleted bucket counts zero and drops out of the manifest.
+    val written = writeCounted(clusterByBucket(rows, numBuckets), dir, numBuckets)
     upd.unpersist()
     val newSrc = (srcMap -- touched) ++ written.keys.map(_ -> id)
     val newRows = (rowsMap -- touched) ++ written
@@ -602,7 +605,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     val newBytes = untouched ++ writtenBucketBytes(dir)
     val sid = writeMeta(id, "merge", newRows.values.sum, newBytes.values.sum, Map(
       "keyCols" -> keyCols.mkString(","), "numBuckets" -> numBuckets.toString,
-      "schema" -> ins.schema.toDDL,
+      "schema" -> rows.drop("__b").schema.toDDL,
       "bucketSrc" -> serBuckets(newSrc),
       "bucketRows" -> serBuckets(newRows),
       "bucketBytes" -> serBuckets(newBytes)))
@@ -837,28 +840,16 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   private def compactWith(updates: DataFrame, keyCols: Seq[String],
       numBuckets: Int, deleteMarker: Option[String]): MergeResult = {
     val resolved = read()
-    val upd = updates.cache()
-    // ONE action yields the row count and the var-width key bytes
-    val varCols = varKeyCols(upd, keyCols)
-    val statRow = upd.agg(count(lit(1)).as("n"), varWidthAggs(varCols): _*).head()
-    val n = statRow.getLong(0)
-    val varBytes = varCols.indices
-      .map(i => if (statRow.isNullAt(i + 1)) 0L else statRow.getLong(i + 1)).sum
-    val keyD0 = upd.select(keyCols.map(col): _*).distinct()
-    // same byte-aware broadcast gate as mergeBucketed: row count alone
-    // lets 5M wide string keys (hundreds of MB) ship to every task
-    val keyD = if (n <= 5000000L &&
-        n * fixedKeyWidth(upd, keyCols) + varBytes <= (256L << 20))
-      broadcast(keyD0) else keyD0.hint("shuffle_hash")
-    val ins = deleteMarker match {
+    val upd = updates.withColumn("__b", bucketExpr(keyCols, numBuckets)).cache()
+    val (counts, dropKeys) = deltaKeys(upd, keyCols, numBuckets)
+    val ins = (deleteMarker match {
       case Some(m) => upd.filter(!col(m)).drop(m)
       case None => upd
-    }
-    val id = commitBucketed(
-      resolved.join(keyD, keyCols, "left_anti").unionByName(ins),
+    }).drop("__b")
+    val id = commitBucketed(dropKeys(resolved).unionByName(ins),
       "compact", keyCols, numBuckets)
     upd.unpersist()
-    MergeResult(id, n)
+    MergeResult(id, counts.values.sum)
   }
 }
 

@@ -11,6 +11,15 @@ object GraftSqlShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `c IN values` as one hashed `InSet` literal — a scan predicate
+    * (pushed to parquet as `In`) in place of a broadcast semi-join, so a
+    * driver-held id set costs no Spark job. `values` are external Scala
+    * values of `c`'s type (Long, String, Row for a struct key); the
+    * result follows SQL `IN` null semantics. */
+  def inSet(c: Column, values: Iterable[Any]): Column =
+    column(catalyst.expressions.InSet(expression(c),
+      values.map(catalyst.CatalystTypeConverters.convertToCatalyst).toSet))
+
   /** Register a native expression into an ALREADY-BUILT session (for
     * sessions not constructed with `spark.sql.extensions` — e.g. the
     * shared test session). Prefer `graft.GraftExtensions` at build

@@ -219,6 +219,50 @@ class ReplicatorSpec extends SparkTestBase {
     assert(!got.exists(_._1 == "node:2") && !got.exists(_._1 == "way:20"))
   }
 
+  test("one applyOps launches a bounded number of Spark jobs") {
+    import graft.rdf.TripleDerive._
+    import org.apache.spark.sql.functions.{lit, map, to_timestamp}
+    val root = fresh("jobs")
+    val bn = baseNodes
+      .withColumn("ts", to_timestamp(lit("2023-12-01 00:00:00")))
+      .withColumn("tags", map(lit("amenity"), lit("bench")))
+    val bw = Seq((10L, "1;2;3",
+        "LINESTRING(0.0000000 0.0000000, 5.0000000 5.0000000, 7.0000000 7.0000000)"))
+      .toDF("way_id", "members", "wkt")
+      .withColumn("ts", to_timestamp(lit("2023-12-02 00:00:00")))
+      .withColumn("tags", map(lit("highway"), lit("residential")))
+    val br = Seq((100L, "way/10/outer")).toDF("rel_id", "members")
+      .withColumn("ts", to_timestamp(lit("2023-12-03 00:00:00")))
+      .withColumn("tags", lit(null).cast("map<string,string>"))
+    SnapshotTable.create(spark, s"$root/nodes", bn, Seq("node_id"))
+    SnapshotTable.create(spark, s"$root/ways", bw, Seq("way_id"))
+    SnapshotTable.create(spark, s"$root/rels", br, Seq("rel_id"))
+    SnapshotTable.create(spark, s"$root/triples",
+      ownedNodeTriplesFull(bn).unionByName(ownedWayTriplesFull(bw))
+        .unionByName(ownedRelTriplesFull(br))
+        .select(col("subj_key"), col("s"), col("p"), col("o")),
+      Seq("subj_key"))
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
+    // node 1 moves (way 10 and relation 100 go stale), node 2 is
+    // deleted, way 20 and relation 200 are created
+    val winners = ChangePipeline.dedupLatest(Seq(
+      ChangeOp(1, "modify", "node", 1L, 2, ts, true, Some(10.5), Some(20.5), Nil, Nil, Map.empty),
+      ChangeOp(1, "delete", "node", 2L, 2, ts, false, None, None, Nil, Nil, Map.empty),
+      ChangeOp(1, "create", "way", 20L, 1, ts, true, None, None, Seq(1L, 3L), Nil, Map.empty),
+      ChangeOp(1, "create", "relation", 200L, 1, ts, true, None, None, Nil,
+        Seq(RelMember(20L, "way", "a")), Map.empty)).toDF())
+    val (applied, n) = org.apache.spark.JobCounter(spark.sparkContext)(
+      new Replicator(spark, root).applyOps(winners))
+    assert(applied === 6L) // 2 nodes + stale way 10 + way 20 + rels 100, 200
+    // the batch's ids are collected once (winners, J1, J3: 3 jobs) and
+    // every layer join against them is a scan predicate. The rest: a
+    // stats pass and a write per layer merge (6), the triple delta's
+    // write (1), and the five batch-sized broadcasts of the way and
+    // relation reconstructions (5).
+    info(s"applyOps launched $n")
+    assert(n.jobs <= 15, s"applyOps launched $n")
+  }
+
   test("J4 flag propagates staleness to parent relations in catchUp") {
     import spark.implicits._
     def run(flag: Boolean): (Long, Map[Long, String]) = {

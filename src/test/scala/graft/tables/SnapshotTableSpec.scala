@@ -77,6 +77,49 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(t.readAt(s1).count() === 64)
     assert(t.readAt(s1).as[(Long, String)].collect().toMap.apply(2L) === "v2")
   }
+  test("snapshot reads take the manifest schema: no Spark job, old manifests still read") {
+    import org.apache.spark.JobCounter
+    val root = freshRoot("schema-read")
+    val t = SnapshotTable.create(spark, root,
+      (0L until 32L).map(i => (i, s"v$i", i * 0.5)).toDF("id", "v", "x"), Seq("id"), numBuckets = 4)
+    t.mergeInto(Seq((1L, "ONE", 9.0, false)).toDF("id", "v", "x", "deleted"),
+      Seq("id"), Some("deleted"))
+    val (bucketed, n1) = JobCounter(spark.sparkContext)(t.read())
+    assert(n1.jobs === 0, s"bucketed read launched $n1")
+    val want = bucketed.as[(Long, String, Double)].collect().toSet
+    assert(want.size === 32 && want((1L, "ONE", 9.0)))
+    // a delta chain on top resolves lazily too
+    t.mergeIntoDelta(Seq((2L, "TWO", 8.0, false)).toDF("id", "v", "x", "deleted"),
+      Seq("id"), Some("deleted"))
+    val (chained, n2) = JobCounter(spark.sparkContext)(t.read())
+    assert(n2.jobs === 0, s"delta-chain read launched $n2")
+    assert(chained.as[(Long, String, Double)].collect().toSet ===
+      want - ((2L, "v2", 1.0)) + ((2L, "TWO", 8.0)))
+    // manifests written before the schema was recorded fall back to
+    // schema inference
+    val meta = Paths.get(root, "meta")
+    Files.list(meta).toArray.map(_.asInstanceOf[Path])
+      .filter(_.getFileName.toString.startsWith("snapshot-")).foreach { f =>
+        val txt = new String(Files.readAllBytes(f), "UTF-8")
+        Files.write(f, txt.replaceAll("\"schema\": \"[^\"]*\",", "").getBytes("UTF-8"))
+      }
+    assert(!t.snapshotInfo(t.currentSnapshot.get).contains("schema"))
+    assert(t.read().as[(Long, String, Double)].collect().toSet ===
+      want - ((2L, "v2", 1.0)) + ((2L, "TWO", 8.0)))
+  }
+
+  test("repeated merges keep one file per touched bucket") {
+    val root = freshRoot("files-per-bucket")
+    val t = SnapshotTable.create(spark, root,
+      (0L until 64L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"), numBuckets = 4)
+    for (round <- 1 to 5)
+      t.mergeInto((0L until 64L by 3).map(i => (i + round, s"r$round", false))
+        .toDF("id", "v", "deleted"), Seq("id"), Some("deleted"))
+    val files = t.filesMeta().select("bucket").as[Int].collect()
+    assert(files.sorted.toSeq === (0 until 4), s"files per bucket: ${files.sorted.toSeq}")
+    assert(t.read().count() === 69)
+  }
+
   test("merge-on-read delta commits: latest-wins resolution, tombstones, compaction") {
     val root = freshRoot("mor")
     // owner-keyed family table: multiple rows per key, a merge replaces
