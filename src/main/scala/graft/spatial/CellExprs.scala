@@ -31,8 +31,8 @@ case class CellAtExpr(left: Expression, right: Expression, res: Int)
 }
 
 /** Native polygon cover: `CoverCellsExpr(xs, ys, res)` →
-  * array<long> of covering cells (JTS-refined envelope scan, same as
-  * [[SpatialJoin.coverCellsUdf]]). CodegenFallback: runs once per
+  * array<long> of covering cells (JTS-refined envelope scan,
+  * [[CellIndex.coverGeometry]]). CodegenFallback: runs once per
   * POLYGON row (the small side), never in the per-candidate hot loop. */
 case class CoverCellsExpr(left: Expression, right: Expression, res: Int)
     extends BinaryExpression with CodegenFallback {

@@ -3,7 +3,7 @@ package graft.spatial
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
+import org.apache.spark.storage.StorageLevel
 import graft.geo.{CellIndex, GeoFunctions}
 
 /** Cell-prefiltered point-in-polygon join, kNN, and tile
@@ -35,24 +35,6 @@ object SpatialJoin {
         transform(col("ring"), r => r.getField("lon")).as("xs"),
         transform(col("ring"), r => r.getField("lat")).as("ys"))
 
-  private val gf = new GeometryFactory()
-
-  /** Ring → JTS geometry, degenerate-safe: <3 distinct vertices fall
-    * back to line/point (an invalid JTS polygon would throw). */
-  private def mkPolygon(xs: Seq[Double], ys: Seq[Double]): org.locationtech.jts.geom.Geometry = {
-    val coords = xs.zip(ys).map { case (x, y) => new Coordinate(x, y) }.toArray
-    if (coords.isEmpty) return gf.createPolygon()
-    val closed = if (coords.head == coords.last) coords else coords :+ coords.head
-    if (closed.length >= 4) gf.createPolygon(closed)
-    else if (coords.length >= 2) gf.createLineString(coords)
-    else gf.createPoint(coords(0))
-  }
-
-  /** Covering cells of a ring at `res` (JTS-refined envelope scan). */
-  val coverCellsUdf: Int => org.apache.spark.sql.expressions.UserDefinedFunction =
-    res => udf((xs: Seq[Double], ys: Seq[Double]) =>
-      if (xs.isEmpty) Seq.empty[Long] else CellIndex.coverGeometry(mkPolygon(xs, ys), res))
-
   /** Boundary-inclusive point-in-ring: crossing-number with an exact
     * on-segment pre-test (covers semantics — boundary counts, matching
     * the oracle's BETWEEN). Pure primitive arithmetic, ZERO allocation
@@ -82,38 +64,6 @@ object SpatialJoin {
     inside
   }
 
-  /** UDF face of [[pointInRing]]. */
-  val coversUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((xs: Seq[Double], ys: Seq[Double], px: Double, py: Double) =>
-      pointInRing(xs.toArray, ys.toArray, px, py))
-
-  /** Cell-prefiltered PIP join.
-    *
-    * @param points   (pointCols..., lon, lat)
-    * @param polys    (way_id, xs, ys) from [[polygons]]
-    * @param res      join resolution (cell edge must be >= max polygon
-    *                 edge for single-res cover to stay small)
-    * @param mode     "auto"      — no hints; Catalyst/AQE picks the
-    *                               build side from runtime stats (the
-    *                               default: the exploded cover carries
-    *                               ring arrays and is often BIGGER than
-    *                               the point batch — force-broadcasting
-    *                               it serializes the whole join behind
-    *                               a single-threaded broadcast build);
-    *                 "broadcast" — force-broadcast the cover (small
-    *                               polygon layers);
-    *                 "partitioned" — shuffle both sides on cell.
-    * @param salt     >1 enables salted skew-split on the partitioned
-    *                 path (the MAX per-cell salt factor)
-    * @param hotThreshold point rows per cell above which that cell is
-    *                 salted. Salting is HISTOGRAM-DRIVEN (SURVEY §4.3):
-    *                 a pre-pass counts points per cell and only hot
-    *                 cells replicate their polygon rows — blanket ×salt
-    *                 replication of the whole cover multiplies the
-    *                 shuffle by `salt` for data that was never skewed
-    *                 (measured: blanket ×8 made the join slower than
-    *                 unsalted at every parallelism level).
-    */
   /** Ring rows -> exploded cover with bbox scalars (shared candidate
     * generation of [[pipJoin]] and [[pipJoinMulti]]). */
   private def coverWithBbox(rings: DataFrame, res: Int): DataFrame = rings
@@ -136,10 +86,13 @@ object SpatialJoin {
     else if (mode == "auto") pts.join(cover, "cell")
     else if (salt <= 1) pts.join(cover.hint("shuffle_hash"), "cell")
     else {
+      // the histogram, its two broadcasts and the join's point side all
+      // read the points: materialize them once (see pipJoin's scaladoc)
+      val ptsOnce = pts.localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
       // per-cell histogram -> salt factor min(salt, ceil(cnt/threshold))
       // for hot cells only; join output stays exact (each point picks
       // ONE deterministic shard, each hot polygon row covers all).
-      val hist = pts.groupBy(col("cell")).agg(count(lit(1)).as("cnt"))
+      val hist = ptsOnce.groupBy(col("cell")).agg(count(lit(1)).as("cnt"))
         .filter(col("cnt") > hotThreshold)
         .select(col("cell"),
           least(lit(salt.toLong), ceil(col("cnt").cast("double") / hotThreshold).cast("long"))
@@ -147,7 +100,7 @@ object SpatialJoin {
       val saltedCover = cover.join(broadcast(hist), Seq("cell"), "left")
         .withColumn("s", explode(sequence(lit(0), coalesce(col("saltN"), lit(1)) - 1)))
         .drop("saltN")
-      val saltedPts = pts.join(broadcast(hist), Seq("cell"), "left")
+      val saltedPts = ptsOnce.join(broadcast(hist), Seq("cell"), "left")
         .withColumn("s",
           coalesce(pmod(hash(col("lon"), col("lat")), col("saltN")), lit(0)))
         .drop("saltN")
@@ -192,6 +145,44 @@ object SpatialJoin {
     */
   private val RingDictModes = Set("inline", "broadcast", "shuffle")
 
+  /** Cell-prefiltered PIP join.
+    *
+    * @param points   (pointCols..., lon, lat)
+    * @param polys    (way_id, xs, ys) from [[polygons]]
+    * @param res      join resolution (cell edge must be >= max polygon
+    *                 edge for single-res cover to stay small)
+    * @param mode     "auto"      — no hints; Catalyst/AQE picks the
+    *                               build side from runtime stats (the
+    *                               default: the exploded cover carries
+    *                               ring arrays and is often BIGGER than
+    *                               the point batch — force-broadcasting
+    *                               it serializes the whole join behind
+    *                               a single-threaded broadcast build);
+    *                 "broadcast" — force-broadcast the cover (small
+    *                               polygon layers);
+    *                 "partitioned" — shuffle both sides on cell.
+    * @param salt     >1 enables salted skew-split on the partitioned
+    *                 path (the MAX per-cell salt factor)
+    * @param hotThreshold point rows per cell above which that cell is
+    *                 salted. Salting is HISTOGRAM-DRIVEN (SURVEY §4.3):
+    *                 a pre-pass counts points per cell and only hot
+    *                 cells replicate their polygon rows — blanket ×salt
+    *                 replication of the whole cover multiplies the
+    *                 shuffle by `salt` for data that was never skewed
+    *                 (measured: blanket ×8 made the join slower than
+    *                 unsalted at every parallelism level). The salted
+    *                 path materializes its cell-tagged point side ONCE
+    *                 per call, on local disk: the histogram, both of its
+    *                 broadcasts and the join's point side all read those
+    *                 rows. Otherwise each re-runs the whole point
+    *                 derivation (page text → entities → cell in
+    *                 perfbench's `geojoin`). Disk-only keeps the rows
+    *                 off the heap; the first job that needs them fills
+    *                 them, and ContextCleaner frees them once the
+    *                 returned frame is dropped. Like any local
+    *                 checkpoint, they cannot be recomputed after the
+    *                 executor holding them is lost.
+    */
   def pipJoin(points: DataFrame, polys: DataFrame, res: Int,
       mode: String = "auto", salt: Int = 1,
       hotThreshold: Long = 2000000L, ringDict: String = "inline"): DataFrame = {

@@ -1,6 +1,9 @@
 package graft.tables
 
-import java.nio.file.{Files, Paths}
+import java.io.IOException
+import java.nio.file.{FileSystemLoopException, FileVisitOption, FileVisitResult, Files,
+  NoSuchFileException, Path, Paths, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Disk-backed stand-ins for the STORED tables the IVM query family
@@ -37,23 +40,31 @@ object StoredState {
     keyCache.computeIfAbsent(dir, computeInputKey)
 
   private[graft] def computeInputKey(dir: String): String = {
-    import scala.jdk.CollectionConverters._
     val base = Paths.get(dir)
-    val entries =
-      if (!Files.exists(base)) Seq.empty
-      else {
-        val walk = Files.walk(base)
-        try
-          walk.iterator().asScala
-            .filter(Files.isRegularFile(_))
-            .map { p =>
-              s"${base.relativize(p)}|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
-            }
-            .toSeq
-            .sorted
-        finally walk.close()
-      }
-    f"${scala.util.hashing.MurmurHash3.orderedHash(entries)}%08x"
+    val entries = scala.collection.mutable.ArrayBuffer[String]()
+    // symlinks key on their targets, as a reader of the fixture sees them
+    if (Files.exists(base)) Files.walkFileTree(base,
+      java.util.EnumSet.of(FileVisitOption.FOLLOW_LINKS), Int.MaxValue,
+      new SimpleFileVisitor[Path] {
+        override def visitFile(p: Path, a: BasicFileAttributes): FileVisitResult = {
+          if (a.isRegularFile)
+            entries += s"${base.relativize(p)}|${a.size}|${a.lastModifiedTime.toMillis}"
+          FileVisitResult.CONTINUE
+        }
+        // an entry that vanishes between listing and stat (a concurrent
+        // writer's temp file) is left out of the key instead of failing
+        // table(); a symlink loop is not descended twice
+        override def visitFileFailed(p: Path, e: IOException): FileVisitResult =
+          skipOrThrow(e)
+        override def postVisitDirectory(d: Path, e: IOException): FileVisitResult =
+          if (e == null) FileVisitResult.CONTINUE else skipOrThrow(e)
+      })
+    f"${scala.util.hashing.MurmurHash3.orderedHash(entries.sorted)}%08x"
+  }
+
+  private def skipOrThrow(e: IOException): FileVisitResult = e match {
+    case _: NoSuchFileException | _: FileSystemLoopException => FileVisitResult.CONTINUE
+    case _ => throw e
   }
 
   private def root(dir: String): String =

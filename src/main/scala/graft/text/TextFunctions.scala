@@ -32,10 +32,6 @@ object TextFunctions {
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Seeded variant for MinHash permutations: hash60(seed || ':' || x). */
-  def hash60Seeded(seed: Int, c: Column): Column =
-    hash60(concat(lit(s"$seed:"), c))
-
   /** Count-Min sketch cell coordinates of a term: array of d
     * (j, bkt = hash60("cms<j>:" || term) mod w) structs — the ONE
     * definition shared by batch q217, its DuckDB oracle recipe, and

@@ -43,6 +43,26 @@ class StoredStateSpec extends SparkTestBase {
       "added file must invalidate")
   }
 
+  test("input key skips files that vanish during the walk") {
+    // a writer deletes and recreates a batch of files while the key is
+    // computed over and over: some file is listed but gone by its stat
+    val d = mkFixture()
+    val k0 = StoredState.computeInputKey(d.toString)
+    val churn = (0 until 300).map(i => d.resolve(s"sub/tmp-$i"))
+    churn.foreach(Files.writeString(_, "x"))
+    @volatile var stop = false
+    val writer = new Thread(() =>
+      while (!stop) {
+        churn.foreach(Files.deleteIfExists(_))
+        churn.foreach(Files.writeString(_, "x"))
+      })
+    writer.start()
+    try (1 to 200).foreach(_ => StoredState.computeInputKey(d.toString))
+    finally { stop = true; writer.join() }
+    churn.foreach(Files.deleteIfExists(_))
+    assert(StoredState.computeInputKey(d.toString) === k0)
+  }
+
   test("table() builds once per key and serves parquet after") {
     val d = mkFixture()
     var builds = 0
