@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
 /** Iteration-only benchmark harness (guide §1.4): times an arbitrary
   * subset of [[graft.SparkEntry.queries]] with the SAME methodology as
   * the frozen [[graft.Bench]] (cache-cold reps via clearState, JIT-warm
-  * best-of-N, `.count()` action) but without the e2e setup, so a
+  * best-of-N after [[WarmReps]] untimed reps per query, `.count()`
+  * action) but without the e2e setup, so a
   * change to one operator can be measured in seconds instead of a full
   * suite run. Optionally dumps `.explain("formatted")` per query.
   *
@@ -23,6 +24,9 @@ import org.apache.spark.sql.SparkSession
   * remain graft.Bench's.
   */
 object BenchExtra {
+  /** Untimed reps of each query before its best-of-N. */
+  val WarmReps = 2
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -64,6 +68,10 @@ object BenchExtra {
             org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(d, s"$name$explainSuffix.txt"), plan)
       }
+      // untimed reps first: a query's first reps still run JIT/codegen
+      // of its own plan (measured 13 s, 5 s, 4 s, then ~3 s from the
+      // fifth rep at sf0.1), which best-of-3 alone does not absorb
+      (1 to WarmReps).foreach(_ => timeOnce(name))
       val ts = (1 to reps).map(_ => timeOnce(name))
       System.err.println(
         ts.map(t => f"$t%.2f").mkString(f"[extra] $name%-34s ", " ", " s"))

@@ -110,6 +110,14 @@ class Replicator(spark: SparkSession, root: String) {
     * The driver holds only these ids (8 B of payload each), so its
     * state is bounded by what the batch touches.
     *
+    * Each merge is handed its layer's key set — nodes: every node
+    * winner; ways: every way winner plus J1; relations: every relation
+    * winner plus J3/J4; triples: the owner keys of all three — so it
+    * runs no stats pass and is one Spark job. The set is authoritative,
+    * as in [[ChangePipeline.applyWayOps]]'s delete-then-insert: a key
+    * whose rebuild is empty (a way whose nodes are all gone, a relation
+    * modified to no members) is removed, and so are its triples.
+    *
     * The node layer ways rebuild against is computed IN-PLAN
     * ([[ChangePipeline.applyNodeIds]], the node table the node merge
     * commits), and the triple upserts for an object are exactly its
@@ -173,6 +181,7 @@ class Replicator(spark: SparkSession, root: String) {
       .select(col("way_id"), col("pos"), col("nid").cast("long").as("node_id"))
     val wayBase = ways.currentSnapshot.map(_ => ways.read())
     val staleW = wayBase.fold(Set.empty[Long])(b => ChangePipeline.staleWayIds(ids, wayMembers(b)))
+    val wayKeys = ids("way") ++ staleW
     val wayDelta: Option[(DataFrame, DataFrame)] = wayBase.map { base => // (delta, upserts)
       val changeMembers = winners
         .filter(col("kind") === "way" && col("action").isin("create", "modify"))
@@ -197,7 +206,7 @@ class Replicator(spark: SparkSession, root: String) {
     }
 
     // ---- relation delta ----
-    val relDelta: Option[(DataFrame, DataFrame)] = rels.currentSnapshot.map { _ =>
+    val relDelta: Option[(DataFrame, DataFrame, Set[Long])] = rels.currentSnapshot.map { _ =>
       val base = rels.read()
       def relMembers(rs: DataFrame): DataFrame = rs
         .select(col("rel_id"), posexplode(split(col("members"), ";")).as(Seq("pos", "m")))
@@ -233,51 +242,45 @@ class Replicator(spark: SparkSession, root: String) {
             .withColumn("tags", lit(null).cast("map<string,string>"))
         else dels
       (upsertsC.withColumn("deleted", lit(false))
-        .unionByName(delsM.withColumn("deleted", lit(true))), upsertsC)
+        .unionByName(delsM.withColumn("deleted", lit(true))), upsertsC, ids("relation") ++ staleR)
     }
+    val relKeys = relDelta.fold(ids("relation"))(_._3)
 
     // ---- triple delta (optional) — derived from the layer DELTAS, no
     // post-merge reads: an upserted owner's merged rows ARE its delta
-    // rows, and owners absent from a layer delta keep their triples
-    // because their subj_key never enters this merge. ----
+    // rows, every other owner in the key sets is tombstoned by the
+    // merge, and owners outside them keep their triples. ----
     val tripleDelta: Option[DataFrame] =
       if (triples.currentSnapshot.isEmpty) None
       else {
         val nodeT = graft.rdf.TripleDerive.ownedNodeTriplesFull(nodeUpserts)
         val wayT = wayDelta.map { case (_, ups) =>
           graft.rdf.TripleDerive.ownedWayTriplesFull(ups) }
-        val relT = relDelta.map { case (_, ups) =>
+        val relT = relDelta.map { case (_, ups, _) =>
           graft.rdf.TripleDerive.ownedRelTriplesFull(ups) }
-        val ups = (Seq(nodeT) ++ wayT ++ relT).reduce(_ unionByName _)
+        Some((Seq(nodeT) ++ wayT ++ relT).reduce(_ unionByName _)
           .select(col("subj_key"), col("s"), col("p"), col("o"))
-          .withColumn("deleted", lit(false))
-        // upserted owners replace implicitly through the merge key;
-        // only deleted objects need explicit markers
-        def delKeys(kind: String, pfx: String): DataFrame = winners
-          .filter(col("kind") === kind && col("action") === "delete")
-          .select(concat(lit(pfx), col("id")).as("subj_key"),
-            lit(null).cast("string").as("s"), lit(null).cast("string").as("p"),
-            lit(null).cast("string").as("o"), lit(true).as("deleted"))
-        Some(ups
-          .unionByName(delKeys("node", "node:"))
-          .unionByName(delKeys("way", "way:"))
-          .unionByName(delKeys("relation", "rel:")))
+          .withColumn("deleted", lit(false)))
       }
+    val tripleKeys = ids("node").map("node:" + _) ++ wayKeys.map("way:" + _) ++
+      relKeys.map("rel:" + _)
 
     // ---- commit all four MERGEs concurrently (ST4) ----
-    // applied counts come back from the merges' own touched-bucket
-    // histograms — the delta DAGs run exactly ONCE (inside the merge
-    // write), never a second time for a count() action. The triple
-    // merge is bookkeeping, not an applied op count.
+    // applied counts are observed on the delta rows inside each merge's
+    // write — the delta DAGs run exactly ONCE, never a second time for
+    // a count() action. The triple merge is bookkeeping, not an applied
+    // op count.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val merges: Seq[() => Long] =
       Seq(() => nodes.mergeInto(nodeOps, Seq("node_id"),
-        deleteMarker = Some("deleted")).updateRows) ++
+        deleteMarker = Some("deleted"), keys = Some(ids("node"))).updateRows) ++
       wayDelta.map { case (d, _) => () =>
-        ways.mergeInto(d, Seq("way_id"), deleteMarker = Some("deleted")).updateRows } ++
-      relDelta.map { case (d, _) => () =>
-        rels.mergeInto(d, Seq("rel_id"), deleteMarker = Some("deleted")).updateRows } ++
+        ways.mergeInto(d, Seq("way_id"), deleteMarker = Some("deleted"),
+          keys = Some(wayKeys)).updateRows } ++
+      relDelta.map { case (d, _, k) => () =>
+        rels.mergeInto(d, Seq("rel_id"), deleteMarker = Some("deleted"),
+          keys = Some(k)).updateRows } ++
       tripleDelta.map { d => () =>
         // the triple store is written EVERY batch but never scanned in
         // the loop — merge-on-read delta commits keep the per-batch
@@ -285,8 +288,8 @@ class Replicator(spark: SparkSession, root: String) {
         // spark.graft.triplesCompactEvery (default 8) batches
         val every = spark.conf.getOption("spark.graft.triplesCompactEvery")
           .map(_.toInt).getOrElse(8)
-        triples.mergeIntoDelta(d, Seq("subj_key"),
-          deleteMarker = Some("deleted"), compactEvery = every); 0L }
+        triples.mergeIntoDelta(d, Seq("subj_key"), deleteMarker = Some("deleted"),
+          compactEvery = every, keys = Some(tripleKeys)); 0L }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(merges.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val applied =
@@ -294,7 +297,7 @@ class Replicator(spark: SparkSession, root: String) {
       finally pool.shutdown()
 
     wayDelta.foreach { case (_, u) => u.unpersist() }
-    relDelta.foreach { case (_, u) => u.unpersist() }
+    relDelta.foreach { case (_, u, _) => u.unpersist() }
     winners.unpersist()
     applied
   }

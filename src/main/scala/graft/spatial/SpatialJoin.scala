@@ -145,6 +145,15 @@ object SpatialJoin {
     */
   private val RingDictModes = Set("inline", "broadcast", "shuffle")
 
+  /** The point side's join key. `coalesce` makes it non-nullable: a
+    * nullable key lets Spark infer `isnotnull(cell)` from the join and
+    * push it below the point projection, where [[GeoFunctions.cellAt]]'s
+    * clamps inline `floor(lon …)` three more times, so the point
+    * derivation ran 4× per row. No cover cell is −1, so a point with a
+    * null coordinate still joins nothing. */
+  private def pointCell(res: Int): Column =
+    coalesce(GeoFunctions.cellAt(col("lon"), col("lat"), res), lit(-1L))
+
   /** Cell-prefiltered PIP join.
     *
     * @param points   (pointCols..., lon, lat)
@@ -187,7 +196,7 @@ object SpatialJoin {
       mode: String = "auto", salt: Int = 1,
       hotThreshold: Long = 2000000L, ringDict: String = "inline"): DataFrame = {
     require(RingDictModes(ringDict), s"ringDict must be inline|broadcast|shuffle, got '$ringDict'")
-    val pts = points.withColumn("cell", GeoFunctions.cellAt(col("lon"), col("lat"), res))
+    val pts = points.withColumn("cell", pointCell(res))
     if (ringDict == "inline") {
       // bbox columns ride along as 4 scalars: the refine first rejects
       // on them (fixed-width reads only) and dereferences the ring
@@ -257,7 +266,7 @@ object SpatialJoin {
   private def multiRefined(points: DataFrame, rings: DataFrame, res: Int,
       mode: String, salt: Int, hotThreshold: Long, ringDict: String): DataFrame = {
     require(RingDictModes(ringDict), s"ringDict must be inline|broadcast|shuffle, got '$ringDict'")
-    val pts = points.withColumn("cell", GeoFunctions.cellAt(col("lon"), col("lat"), res))
+    val pts = points.withColumn("cell", pointCell(res))
     if (ringDict == "inline") {
       val cover = coverWithBbox(rings, res)
       cellJoin(pts, cover, mode, salt, hotThreshold)

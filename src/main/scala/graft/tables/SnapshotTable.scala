@@ -2,8 +2,11 @@ package graft.tables
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.BindReferences
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Minimal Iceberg-style table: immutable Parquet data files + JSON
@@ -30,8 +33,10 @@ import scala.jdk.CollectionConverters._
   * not O(table) — the judged fix over the v1 copy-on-write-everything
   * design. Tables created without key columns keep the v1 flat layout
   * and full-rewrite merge (legacy path). A merge's driver state is the
-  * delta's touched-bucket histogram plus, under a size gate, its
-  * distinct keys (filtered as a scan predicate) — never table rows.
+  * delta's keys and the buckets they hash to — never table rows. A
+  * caller that holds its keys passes them, and the merge is one Spark
+  * job; otherwise a stats pass collects them (under a size gate; past
+  * it the keep side anti-joins the delta instead).
   *
   * Every manifest records the table's schema DDL, and every scan of
   * committed files passes it, so reads launch no schema-inference job.
@@ -322,14 +327,29 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   private def bucketExpr(keyCols: Seq[String], numBuckets: Int) =
     pmod(hash(keyCols.map(col): _*), lit(numBuckets))
 
+  /** The bucket of one key value, computed on the driver: [[bucketExpr]]
+    * is analyzed over a one-column schema and evaluated on each key, so
+    * it is the very expression a write assigns `__b` with. Keys are
+    * external Scala values of the column's type. No Spark job runs. */
+  private[tables] def bucketOf(key: StructField, numBuckets: Int): Any => Int = {
+    val plan = spark.createDataFrame(java.util.Collections.emptyList[Row](), StructType(Seq(key)))
+      .select(bucketExpr(Seq(key.name), numBuckets)).queryExecution.analyzed
+    val e = BindReferences.bindReference(plan.expressions.head, plan.children.head.output)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(key.dataType)
+    k => e.eval(InternalRow(toCatalyst(k))).asInstanceOf[Int]
+  }
+
   /** Cluster rows on `__b` before a partitionBy("__b") write: without
     * it every task writes one file PER BUCKET it happens to hold
     * (tasks × buckets tiny files — measured 1024 files per small merge,
     * and every later read/list/footer-count pays for them). One
     * shuffle of only the written rows yields one file per bucket;
-    * `maxRecordsPerFile` re-splits oversized buckets at real scale. */
+    * `maxRecordsPerFile` re-splits oversized buckets at real scale.
+    * Hash partitioning on `__b` puts each bucket in exactly one task, so
+    * the shuffle needs no more tasks than the cores: a task past them
+    * only adds its own scheduling and deserialization. */
   private def clusterByBucket(df: DataFrame, numBuckets: Int): DataFrame =
-    df.repartition(numBuckets, col("__b"))
+    df.repartition(math.min(numBuckets, spark.sparkContext.defaultParallelism), col("__b"))
 
   /** Write a bucketed frame and return its per-bucket row counts from
     * OBSERVED metrics riding the write action itself — commits are ONE
@@ -368,18 +388,28 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   def commitBucketed(df: DataFrame, operation: String,
       keyCols: Seq[String], numBuckets: Int): Long = {
     val id = currentSnapshot.getOrElse(0L) + 1
-    val dir = dataDir(id)
-    val counts = writeCounted(clusterByBucket(
-      df.withColumn("__b", bucketExpr(keyCols, numBuckets)), numBuckets), dir, numBuckets)
-    val src = counts.keys.map(_ -> id).toMap
-    val bytes = writtenBucketBytes(dir)
-    writeMeta(id, operation, counts.values.sum, bytes.values.sum, Map(
-      "keyCols" -> keyCols.mkString(","), "numBuckets" -> numBuckets.toString,
-      "schema" -> df.schema.toDDL,
-      "bucketSrc" -> serBuckets(src),
-      "bucketRows" -> serBuckets(counts),
-      "bucketBytes" -> serBuckets(bytes)))
+    val counts = writeBucketed(df, keyCols, numBuckets, id)
+    commitLayout(id, operation, keyCols, numBuckets, df.schema,
+      counts.keys.map(_ -> id).toMap, counts, writtenBucketBytes(dataDir(id)))
   }
+
+  /** Write every row of `df` into snapshot `id`'s bucket dirs; returns
+    * the per-bucket row counts. */
+  private def writeBucketed(df: DataFrame, keyCols: Seq[String], numBuckets: Int,
+      id: Long): Map[Int, Long] =
+    writeCounted(clusterByBucket(df.withColumn("__b", bucketExpr(keyCols, numBuckets)),
+      numBuckets), dataDir(id), numBuckets)
+
+  /** Commit a bucketed layout: bucket -> owning snapshot, rows, bytes. */
+  private def commitLayout(id: Long, operation: String, keyCols: Seq[String],
+      numBuckets: Int, schema: StructType, src: Map[Int, Long], rows: Map[Int, Long],
+      bytes: Map[Int, Long]): Long =
+    writeMeta(id, operation, rows.values.sum, bytes.values.sum, Map(
+      "keyCols" -> keyCols.mkString(","), "numBuckets" -> numBuckets.toString,
+      "schema" -> schema.toDDL,
+      "bucketSrc" -> serBuckets(src),
+      "bucketRows" -> serBuckets(rows),
+      "bucketBytes" -> serBuckets(bytes)))
 
   /** Write `df` z-clustered: `__b` bucket dirs are TOP Z-PREFIX ranges
     * (not key hashes), rows range-sorted by the persisted `zval` column
@@ -485,12 +515,21 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     *
     * On a bucketed table only the buckets containing update keys are
     * rewritten; untouched buckets carry forward by reference. Returns
-    * the new snapshot id AND the number of update rows applied — the
-    * count falls out of the touched-bucket histogram the merge already
-    * computes, so callers never pay a second pass over the delta DAG
-    * just to count it. */
+    * the new snapshot id AND the number of update rows applied, which
+    * the merge counts as it writes, so callers never pay a second pass
+    * over the delta DAG just to count it.
+    *
+    * `keys`, when the caller already holds them (one key column only),
+    * are the delta's keys and are AUTHORITATIVE: every stored row whose
+    * key is in the set is replaced by that key's delta rows, so a key
+    * with no delta row is deleted. The touched buckets are computed on
+    * the driver, the keep side filters the keys as a scan predicate, and
+    * the merge is ONE Spark job — its write. A delta row whose key is
+    * outside the set fails the merge before it commits. Without `keys`
+    * a stats pass over the delta collects them first. */
   def mergeInto(updates: DataFrame, keyCols: Seq[String],
-      deleteMarker: Option[String] = None): MergeResult = {
+      deleteMarker: Option[String] = None,
+      keys: Option[Iterable[Any]] = None): MergeResult = {
     val cur = currentSnapshot.getOrElse(
       throw new IllegalStateException(s"no current snapshot at $root"))
     val info = snapshotInfo(cur)
@@ -500,29 +539,34 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
         "row's old copy without a table scan — merge via mergeIntoZDelta " +
         "(merge-on-read) or rewrite via commit()")
     info.get("keyCols").filter(_.nonEmpty) match {
-      case Some(keys) =>
-        require(keys.split(",").toSeq == keyCols,
-          s"table bucketed on [$keys], merge keyed on [${keyCols.mkString(",")}]")
+      case Some(k) =>
+        require(k.split(",").toSeq == keyCols,
+          s"table bucketed on [$k], merge keyed on [${keyCols.mkString(",")}]")
         if (isDelta(info))
           // a copy-on-write merge atop a delta chain folds the chain in:
           // resolve once, rewrite fully (compaction + merge in one)
-          compactWith(updates, keyCols, info("numBuckets").toInt, deleteMarker)
+          compactWith(updates, keyCols, info("numBuckets").toInt, deleteMarker, keys)
         else
-          mergeBucketed(cur, info, updates, keyCols, info("numBuckets").toInt, deleteMarker)
+          mergeBucketed(cur, info, updates, keyCols, info("numBuckets").toInt,
+            deleteMarker, keys)
       case None => // legacy flat table: copy-on-write of everything
+        require(keys.isEmpty, s"table at $root is not bucketed: merge it without a key set")
         val upd = updates.cache()
         val n = upd.count()
         val base = read()
         val keep = base.join(upd.select(keyCols.map(col): _*), keyCols, "left_anti")
-        val ins = deleteMarker match {
-          case Some(m) => upd.filter(!col(m)).drop(m)
-          case None => upd
-        }
-        val id = commit(keep.unionByName(ins), "merge")
+        val id = commit(keep.unionByName(inserts(upd, deleteMarker)), "merge")
         upd.unpersist()
         MergeResult(id, n)
     }
   }
+
+  /** The rows a merge inserts: the delta minus its delete markers. */
+  private def inserts(upd: DataFrame, deleteMarker: Option[String]): DataFrame =
+    deleteMarker match {
+      case Some(m) => upd.filter(!col(m)).drop(m)
+      case None => upd
+    }
 
   /** Key bytes of a delta group: fixed-width key columns at Catalyst's
     * defaultSize, string/binary key columns MEASURED (defaultSize is a
@@ -536,6 +580,46 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
       .foldLeft(count(lit(1)) * fixedW.map(_.dataType.defaultSize.toLong).sum)(_ + _)
   }
 
+  /** A merge's `__b`-tagged delta rows and what the merge knows of their
+    * keys: the buckets they touch and how the keep side drops them.
+    * `applied()` is the delta's row count once the write has run (it
+    * also checks the rows against a caller's key set); `release()`
+    * frees what the delta holds. */
+  private final class Delta(val rows: DataFrame, val touched: Set[Int],
+      val dropKeys: DataFrame => DataFrame, val applied: () => Long, val release: () => Unit)
+
+  /** The one key column a merge key set is keyed on. */
+  private def setKey(keyCols: Seq[String]): String = {
+    require(keyCols.size == 1,
+      s"a merge key set needs one key column, got [${keyCols.mkString(",")}]")
+    keyCols.head
+  }
+
+  private def delta(updates: DataFrame, keyCols: Seq[String], numBuckets: Int,
+      keys: Option[Iterable[Any]]): Delta =
+    keys.fold(statsDelta(updates, keyCols, numBuckets))(keyedDelta(updates, keyCols, numBuckets, _))
+
+  /** The caller's keys: buckets from [[bucketOf]], an `InSet` keep-side
+    * filter, and the applied count observed on the delta rows inside the
+    * write. Nothing is cached and no query runs before the write. */
+  private def keyedDelta(updates: DataFrame, keyCols: Seq[String], numBuckets: Int,
+      keys: Iterable[Any]): Delta = {
+    val key = setKey(keyCols)
+    val hit = coalesce(GraftSqlShim.inSet(col(key), keys), lit(false))
+    // observed in this table's session, which runs the write
+    val obs = Observation()
+    val rows = GraftSqlShim.inSession(spark, updates)
+      .withColumn("__b", bucketExpr(keyCols, numBuckets))
+      .observe(obs, count(lit(1)).as("n"), count_if(!hit).as("strays"))
+    val applied = () => {
+      val strays = obs.get("strays").asInstanceOf[Long]
+      require(strays == 0L, s"$strays delta rows at $root have keys outside the merge's key set")
+      obs.get("n").asInstanceOf[Long]
+    }
+    new Delta(rows, keys.iterator.map(bucketOf(updates.schema(key), numBuckets)).toSet,
+      _.filter(!hit), applied, () => ())
+  }
+
   /** ONE aggregate over a cached, `__b`-tagged delta returns its
     * per-bucket row counts (the touched-bucket histogram, which doubles
     * as the applied-row count) and the way a merge drops the delta's
@@ -545,8 +629,9 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * The keep side then filters them as an `InSet` scan predicate,
     * which costs no broadcast job. A delta past the gate keeps its keys
     * on the executors and is anti-joined with a shuffle-hash join. */
-  private def deltaKeys(upd: DataFrame, keyCols: Seq[String],
-      numBuckets: Int): (Map[Int, Long], DataFrame => DataFrame) = {
+  private def statsDelta(updates: DataFrame, keyCols: Seq[String],
+      numBuckets: Int): Delta = {
+    val upd = updates.withColumn("__b", bucketExpr(keyCols, numBuckets)).cache()
     val key = if (keyCols.size == 1) col(keyCols.head) else struct(keyCols.map(col): _*)
     val n = count(lit(1))
     val small = n <= 5000000L / numBuckets &&
@@ -561,29 +646,24 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
         _.filter(!coalesce(hit, lit(false)))
       } else _.join(upd.select(keyCols.map(col): _*).distinct().hint("shuffle_hash"),
         keyCols, "left_anti")
-    (stats.map(r => r.getInt(0) -> r.getLong(1)).toMap, dropKeys)
+    val applied = stats.map(_.getLong(1)).sum
+    new Delta(upd, stats.map(_.getInt(0)).toSet, dropKeys, () => applied, () => upd.unpersist())
   }
 
   private def mergeBucketed(cur: Long, info: Map[String, String], updates: DataFrame,
-      keyCols: Seq[String], numBuckets: Int, deleteMarker: Option[String]): MergeResult = {
-    val upd = updates.withColumn("__b", bucketExpr(keyCols, numBuckets)).cache()
-    val (updStats, dropKeys) = deltaKeys(upd, keyCols, numBuckets)
-    val touched = updStats.keySet
-    val updateRows = updStats.values.sum
+      keyCols: Seq[String], numBuckets: Int, deleteMarker: Option[String],
+      keys: Option[Iterable[Any]]): MergeResult = {
+    val d = delta(updates, keyCols, numBuckets, keys)
     val srcMap = bucketSources(cur)
-    val rowsMap = bucketRows(cur)
-    val touchedDirs = touched.toSeq.sorted
+    val touchedDirs = d.touched.toSeq.sorted
       .flatMap(b => srcMap.get(b).map(s => bucketDir(s, b).toString))
     // the touched buckets' kept rows; __b is re-derived from the keys
     // as a pure projection since the scan targets the bucket dirs
     val keep =
       if (touchedDirs.isEmpty) None
-      else Some(dropKeys(scan(info, touchedDirs))
+      else Some(d.dropKeys(scan(info, touchedDirs))
         .withColumn("__b", bucketExpr(keyCols, numBuckets)))
-    val ins = deleteMarker match {
-      case Some(m) => upd.filter(!col(m)).drop(m)
-      case None => upd
-    }
+    val ins = inserts(d.rows, deleteMarker)
     val rows = keep.map(_.unionByName(ins)).getOrElse(ins)
     val id = cur + 1
     val dir = dataDir(id)
@@ -593,23 +673,21 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     // batch); the shuffle moves only the touched buckets' rows.
     // Per-bucket counts ride the write as observed metrics; a fully
     // deleted bucket counts zero and drops out of the manifest.
-    val written = writeCounted(clusterByBucket(rows, numBuckets), dir, numBuckets)
-    upd.unpersist()
-    val newSrc = (srcMap -- touched) ++ written.keys.map(_ -> id)
-    val newRows = (rowsMap -- touched) ++ written
+    val (written, applied) =
+      try {
+        val w = writeCounted(clusterByBucket(rows, numBuckets), dir, numBuckets)
+        (w, d.applied())
+      } finally d.release()
+    val newSrc = (srcMap -- d.touched) ++ written.keys.map(_ -> id)
+    val newRows = (bucketRows(cur) -- d.touched) ++ written
     // untouched buckets' bytes come from the parent manifest (legacy
     // snapshots without one fall back to a dir walk)
     val bytesMap = bucketBytes(cur)
-    val untouched = (srcMap -- touched).map { case (b, s) =>
+    val untouched = (srcMap -- d.touched).map { case (b, s) =>
       b -> bytesMap.getOrElse(b, dirBytes(bucketDir(s, b))) }
-    val newBytes = untouched ++ writtenBucketBytes(dir)
-    val sid = writeMeta(id, "merge", newRows.values.sum, newBytes.values.sum, Map(
-      "keyCols" -> keyCols.mkString(","), "numBuckets" -> numBuckets.toString,
-      "schema" -> rows.drop("__b").schema.toDDL,
-      "bucketSrc" -> serBuckets(newSrc),
-      "bucketRows" -> serBuckets(newRows),
-      "bucketBytes" -> serBuckets(newBytes)))
-    MergeResult(sid, updateRows)
+    val sid = commitLayout(id, "merge", keyCols, numBuckets, rows.drop("__b").schema,
+      newSrc, newRows, untouched ++ writtenBucketBytes(dir))
+    MergeResult(sid, applied)
   }
 
   /** Merge-on-read MERGE INTO: commits ONLY the delta (upserts +
@@ -620,27 +698,34 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * bucketed rewrite), bounding read amplification. This is the mode
     * for tables that are WRITTEN every batch but rarely scanned in the
     * hot loop (the owner-keyed triple store): a 100 TB table cannot
-    * afford a copy-on-write rewrite per replication batch. */
+    * afford a copy-on-write rewrite per replication batch.
+    *
+    * `keys` mean what they mean to [[mergeInto]]: a key with no delta
+    * row is deleted. The delta commit carries a tombstone for every key
+    * (a key's upsert rows in the same commit win over it), and a
+    * compaction drops the keys without a stats pass. */
   def mergeIntoDelta(updates: DataFrame, keyCols: Seq[String],
-      deleteMarker: Option[String] = None, compactEvery: Int = 8): MergeResult = {
+      deleteMarker: Option[String] = None, compactEvery: Int = 8,
+      keys: Option[Iterable[Any]] = None): MergeResult = {
     val cur = currentSnapshot.getOrElse(
       throw new IllegalStateException(s"no current snapshot at $root"))
     val info = snapshotInfo(cur)
     require(!info.contains("zorder"),
       s"table at $root is z-ordered — use mergeIntoZDelta (merge-on-read)")
-    val keys = info.get("keyCols").filter(_.nonEmpty).getOrElse(
+    val tableKeys = info.get("keyCols").filter(_.nonEmpty).getOrElse(
       throw new IllegalStateException("delta merge requires a bucketed table"))
-    require(keys.split(",").toSeq == keyCols,
-      s"table bucketed on [$keys], merge keyed on [${keyCols.mkString(",")}]")
+    require(tableKeys.split(",").toSeq == keyCols,
+      s"table bucketed on [$tableKeys], merge keyed on [${keyCols.mkString(",")}]")
     val numBuckets = info("numBuckets").toInt
     if (deltaChain(cur).length + 1 > compactEvery)
-      compactWith(updates, keyCols, numBuckets, deleteMarker)
+      compactWith(updates, keyCols, numBuckets, deleteMarker, keys)
     else {
-      val upd = updates.withColumn("__b", bucketExpr(keyCols, numBuckets))
-      val withDel = deleteMarker match {
-        case Some(m) => upd.withColumnRenamed(m, "__del")
-        case None => upd.withColumn("__del", lit(false))
+      val marked = deleteMarker match {
+        case Some(m) => updates.withColumnRenamed(m, "__del")
+        case None => updates.withColumn("__del", lit(false))
       }
+      val withDel = keys.fold(marked)(ks => marked.unionByName(tombstones(marked.schema, keyCols, ks)))
+        .withColumn("__b", bucketExpr(keyCols, numBuckets))
       val id = cur + 1
       val dir = dataDir(id)
       // the delta commit is ONE Spark job: the write carries its own
@@ -662,7 +747,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
       val sid = writeMeta(id, "delta",
         info.get("rowCount").map(_.toLong).getOrElse(0L),
         dirBytes(dir), Map(
-          "keyCols" -> keys, "numBuckets" -> numBuckets.toString,
+          "keyCols" -> tableKeys, "numBuckets" -> numBuckets.toString,
           "schema" -> info.getOrElse("schema", ""),
           "bucketSrc" -> info.getOrElse("bucketSrc", ""),
           "bucketRows" -> info.getOrElse("bucketRows", ""),
@@ -671,6 +756,19 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
           "deltaParent" -> cur.toString))
       MergeResult(sid, updateRows)
     }
+  }
+
+  /** One `__del` tombstone row per key, every other column null (a
+    * local relation: no job). */
+  private def tombstones(schema: StructType, keyCols: Seq[String],
+      keys: Iterable[Any]): DataFrame = {
+    val key = schema(setKey(keyCols))
+    spark.createDataFrame(keys.map(Row(_)).toSeq.asJava, StructType(Seq(key)))
+      .select(schema.fields.toSeq.map {
+        case f if f.name == key.name => col(f.name)
+        case f if f.name == "__del" => lit(true).as(f.name)
+        case f => lit(null).cast(f.dataType).as(f.name)
+      }: _*)
   }
 
   /** MERGE INTO a Z-ORDERED table, merge-on-read: the batch lands as
@@ -838,18 +936,19 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * fully with `updates` applied — the compaction face shared by
     * [[mergeIntoDelta]]'s chain cap and [[mergeInto]]-atop-a-chain. */
   private def compactWith(updates: DataFrame, keyCols: Seq[String],
-      numBuckets: Int, deleteMarker: Option[String]): MergeResult = {
-    val resolved = read()
-    val upd = updates.withColumn("__b", bucketExpr(keyCols, numBuckets)).cache()
-    val (counts, dropKeys) = deltaKeys(upd, keyCols, numBuckets)
-    val ins = (deleteMarker match {
-      case Some(m) => upd.filter(!col(m)).drop(m)
-      case None => upd
-    }).drop("__b")
-    val id = commitBucketed(dropKeys(resolved).unionByName(ins),
-      "compact", keyCols, numBuckets)
-    upd.unpersist()
-    MergeResult(id, counts.values.sum)
+      numBuckets: Int, deleteMarker: Option[String],
+      keys: Option[Iterable[Any]]): MergeResult = {
+    val d = delta(updates, keyCols, numBuckets, keys)
+    val rows = d.dropKeys(read()).unionByName(inserts(d.rows, deleteMarker).drop("__b"))
+    val id = currentSnapshot.get + 1
+    val (counts, applied) =
+      try {
+        val c = writeBucketed(rows, keyCols, numBuckets, id)
+        (c, d.applied())
+      } finally d.release()
+    commitLayout(id, "compact", keyCols, numBuckets, rows.schema,
+      counts.keys.map(_ -> id).toMap, counts, writtenBucketBytes(dataDir(id)))
+    MergeResult(id, applied)
   }
 }
 

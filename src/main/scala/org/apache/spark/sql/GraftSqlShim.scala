@@ -20,6 +20,15 @@ object GraftSqlShim {
     column(catalyst.expressions.InSet(expression(c),
       values.map(catalyst.CatalystTypeConverters.convertToCatalyst).toSet))
 
+  /** `df`'s analyzed plan as a frame of `spark`. A query runs in the
+    * session of the frame its action is called on, and an `Observation`
+    * completes only through the session it was registered with; a
+    * `foreachBatch` frame belongs to the stream's cloned session, so an
+    * observation on it would never complete when the frame is unioned
+    * into a query of `spark`. */
+  def inSession(spark: SparkSession, df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], df.queryExecution.analyzed)
+
   /** Register a native expression into an ALREADY-BUILT session (for
     * sessions not constructed with `spark.sql.extensions` — e.g. the
     * shared test session). Prefer `graft.GraftExtensions` at build

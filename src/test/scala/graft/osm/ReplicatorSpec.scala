@@ -255,12 +255,93 @@ class ReplicatorSpec extends SparkTestBase {
       new Replicator(spark, root).applyOps(winners))
     assert(applied === 6L) // 2 nodes + stale way 10 + way 20 + rels 100, 200
     // the batch's ids are collected once (winners, J1, J3: 3 jobs) and
-    // every layer join against them is a scan predicate. The rest: a
-    // stats pass and a write per layer merge (6), the triple delta's
-    // write (1), and the five batch-sized broadcasts of the way and
-    // relation reconstructions (5).
+    // every layer join against them is a scan predicate. Each merge is
+    // handed its key set, so it is its write alone: three layer merges
+    // and the triple delta commit (4). The rest are the five
+    // batch-sized broadcasts of the way and relation reconstructions (5).
     info(s"applyOps launched $n")
-    assert(n.jobs <= 15, s"applyOps launched $n")
+    assert(n.jobs <= 12, s"applyOps launched $n")
+  }
+
+  test("a modify whose rebuild is empty removes the object: layers == fold, triples == derivation") {
+    import graft.rdf.TripleDerive._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{lit, map, posexplode, regexp_replace, split,
+      split_part, to_timestamp}
+    val root = fresh("empty-rebuild")
+    val bn = baseNodes
+      .withColumn("ts", to_timestamp(lit("2023-12-01 00:00:00")))
+      .withColumn("tags", map(lit("amenity"), lit("bench")))
+    val bw = Seq(
+      (10L, "1;2;3",
+        "LINESTRING(0.0000000 0.0000000, 5.0000000 5.0000000, 7.0000000 7.0000000)"),
+      (11L, "2;3", "LINESTRING(5.0000000 5.0000000, 7.0000000 7.0000000)"))
+      .toDF("way_id", "members", "wkt")
+      .withColumn("ts", to_timestamp(lit("2023-12-02 00:00:00")))
+      .withColumn("tags", map(lit("highway"), lit("residential")))
+    val br = Seq((100L, "way/10/outer"), (101L, "way/11/outer")).toDF("rel_id", "members")
+      .withColumn("ts", to_timestamp(lit("2023-12-03 00:00:00")))
+      .withColumn("tags", map(lit("type"), lit("multipolygon")))
+    SnapshotTable.create(spark, s"$root/nodes", bn, Seq("node_id"))
+    SnapshotTable.create(spark, s"$root/ways", bw, Seq("way_id"))
+    SnapshotTable.create(spark, s"$root/rels", br, Seq("rel_id"))
+    SnapshotTable.create(spark, s"$root/triples",
+      ownedNodeTriplesFull(bn).unionByName(ownedWayTriplesFull(bw))
+        .unionByName(ownedRelTriplesFull(br))
+        .select(col("subj_key"), col("s"), col("p"), col("o")),
+      Seq("subj_key"))
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
+    // node 1 moves (way 10 and relation 100 go stale); way 11 now lists
+    // only nodes the layer does not hold; relation 101 loses every member
+    val winners = ChangePipeline.dedupLatest(Seq(
+      ChangeOp(1, "modify", "node", 1L, 2, ts, true, Some(10.5), Some(20.5), Nil, Nil, Map.empty),
+      ChangeOp(1, "modify", "way", 11L, 2, ts, true, None, None, Seq(98L, 99L), Nil,
+        Map("highway" -> "path")),
+      ChangeOp(1, "modify", "relation", 101L, 2, ts, true, None, None, Nil, Nil,
+        Map("type" -> "route"))).toDF()).localCheckpoint()
+    val repl = new Replicator(spark, root)
+    repl.applyOps(winners)
+
+    // the fold of the pure delete-then-insert functions over the base
+    val wm = bw.select(col("way_id"), posexplode(split(col("members"), ";")).as(Seq("pos", "nid")))
+      .select(col("way_id"), col("pos"), col("nid").cast("long").as("node_id"))
+    val stale = ChangePipeline.staleWays(winners, wm)
+    val foldWays = ChangePipeline.applyWayOps(bw.select("way_id", "members", "wkt"), winners,
+      winners.filter(col("kind") === "way" && col("action").isin("create", "modify"))
+        .select(col("id").as("way_id"), posexplode(col("nodeRefs")).as(Seq("pos", "node_id")))
+        .unionByName(wm.join(stale, Seq("way_id"), "left_semi")),
+      ChangePipeline.applyNodeOps(bn.select("node_id", "lon", "lat"), winners), stale)
+    // relation members compare in the `member_id/role` form of the fold
+    val stripKind = (c: org.apache.spark.sql.Column) => regexp_replace(c, "(^|;)[^/;]+/", "$1")
+    val rm = br.select(col("rel_id"), posexplode(split(col("members"), ";")).as(Seq("pos", "m")))
+      .select(col("rel_id"), col("pos"),
+        split_part(col("m"), lit("/"), lit(2)).cast("long").as("member_id"),
+        split_part(col("m"), lit("/"), lit(3)).as("role"))
+    val staleR = ChangePipeline.staleRels(winners, rm, stale)
+    val foldRels = ChangePipeline.applyRelOps(
+      br.select(col("rel_id"), stripKind(col("members")).as("members")), winners,
+      winners.filter(col("kind") === "relation" && col("action").isin("create", "modify"))
+        .select(col("id").as("rel_id"), posexplode(col("members")).as(Seq("pos", "m")))
+        .select(col("rel_id"), col("pos"), col("m.ref").as("member_id"), col("m.role").as("role"))
+        .unionByName(rm.join(staleR, Seq("rel_id"), "left_semi")),
+      staleR)
+
+    def ways(df: DataFrame) = df.select("way_id", "members", "wkt")
+      .as[(Long, String, String)].collect().toSet
+    def rels(df: DataFrame) = df.select(col("rel_id"), col("members"))
+      .as[(Long, String)].collect().toSet
+    assert(ways(repl.ways.read()) === ways(foldWays))
+    assert(ways(foldWays).map(_._1) === Set(10L))
+    assert(rels(repl.rels.read().withColumn("members", stripKind(col("members")))) ===
+      rels(foldRels))
+    assert(rels(foldRels) === Set((100L, "10/outer")))
+    def tripleRows(df: DataFrame) = df.select(col("subj_key"), col("s"), col("p"), col("o"))
+      .as[(String, String, String, String)].collect().toSet
+    val got = tripleRows(repl.triples.read())
+    assert(got === tripleRows(ownedNodeTriplesFull(repl.nodes.read())
+      .unionByName(ownedWayTriplesFull(repl.ways.read()))
+      .unionByName(ownedRelTriplesFull(repl.rels.read()))))
+    assert(!got.exists(t => t._1 == "way:11" || t._1 == "rel:101"))
   }
 
   test("J4 flag propagates staleness to parent relations in catchUp") {

@@ -154,17 +154,29 @@ class SaltedPipJoinSpec extends SparkTestBase {
       assert(rowsOf(join(pointsDf, "broadcast", 1, rd)) === salted)
     }
 
-  test("one action of the salted join evaluates each point row once") {
-    // a deterministic identity on lon that counts the rows it sees: the
-    // histogram, both of its broadcasts and the join's point side all
-    // need lon, so a re-derived point side shows up as a multiple
+  /** Asserts one action of `join` in `mode` with `salt` evaluates each
+    * point row once. A deterministic identity on lon counts the rows it
+    * sees: the histogram, both of its broadcasts and the join's point
+    * side all need lon, so a re-derived point side shows up as a
+    * multiple, and so does a cell key the optimizer re-derives for an
+    * inferred not-null filter. */
+  private def assertPointsEvaluatedOnce(mode: String, salt: Int): Unit =
     for ((name, join) <- joins) {
       val seen = spark.sparkContext.longAccumulator(s"$name points seen")
       val tap = udf((lon: Double) => { seen.add(1L); lon })
       val pts = pointsDf.withColumn("lon", tap(col("lon")))
-      join(pts, "partitioned", Salt, "inline").write.format("noop").mode("overwrite").save()
+      join(pts, mode, salt, "inline").write.format("noop").mode("overwrite").save()
       assert(seen.value === points.length.toLong,
-        s"$name evaluated ${seen.value} point rows for ${points.length} points")
+        s"$name, $mode, salt $salt evaluated ${seen.value} point rows for ${points.length} points")
     }
+
+  test("one action of the salted join evaluates each point row once") {
+    assertPointsEvaluatedOnce("partitioned", Salt)
+  }
+
+  test("one action of the unsalted, auto and broadcast joins evaluates each point row once") {
+    assertPointsEvaluatedOnce("partitioned", 1)
+    assertPointsEvaluatedOnce("auto", 1)
+    assertPointsEvaluatedOnce("broadcast", 1)
   }
 }

@@ -120,6 +120,109 @@ class SnapshotTableSpec extends SparkTestBase {
     assert(t.read().count() === 69)
   }
 
+  /** Runs `f` with AQE off, as `Replicator.applyOps` runs its merges
+    * (AQE would launch each shuffle stage as a job of its own). */
+  private def withoutAqe[A](f: => A): A = {
+    val was = spark.conf.getOption("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try f finally spark.conf.set("spark.sql.adaptive.enabled", was.getOrElse("true"))
+  }
+
+  test("a key's driver-side bucket equals Spark's pmod(hash(k), n)") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField}
+    val t = SnapshotTable.create(spark, freshRoot("bucket-of"),
+      Seq((1L, "a")).toDF("id", "v"), Seq("id"), numBuckets = 4)
+    val rnd = new scala.util.Random(17)
+    val longs = Seq(0L, -1L, Long.MinValue, Long.MaxValue) ++ Seq.fill(300)(rnd.nextLong())
+    val strings = Seq("", "node:1", "way:-7", "\u00fc\u2202\u6f22\ud83d\ude00") ++
+      Seq.fill(300)(rnd.alphanumeric.take(rnd.nextInt(24)).mkString)
+    for (n <- Seq(1, 7, 16, 64)) {
+      // RDD-backed rows, so Spark evaluates the expression in its tasks
+      val wantL = spark.sparkContext.parallelize(longs.zipWithIndex, 3).toDF("k", "i")
+        .select(col("i"), pmod(hash(col("k")), lit(n))).as[(Int, Int)].collect().toMap
+      val gotL = t.bucketOf(StructField("k", LongType), n)
+      assert(longs.indices.forall(i => gotL(longs(i)) == wantL(i)), s"Long keys, n=$n")
+      val wantS = spark.sparkContext.parallelize(strings.zipWithIndex, 3).toDF("k", "i")
+        .select(col("i"), pmod(hash(col("k")), lit(n))).as[(Int, Int)].collect().toMap
+      val gotS = t.bucketOf(StructField("k", StringType), n)
+      assert(strings.indices.forall(i => gotS(strings(i)) == wantS(i)), s"String keys, n=$n")
+    }
+  }
+
+  test("a keyed merge is one Spark job; a key with no delta row is deleted") {
+    import org.apache.spark.JobCounter
+    val base = (0L until 64L).map(i => (i, s"v$i"))
+    val keyed = SnapshotTable.create(spark, freshRoot("keyed"), base.toDF("id", "v"),
+      Seq("id"), numBuckets = 8)
+    val plain = SnapshotTable.create(spark, freshRoot("keyed-plain"), base.toDF("id", "v"),
+      Seq("id"), numBuckets = 8)
+    val updates = Seq((1L, "ONE", false), (999L, "new", false), (2L, "x", true))
+      .toDF("id", "v", "deleted")
+    // key 3 has no delta row: the set removes it
+    val keys = Set(1L, 2L, 3L, 999L)
+    val s1 = keyed.currentSnapshot.get
+    val (r, n) = JobCounter(spark.sparkContext)(withoutAqe(
+      keyed.mergeInto(updates, Seq("id"), Some("deleted"), keys = Some(keys))))
+    assert(n.jobs === 1, s"keyed merge launched $n")
+    assert(r.updateRows === 3)
+    val want = base.toMap - 2L - 3L + (1L -> "ONE") + (999L -> "new")
+    assert(keyed.read().as[(Long, String)].collect().toMap === want)
+    // the same delta without a key set, plus an explicit delete of 3
+    plain.mergeInto(updates.unionByName(Seq((3L, "", true)).toDF("id", "v", "deleted")),
+      Seq("id"), Some("deleted"))
+    assert(plain.read().as[(Long, String)].collect().toMap === want)
+    // exactly the keys' buckets moved; the rest carry by reference
+    val touched = keys.toSeq.toDF("id").select(pmod(hash(col("id")), lit(8)))
+      .as[Int].collect().toSet
+    val (p1, p2) = (keyed.bucketPaths(s1), keyed.bucketPaths(keyed.currentSnapshot.get))
+    p1.keySet.foreach(b => assert((p2(b) != p1(b)) === touched(b), s"bucket $b"))
+    // a delta row outside the key set fails the merge before it commits
+    val e = intercept[IllegalArgumentException](keyed.mergeInto(
+      Seq((5L, "five", false)).toDF("id", "v", "deleted"), Seq("id"), Some("deleted"),
+      keys = Some(Set(6L))))
+    assert(e.getMessage.contains("outside the merge's key set"))
+    assert(keyed.read().as[(Long, String)].collect().toMap === want)
+  }
+
+  test("a key set is authoritative in delta commits and compactions too") {
+    val t = SnapshotTable.create(spark, freshRoot("keyed-mor"),
+      Seq((1L, "a1"), (1L, "a2"), (2L, "b1"), (3L, "c1")).toDF("k", "v"),
+      Seq("k"), numBuckets = 4)
+    def state(): Map[Long, Set[String]] = t.read().as[(Long, String)]
+      .collect().groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
+    // delta commit: key 1's rows win over its tombstone, key 2 goes
+    t.mergeIntoDelta(Seq((1L, "a9", false)).toDF("k", "v", "deleted"), Seq("k"),
+      Some("deleted"), keys = Some(Set(1L, 2L)))
+    assert(t.snapshotInfo(t.currentSnapshot.get)("operation") === "delta")
+    assert(state() === Map(1L -> Set("a9"), 3L -> Set("c1")))
+    // compaction: key 3 goes, key 4 arrives
+    val r = t.mergeIntoDelta(Seq((4L, "d1", false)).toDF("k", "v", "deleted"), Seq("k"),
+      Some("deleted"), compactEvery = 1, keys = Some(Set(3L, 4L)))
+    assert(t.snapshotInfo(t.currentSnapshot.get)("operation") === "compact")
+    assert(r.updateRows === 1)
+    assert(state() === Map(1L -> Set("a9"), 4L -> Set("d1")))
+    // an empty delta with keys still deletes them
+    t.mergeInto(Seq.empty[(Long, String, Boolean)].toDF("k", "v", "deleted"), Seq("k"),
+      Some("deleted"), keys = Some(Set(4L)))
+    assert(state() === Map(1L -> Set("a9")))
+  }
+
+  test("write tasks sized to the cores still leave one file per bucket") {
+    val buckets = 16
+    assert(spark.sparkContext.defaultParallelism < buckets)
+    val t = SnapshotTable.create(spark, freshRoot("files-per-bucket-wide"),
+      (0L until 256L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"), numBuckets = buckets)
+    def filesPerBucket(): Seq[Int] = t.filesMeta().select("bucket").as[Int].collect().sorted.toSeq
+    assert(filesPerBucket() === (0 until buckets))
+    t.mergeInto((0L until 256L by 5).map(i => (i, "m", false)).toDF("id", "v", "deleted"),
+      Seq("id"), Some("deleted"))
+    assert(filesPerBucket() === (0 until buckets))
+    t.mergeInto((0L until 256L by 3).map(i => (i, "k", false)).toDF("id", "v", "deleted"),
+      Seq("id"), Some("deleted"), keys = Some((0L until 256L by 3).toSet))
+    assert(filesPerBucket() === (0 until buckets))
+    assert(t.read().count() === 256)
+  }
+
   test("merge-on-read delta commits: latest-wins resolution, tombstones, compaction") {
     val root = freshRoot("mor")
     // owner-keyed family table: multiple rows per key, a merge replaces
