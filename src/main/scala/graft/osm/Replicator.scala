@@ -87,17 +87,24 @@ class Replicator(spark: SparkSession, root: String) {
     * [[graft.streaming.ChangeStream.latestPerKey]] feed here directly,
     * so both faces share the exact same MERGE logic). Does NOT advance
     * the sequence checkpoint. */
-  def applyOps(winnersIn: DataFrame): Long = {
-    // AQE is scoped OFF for the batch apply: the delta DAGs are bounded
-    // by batch size (small, statically well-planned), and AQE turns
-    // each of their many exchanges into a separate sequentially
-    // materialized query stage — measured ~1.6x wall overhead per
-    // merge on the bench batch with zero plan improvement.
-    val aqeWas = spark.conf.getOption("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try applyOpsInner(winnersIn)
-    finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas.getOrElse("true"))
-  }
+  def applyOps(winnersIn: DataFrame): Long =
+    // The batch runs interpreted and without AQE (Replicator.BatchConfs).
+    // Its DAGs are bounded by the batch, small and statically well
+    // planned.
+    //  - AQE turns each of their many exchanges into a separately
+    //    materialized query stage: ~1.6x wall per merge on the bench
+    //    batch, with no better plan.
+    //  - Code generation compiled 114–154 Janino classes per batch on
+    //    perfbench's `replicate` store, more than Spark's codegen cache
+    //    holds (100, `spark.sql.codegen.cache.maxEntries`, a static conf
+    //    of the caller's session). So every batch compiled and
+    //    JIT-compiled them again: 9–16 s of JIT CPU per warm batch on 4
+    //    cores, against 3.5–4.6 s of task CPU. With whole-stage codegen
+    //    and the expression codegen factory off, a warm batch compiles
+    //    0–8 classes and `applyOps` fell from 5.1–7.1 s to 3.2–4.8 s; at
+    //    sf0.1 (12,613 winners per batch) it was no slower. Whole-stage
+    //    codegen off alone still compiled 101–106 classes per batch.
+    Replicator.withSqlConfs(spark, Replicator.BatchConfs)(applyOpsInner(winnersIn))
 
   /** Build every layer's delta from PRE-merge snapshots + winners, then
     * commit the four MERGEs concurrently.
@@ -300,5 +307,28 @@ class Replicator(spark: SparkSession, root: String) {
     relDelta.foreach { case (_, u, _) => u.unpersist() }
     winners.unpersist()
     applied
+  }
+}
+
+object Replicator {
+  /** SQL confs scoped over one [[Replicator.applyOps]]: AQE, whole-stage
+    * codegen and expression codegen off. */
+  private[graft] val BatchConfs: Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** Run `f` with `confs` set on `spark`'s session. Afterwards, also on
+    * a throw, each key holds the caller's value again, or is unset if
+    * the caller had not set it. */
+  private[graft] def withSqlConfs[A](spark: SparkSession, confs: Seq[(String, String)])(f: => A): A = {
+    val set = spark.conf.getAll // the explicitly set confs only
+    val was = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally was.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

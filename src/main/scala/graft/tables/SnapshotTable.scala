@@ -318,7 +318,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
       case _ =>
         val id = currentSnapshot.getOrElse(0L) + 1
         val dir = dataDir(id)
-        df.write.mode("overwrite").parquet(dir.toString)
+        df.write.options(NioLocalFileSystem.writeOptions).mode("overwrite").parquet(dir.toString)
         val rows = spark.read.parquet(dir.toString).count()
         writeMeta(id, operation, rows, dirBytes(dir), Map("schema" -> df.schema.toDDL))
     }
@@ -358,7 +358,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * batch latency). Falls back to a footer scan for very wide bucket
     * counts, where per-bucket conditional sums stop being sensible. */
   private def writeCounted(df: DataFrame, dir: Path, numBuckets: Int): Map[Int, Long] = {
-    def write(d: DataFrame): Unit = d.write.mode("overwrite")
+    def write(d: DataFrame): Unit = d.write.options(NioLocalFileSystem.writeOptions).mode("overwrite")
       .option("maxRecordsPerFile", 5000000)
       .partitionBy("__b").parquet(dir.toString)
     if (numBuckets <= 64) {
@@ -811,7 +811,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     // ONE Spark job: the write carries its own observed row count
     val obs = new org.apache.spark.sql.Observation(s"zdelta-$id")
     rows0.observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(dir.toString)
+      .write.options(NioLocalFileSystem.writeOptions).mode("overwrite").parquet(dir.toString)
     val updateRows = obs.get("n").asInstanceOf[Long]
     if (updateRows == 0L) {
       // an empty batch must not commit (cf. mergeIntoDelta's guard)

@@ -7,6 +7,7 @@ import java.util.Comparator
 import java.util.zip.GZIPOutputStream
 import graft.SparkTestBase
 import graft.tables.SnapshotTable
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 class ReplicatorSpec extends SparkTestBase {
@@ -219,10 +220,12 @@ class ReplicatorSpec extends SparkTestBase {
     assert(!got.exists(_._1 == "node:2") && !got.exists(_._1 == "way:20"))
   }
 
-  test("one applyOps launches a bounded number of Spark jobs") {
+  /** A four-layer store with J10 metadata under `root`, and one batch of
+    * winners over it: node 1 moves (way 10 and relation 100 go stale),
+    * node 2 is deleted, way 20 and relation 200 are created. */
+  private def metaStoreBatch(root: String): DataFrame = {
     import graft.rdf.TripleDerive._
     import org.apache.spark.sql.functions.{lit, map, to_timestamp}
-    val root = fresh("jobs")
     val bn = baseNodes
       .withColumn("ts", to_timestamp(lit("2023-12-01 00:00:00")))
       .withColumn("tags", map(lit("amenity"), lit("bench")))
@@ -243,14 +246,17 @@ class ReplicatorSpec extends SparkTestBase {
         .select(col("subj_key"), col("s"), col("p"), col("o")),
       Seq("subj_key"))
     val ts = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
-    // node 1 moves (way 10 and relation 100 go stale), node 2 is
-    // deleted, way 20 and relation 200 are created
-    val winners = ChangePipeline.dedupLatest(Seq(
+    ChangePipeline.dedupLatest(Seq(
       ChangeOp(1, "modify", "node", 1L, 2, ts, true, Some(10.5), Some(20.5), Nil, Nil, Map.empty),
       ChangeOp(1, "delete", "node", 2L, 2, ts, false, None, None, Nil, Nil, Map.empty),
       ChangeOp(1, "create", "way", 20L, 1, ts, true, None, None, Seq(1L, 3L), Nil, Map.empty),
       ChangeOp(1, "create", "relation", 200L, 1, ts, true, None, None, Nil,
         Seq(RelMember(20L, "way", "a")), Map.empty)).toDF())
+  }
+
+  test("one applyOps launches a bounded number of Spark jobs") {
+    val root = fresh("jobs")
+    val winners = metaStoreBatch(root)
     val (applied, n) = org.apache.spark.JobCounter(spark.sparkContext)(
       new Replicator(spark, root).applyOps(winners))
     assert(applied === 6L) // 2 nodes + stale way 10 + way 20 + rels 100, 200
@@ -263,9 +269,51 @@ class ReplicatorSpec extends SparkTestBase {
     assert(n.jobs <= 12, s"applyOps launched $n")
   }
 
+  test("a warm applyOps runs interpreted: at most 10 Janino compiles") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = fresh("codegen")
+    val winners = metaStoreBatch(root)
+    val r = new Replicator(spark, root)
+    r.applyOps(winners)
+    // the same batch again: the store has moved on, the plans have not
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(r.applyOps(winners) === 6L)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    info(s"warm applyOps compiled $compiles classes")
+    assert(compiles <= 10, s"warm applyOps compiled $compiles classes")
+  }
+
+  test("applyOps puts the caller's SQL confs back, after a return and after a throw") {
+    val root = fresh("confs")
+    val winners = metaStoreBatch(root)
+    val keys = Replicator.BatchConfs.map(_._1)
+    def state: Seq[Option[String]] = keys.map(spark.conf.getAll.get)
+    def set(s: Seq[Option[String]]): Unit = keys.zip(s).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val saved = state
+    try {
+      // every key once set to a value of the caller's and once unset
+      for (caller <- Seq(
+          Seq(Some("true"), None, Some("CODEGEN_ONLY")),
+          Seq(None, Some("true"), None))) {
+        set(caller)
+        new Replicator(spark, root).applyOps(winners)
+        assert(state === caller, "after a return")
+        // no kind/id/action columns: fails inside the scope, after
+        // applyOps has cached its input
+        val bad = Seq(1).toDF("not_a_winner")
+        intercept[org.apache.spark.sql.AnalysisException](
+          new Replicator(spark, root).applyOps(bad))
+        bad.unpersist()
+        assert(state === caller, "after a throw")
+      }
+    } finally set(saved)
+  }
+
   test("a modify whose rebuild is empty removes the object: layers == fold, triples == derivation") {
     import graft.rdf.TripleDerive._
-    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{lit, map, posexplode, regexp_replace, split,
       split_part, to_timestamp}
     val root = fresh("empty-rebuild")

@@ -4,6 +4,7 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, Path}
 import java.util.Comparator
+import scala.jdk.CollectionConverters._
 
 class SnapshotTableSpec extends SparkTestBase {
   import spark.implicits._
@@ -221,6 +222,41 @@ class SnapshotTableSpec extends SparkTestBase {
       Seq("id"), Some("deleted"), keys = Some((0L until 256L by 3).toSet))
     assert(filesPerBucket() === (0 until buckets))
     assert(t.read().count() === 256)
+  }
+
+  test("snapshot writes go through NioLocalFileSystem and keep Hadoop's modes") {
+    import org.apache.hadoop.fs.FileSystem
+    import java.nio.file.attribute.PosixFilePermissions
+    def nioBytes: Long =
+      FileSystem.getStatistics("file", classOf[NioLocalFileSystem.Raw]).getBytesWritten
+    def viaNio(site: String)(f: => Any): Unit = {
+      val before = nioBytes
+      f
+      assert(nioBytes > before, s"the $site wrote no bytes through NioLocalFileSystem")
+    }
+    // the three write sites: a flat commit, bucketed writes, a z-delta
+    val flat = freshRoot("perm-flat")
+    viaNio("flat commit")(SnapshotTable.create(spark, flat, Seq((1L, "a")).toDF("id", "v")))
+    val bucketed = freshRoot("perm-bucketed")
+    val b = SnapshotTable.create(spark, bucketed,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
+    viaNio("bucketed merge")(b.mergeInto(Seq((2L, "B")).toDF("id", "v"), Seq("id")))
+    val z = freshRoot("perm-z")
+    val zt = SnapshotTable.createZOrdered(spark, z,
+      Seq((1L, 1.0, 2.0), (2L, -50.0, 40.0)).toDF("id", "lon", "lat"), "lon", "lat",
+      zBits = 8, numBuckets = 4)
+    viaNio("z-delta")(zt.mergeIntoZDelta(Seq((3L, 3.0, 4.0)).toDF("id", "lon", "lat"), Seq("id")))
+    // Hadoop's defaults under its 022 umask, as its chmod path leaves
+    // them: directories rwxr-xr-x; parquet, .crc and _SUCCESS rw-r--r--
+    for (root <- Seq(flat, bucketed, z)) {
+      val paths = SnapshotTable.closing(Files.walk(Paths.get(root, "data")))(_.iterator().asScala.toList)
+      assert(paths.exists(_.toString.endsWith(".parquet")))
+      assert(paths.exists(_.toString.endsWith(".crc")))
+      for (p <- paths) {
+        val want = if (Files.isDirectory(p)) "rwxr-xr-x" else "rw-r--r--"
+        assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(p)) === want, p)
+      }
+    }
   }
 
   test("merge-on-read delta commits: latest-wins resolution, tombstones, compaction") {
