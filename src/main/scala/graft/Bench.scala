@@ -185,44 +185,6 @@ object Bench {
     Seq(nodes, baseWays, baseRels).foreach(_.unpersist())
   }
 
-  /** Optional e2e ring densification (VERDICT r4 item 7): interpolate
-    * K collinear points into every ring edge so the e2e join carries
-    * realistic polygon payloads (5-point synthetic rectangles become
-    * 5+4K-point rings, e.g. K=127 → 513 points — the RingBench regime
-    * where the broadcast ring dictionary wins) WITHOUT changing the
-    * join output: collinear edge splits preserve crossing parity, so
-    * hits are bit-identical to the undensified run (asserted by
-    * RingDensifySpec). */
-  val E2eRingDensify: Int =
-    sys.env.getOrElse("SPARK_GRAFT_RING_DENSIFY", "0").toInt
-
-  private[graft] val densifyUdf = udf((vs: Seq[Double], k: Int) =>
-    if (vs == null || vs.length < 2 || k <= 0) vs
-    else {
-      val out = new scala.collection.mutable.ArrayBuffer[Double](
-        vs.length + (vs.length - 1) * k)
-      var i = 0
-      while (i < vs.length - 1) {
-        val a = vs(i); val b = vs(i + 1)
-        out += a
-        var j = 1
-        while (j <= k) { out += a + (b - a) * j / (k + 1); j += 1 }
-        i += 1
-      }
-      out += vs.last
-      out.toSeq
-    })
-
-  /** The e2e polygon layer, densified iff SPARK_GRAFT_RING_DENSIFY>0. */
-  def e2ePolys(s: SparkSession, dir: String): DataFrame = {
-    val p = SpatialJoin.polygons(
-      SynthUniverse.wayMembers(s, dir), SynthUniverse.nodes(s, dir))
-    if (E2eRingDensify <= 0) p
-    else p.select(col("way_id"),
-      densifyUdf(col("xs"), lit(E2eRingDensify)).as("xs"),
-      densifyUdf(col("ys"), lit(E2eRingDensify)).as("ys"))
-  }
-
   /** The ×F-replicated geo-entity stream (shared by the e2e faces). */
   private def replicatedPoints(s: SparkSession, dir: String): DataFrame =
     // repartition the SMALL base set, then multiply inside each task:
@@ -249,30 +211,29 @@ object Bench {
     * sf0.1×6400 this lands at the empirically validated ~50k (r3's
     * frozen constant); at factor 100 it keeps firing where the frozen
     * constant silently stopped. Memoized per dir — the first (untimed
-    * warm-up) call pays the base-table count. Env overrides keep the
-    * knobs. */
+    * warm-up) call pays the base-table count. */
   private val saltCache = scala.collection.mutable.Map[String, (Int, Long)]()
   def e2eSaltParams(s: SparkSession, dir: String): (Int, Long) =
-    saltCache.getOrElseUpdate(dir, {
-      val salt = sys.env.get("SPARK_GRAFT_E2E_SALT").map(_.toInt).getOrElse(16)
-      val hot = sys.env.get("SPARK_GRAFT_E2E_HOT").map(_.toLong).getOrElse {
-        val n = SynthUniverse.points(s, dir).count() * E2eFactor
-        math.max(1000L, n / 4096L)
-      }
-      (salt, hot)
-    })
+    saltCache.getOrElseUpdate(dir,
+      (16, math.max(1000L, SynthUniverse.points(s, dir).count() * E2eFactor / 4096L)))
 
-  /** Ring-payload strategy of the e2e PIP join (see
-    * [[graft.spatial.SpatialJoin.pipJoin]]'s ringDict contract).
-    * Default "inline": measured fastest here at every core count (the
-    * synthetic rings are 5-point rectangles, so the dictionary's extra
-    * probe is pure CPU overhead with no byte savings to repay it —
-    * q30 inline 1.65 s vs broadcast 2.07 s at sf0.1; the factor-6400
-    * scaling run regressed ~20-30% at ALL of local[2/8/32] under
-    * broadcast). The dictionary's win regime is real polygon layers
-    * whose rings are hundreds of points, where inline drags ~10× more
-    * bytes per candidate through the cover shuffle. */
-  val E2eRingDict: String = sys.env.getOrElse("SPARK_GRAFT_RING_DICT", "inline")
+  /** The e2e spatial DAG as named legs, each built on the ones before
+    * it: the ×F point stream, the polygon layer, the partitioned and
+    * salted PIP join (inline rings: the synthetic rings are 5-point
+    * rectangles, so a ring dictionary's extra probe buys no bytes), and
+    * its res-5 tile counts, the last leg. */
+  private def e2eLegs(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
+    val pts = replicatedPoints(s, dir)
+    val polys = SpatialJoin.polygons(
+      SynthUniverse.wayMembers(s, dir), SynthUniverse.nodes(s, dir))
+    val (salt, hot) = e2eSaltParams(s, dir)
+    val pip = SpatialJoin.pipJoin(pts, polys, res = PipRes,
+      mode = "partitioned", salt = salt, hotThreshold = hot)
+    val tiles = pip
+      .withColumn("tile", graft.geo.GeoFunctions.cellAt(col("lon"), col("lat"), 5))
+      .groupBy(col("tile")).agg(count(lit(1)).as("n"))
+    Seq("points" -> pts, "polys" -> polys, "pip" -> pip, "tiles" -> tiles)
+  }
 
   /** The full north-rule pipeline as ONE job: extract geo-entities →
     * partitioned+salted PIP join → raster tiles, PLUS the REAL
@@ -281,15 +242,7 @@ object Bench {
     * owner-keyed triple store (bucketed MERGEs included). Returns
     * materialized row count + applied op count. */
   def e2ePipeline(s: SparkSession, dir: String, storeRoot: String): Long = {
-    val pts = replicatedPoints(s, dir)
-    val polys = e2ePolys(s, dir)
-    val (salt, hot) = e2eSaltParams(s, dir)
-    val pip = SpatialJoin.pipJoin(pts, polys, res = PipRes,
-      mode = "partitioned", salt = salt, hotThreshold = hot,
-      ringDict = E2eRingDict)
-    val tiles = pip
-      .withColumn("tile", graft.geo.GeoFunctions.cellAt(col("lon"), col("lat"), 5))
-      .groupBy(col("tile")).agg(count(lit(1)).as("n"))
+    val tiles = e2eLegs(s, dir).last._2
     val winners = ChangePipeline.dedupLatest(SynthUniverse.changesFull(s, dir))
     val applied = new Replicator(s, storeRoot).applyOps(winners)
     tiles.count() + applied
@@ -300,15 +253,7 @@ object Bench {
     * committed docs/sec stays comparable across rounds now that
     * [[e2ePipeline]] prices the full 3-layer + triple-store contract. */
   def e2eJoinR2(s: SparkSession, dir: String): Long = {
-    val pts = replicatedPoints(s, dir)
-    val polys = e2ePolys(s, dir)
-    val (salt, hot) = e2eSaltParams(s, dir)
-    val pip = SpatialJoin.pipJoin(pts, polys, res = PipRes,
-      mode = "partitioned", salt = salt, hotThreshold = hot,
-      ringDict = E2eRingDict)
-    val tiles = pip
-      .withColumn("tile", graft.geo.GeoFunctions.cellAt(col("lon"), col("lat"), 5))
-      .groupBy(col("tile")).agg(count(lit(1)).as("n"))
+    val tiles = e2eLegs(s, dir).last._2
     val winners = ChangePipeline.dedupLatest(SynthUniverse.changes(s, dir))
     val merged = ChangePipeline.applyNodeOps(SynthUniverse.nodes(s, dir), winners)
     tiles.count() + merged.count()
@@ -318,21 +263,11 @@ object Bench {
     * count recomputes its upstream — legs are cumulative shapes, the
     * point is comparing their 8-core vs 32-core ratios). */
   def e2eProfile(s: SparkSession, dir: String, storeRoot: String): Unit = {
-    val pts = replicatedPoints(s, dir)
-    val polys = e2ePolys(s, dir)
-    val (salt, hot) = e2eSaltParams(s, dir)
-    val pip = SpatialJoin.pipJoin(pts, polys, res = PipRes,
-      mode = "partitioned", salt = salt, hotThreshold = hot,
-      ringDict = E2eRingDict)
-    val tiles = pip
-      .withColumn("tile", graft.geo.GeoFunctions.cellAt(col("lon"), col("lat"), 5))
-      .groupBy(col("tile")).agg(count(lit(1)).as("n"))
     def t(name: String)(f: => Long): Unit = {
       val t0 = System.nanoTime(); val n = f
       println(f"[profile] $name%-12s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
     }
-    t("points")(pts.count()); t("polys")(polys.count())
-    t("pip")(pip.count()); t("tiles")(tiles.count())
+    e2eLegs(s, dir).foreach { case (name, leg) => t(name)(leg.count()) }
     val winners = ChangePipeline.dedupLatest(SynthUniverse.changesFull(s, dir))
     t("applyOps")(new Replicator(s, storeRoot).applyOps(winners))
   }

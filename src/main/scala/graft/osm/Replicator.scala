@@ -87,7 +87,7 @@ class Replicator(spark: SparkSession, root: String) {
     * [[graft.streaming.ChangeStream.latestPerKey]] feed here directly,
     * so both faces share the exact same MERGE logic). Does NOT advance
     * the sequence checkpoint. */
-  def applyOps(winnersIn: DataFrame): Long =
+  def applyOps(winnersIn: DataFrame): Long = {
     // The batch runs interpreted and without AQE (Replicator.BatchConfs).
     // Its DAGs are bounded by the batch, small and statically well
     // planned.
@@ -104,7 +104,12 @@ class Replicator(spark: SparkSession, root: String) {
     //    0–8 classes and `applyOps` fell from 5.1–7.1 s to 3.2–4.8 s; at
     //    sf0.1 (12,613 winners per batch) it was no slower. Whole-stage
     //    codegen off alone still compiled 101–106 classes per batch.
-    Replicator.withSqlConfs(spark, Replicator.BatchConfs)(applyOpsInner(winnersIn))
+    // every frame the batch caches; released when the batch ends, also
+    // on a throw
+    val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    try Replicator.withSqlConfs(spark, Replicator.BatchConfs)(applyOpsInner(winnersIn, held))
+    finally held.foreach(_.unpersist())
+  }
 
   /** Build every layer's delta from PRE-merge snapshots + winners, then
     * commit the four MERGEs concurrently.
@@ -131,10 +136,14 @@ class Replicator(spark: SparkSession, root: String) {
     * delta rows, so no merge needs another merge's committed files.
     * Each table commits its own snapshot independently; a partial
     * failure leaves some layers advanced, which the idempotent MERGE +
-    * post-batch seq checkpoint (ST4) makes safe to re-apply. */
-  private def applyOpsInner(winnersIn: DataFrame): Long = {
+    * post-batch seq checkpoint (ST4) makes safe to re-apply.
+    *
+    * Every frame it caches goes into `held`, which the caller releases. */
+  private def applyOpsInner(winnersIn: DataFrame,
+      held: scala.collection.mutable.Buffer[DataFrame]): Long = {
     import ChangePipeline.in
-    val winners = winnersIn.cache() // ST2+ST5, read by every layer's delta
+    def cached(df: DataFrame): DataFrame = { held += df; df.cache() }
+    val winners = cached(winnersIn) // ST2+ST5, read by every layer's delta
     val ids = ChangePipeline.batchIds(winners) // also materializes the cache
     // J10 metadata: a layer whose snapshot carries ts/tags columns
     // maintains the full type/timestamp/tag/facts triple families;
@@ -197,9 +206,9 @@ class Replicator(spark: SparkSession, root: String) {
         changeMembers.unionByName(wayMembers(base.filter(in(col("way_id"), staleW)))),
         mergedNodes)
       // cached: the way merge and the triple merge both consume it
-      val upserts = (if (hasMeta(base)) withMeta(upserts0, base, "way", "way_id",
+      val upserts = cached(if (hasMeta(base)) withMeta(upserts0, base, "way", "way_id",
           ids("way", "create", "modify") ++ staleW)
-        else upserts0).cache()
+        else upserts0)
       val dels = winners.filter(col("kind") === "way" && col("action") === "delete")
         .select(col("id").as("way_id"), lit(null).cast("string").as("members"),
           lit(null).cast("string").as("wkt"))
@@ -238,9 +247,9 @@ class Replicator(spark: SparkSession, root: String) {
       // the membership holds exactly the upsert ids' members
       val upserts = ChangePipeline.serializeRelMembers(
         changeRm.unionByName(relMembers(base.filter(in(col("rel_id"), staleR)))))
-      val upsertsC = (if (hasMeta(base)) withMeta(upserts, base, "relation", "rel_id",
+      val upsertsC = cached(if (hasMeta(base)) withMeta(upserts, base, "relation", "rel_id",
           ids("relation", "create", "modify") ++ staleR)
-        else upserts).cache() // shared: rel merge + triple merge
+        else upserts) // shared: rel merge + triple merge
       val dels = winners.filter(col("kind") === "relation" && col("action") === "delete")
         .select(col("id").as("rel_id"), lit(null).cast("string").as("members"))
       val delsM =
@@ -299,14 +308,15 @@ class Replicator(spark: SparkSession, root: String) {
           compactEvery = every, keys = Some(tripleKeys)); 0L }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(merges.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    val applied =
-      try Await.result(Future.sequence(merges.map(m => Future(m()))), Duration.Inf).sum
-      finally pool.shutdown()
-
-    wayDelta.foreach { case (_, u) => u.unpersist() }
-    relDelta.foreach { case (_, u, _) => u.unpersist() }
-    winners.unpersist()
-    applied
+    val running = merges.map(m => Future(m()))
+    // Future.sequence fails on the first failed merge while the others
+    // may still read the cached frames: wait for all before the caller
+    // releases them
+    try Await.result(Future.sequence(running), Duration.Inf).sum
+    finally {
+      running.foreach(Await.ready(_, Duration.Inf))
+      pool.shutdown()
+    }
   }
 }
 

@@ -19,10 +19,12 @@ import graft.geo.{CellIndex, GeoFunctions}
   *  - each point encodes to exactly ONE cell (codegen'd arithmetic) —
   *    so the equi-join emits no duplicate candidates and needs no
   *    post-dedup;
-  *  - exact JTS covers() refine on the candidate set only;
-  *  - the polygon side is broadcast when small; the partitioned path
-  *    salts the polygon side ×S and keys points by (cell, hash%S) to
-  *    split hot cells (explicit skew mitigation per the north rule).
+  *  - the refine is [[pointInRing]]'s boundary-inclusive crossing test
+  *    (the `pip_contains` codegen expression), run on bbox passes only;
+  *  - the partitioned path counts points per cell and salts only the
+  *    hot cells: their polygon rows replicate ×min(S, ⌈count/threshold⌉)
+  *    and each of their points picks one shard by hash (explicit skew
+  *    mitigation per the north rule).
   */
 object SpatialJoin {
 
@@ -74,16 +76,13 @@ object SpatialJoin {
     .withColumn("minx", array_min(col("xs"))).withColumn("maxx", array_max(col("xs")))
     .withColumn("miny", array_min(col("ys"))).withColumn("maxy", array_max(col("ys")))
 
-  /** Candidate generation: pts(cell) ⋈ cover(cell) under the selected
-    * strategy (auto / broadcast / partitioned with histogram salting) —
-    * shared by [[pipJoin]] and [[pipJoinMulti]]; see pipJoin's scaladoc
-    * for the mode/salt/hotThreshold contract. */
+  /** Candidate generation: pts(cell) ⋈ cover(cell) under `mode` (auto,
+    * or partitioned with histogram salting) — the cell join of every
+    * PIP join; see [[pipJoin]]'s scaladoc for the mode/salt/hotThreshold
+    * contract. */
   private def cellJoin(pts: DataFrame, cover: DataFrame, mode: String,
-      salt: Int, hotThreshold: Long): DataFrame = {
-    require(Set("auto", "broadcast", "partitioned")(mode),
-      s"join mode must be auto|broadcast|partitioned, got '$mode'")
-    if (mode == "broadcast") pts.join(broadcast(cover), "cell")
-    else if (mode == "auto") pts.join(cover, "cell")
+      salt: Int, hotThreshold: Long): DataFrame =
+    if (mode == "auto") pts.join(cover, "cell")
     else if (salt <= 1) pts.join(cover.hint("shuffle_hash"), "cell")
     else {
       // the histogram, its two broadcasts and the join's point side all
@@ -106,44 +105,17 @@ object SpatialJoin {
         .drop("saltN")
       saltedPts.join(saltedCover.hint("shuffle_hash"), Seq("cell", "s")).drop("s")
     }
-  }
 
-  /** Join the bbox-surviving candidate stream to a ring dictionary and
-    * run the native refine. The dictionary holds each ring ONCE — the
-    * candidate stream never carries ring arrays (see [[pipJoin]]'s
-    * ringDict contract). */
-  private def refineViaDict(cand: DataFrame, dict: DataFrame,
-      dictKey: Seq[String], ringDict: String): DataFrame = {
-    val dictSide = if (ringDict == "broadcast") broadcast(dict)
-      else dict.hint("shuffle_hash")
-    cand.join(dictSide, dictKey)
-      .filter(PointInRingExpr.pipContains(col("xs"), col("ys"), col("lon"), col("lat")))
-      .drop("cell", "xs", "ys", "minx", "maxx", "miny", "maxy", "__rk")
-  }
+  /** Valid `mode`s and `ringDict`s of the PIP joins (see [[pipJoin]]). */
+  private val Modes = Seq("auto", "partitioned")
+  private val RingDicts = Seq("inline", "broadcast")
 
-  /** Valid `ringDict` strategies of [[pipJoin]] / [[pipJoinMulti]] /
-    * [[pipJoinMultiEvenOdd]]:
-    *
-    *  - "inline": the classic single join — ring arrays ride the
-    *    exploded cover (one copy per covering cell) and the refine runs
-    *    inside the cell join's stage. No second join; the right default
-    *    when the polygon layer's size is unknown.
-    *  - "broadcast": the cell join is SLIM — only (cell, id, 4 bbox
-    *    scalars) enter its build side, so every candidate probe reads a
-    *    ~1-cache-line row instead of one dragging ring arrays; bbox
-    *    survivors (typically a third of candidates) then probe a
-    *    BROADCAST (id -> ring) dictionary holding each ring exactly
-    *    once, and the refine fuses into the same stage — ZERO extra
-    *    exchange. The choice for layers that fit executor memory
-    *    (every layer in this repo's bench; a planet-scale OSM polygon
-    *    layer at ~10^7 rings x ~200 B still fits).
-    *  - "shuffle": slim cell join + SHUFFLED dictionary join — for
-    *    layers past broadcast size. Pays one extra exchange of the
-    *    bbox-surviving candidates (slim rows), in return for never
-    *    replicating ring arrays per covering cell through the cover
-    *    shuffle.
-    */
-  private val RingDictModes = Set("inline", "broadcast", "shuffle")
+  /** Point rows per cell above which the partitioned path salts a cell,
+    * unless the caller passes its own `hotThreshold`. */
+  private val HotThreshold = 2000000L
+
+  private def requireOneOf(knob: String, value: String, valid: Seq[String]): Unit =
+    require(valid.contains(value), s"$knob must be ${valid.mkString(" or ")}, got '$value'")
 
   /** The point side's join key. `coalesce` makes it non-nullable: a
     * nullable key lets Spark infer `isnotnull(cell)` from the join and
@@ -154,22 +126,51 @@ object SpatialJoin {
   private def pointCell(res: Int): Column =
     coalesce(GeoFunctions.cellAt(col("lon"), col("lat"), res), lit(-1L))
 
+  /** The refined (point, ring) rows of every PIP join: each point's cell
+    * joins the rings' cover under `mode`, the bbox test runs on 4
+    * fixed-width scalars, and `pip_contains` ([[pointInRing]]) runs only
+    * on bbox passes. Under `ringDict = "broadcast"` the cover carries no
+    * ring arrays: the bbox passes join `dict`, (`ringKey`, xs, ys) rows
+    * holding each ring once, on `ringKey`, which `rings` must carry.
+    * Output: the point columns and the ring columns, less the join's
+    * working columns (cell, bbox, arrays, `__rk`). */
+  private def refined(points: DataFrame, rings: DataFrame, res: Int, mode: String,
+      salt: Int, hotThreshold: Long, ringDict: String,
+      ringKey: String, dict: => DataFrame): DataFrame = {
+    requireOneOf("mode", mode, Modes)
+    requireOneOf("ringDict", ringDict, RingDicts)
+    val pts = points.withColumn("cell", pointCell(res))
+    val inBbox = col("lon") >= col("minx") && col("lon") <= col("maxx") &&
+      col("lat") >= col("miny") && col("lat") <= col("maxy")
+    val contains = PointInRingExpr.pipContains(col("xs"), col("ys"), col("lon"), col("lat"))
+    val hits =
+      if (ringDict == "inline")
+        cellJoin(pts, coverWithBbox(rings, res), mode, salt, hotThreshold)
+          .filter(inBbox && contains)
+      else
+        cellJoin(pts, coverWithBbox(rings, res).drop("xs", "ys"), mode, salt, hotThreshold)
+          .filter(inBbox)
+          .join(broadcast(dict), ringKey)
+          .filter(contains)
+    hits.drop("cell", "xs", "ys", "minx", "maxx", "miny", "maxy", "__rk")
+  }
+
   /** Cell-prefiltered PIP join.
     *
     * @param points   (pointCols..., lon, lat)
     * @param polys    (way_id, xs, ys) from [[polygons]]
     * @param res      join resolution (cell edge must be >= max polygon
     *                 edge for single-res cover to stay small)
-    * @param mode     "auto"      — no hints; Catalyst/AQE picks the
-    *                               build side from runtime stats (the
-    *                               default: the exploded cover carries
-    *                               ring arrays and is often BIGGER than
-    *                               the point batch — force-broadcasting
-    *                               it serializes the whole join behind
-    *                               a single-threaded broadcast build);
-    *                 "broadcast" — force-broadcast the cover (small
-    *                               polygon layers);
-    *                 "partitioned" — shuffle both sides on cell.
+    * @param mode     "auto"        — no hints; Catalyst/AQE picks the
+    *                                 build side from the sides' sizes,
+    *                                 so small polygon layers broadcast.
+    *                                 No mode forces that broadcast: the
+    *                                 exploded cover carries ring arrays
+    *                                 and is often BIGGER than the point
+    *                                 batch, and forcing it serializes
+    *                                 the join behind one broadcast build;
+    *                 "partitioned" — shuffle both sides on cell, salted
+    *                                 when `salt` > 1.
     * @param salt     >1 enables salted skew-split on the partitioned
     *                 path (the MAX per-cell salt factor)
     * @param hotThreshold point rows per cell above which that cell is
@@ -191,31 +192,28 @@ object SpatialJoin {
     *                 returned frame is dropped. Like any local
     *                 checkpoint, they cannot be recomputed after the
     *                 executor holding them is lost.
+    * @param ringDict where the refine finds each candidate's ring:
+    *                 "inline"    — ring arrays ride the exploded cover
+    *                               (one copy per covering cell) and the
+    *                               refine runs in the cell join's stage;
+    *                               one join, the default when the
+    *                               layer's size is unknown;
+    *                 "broadcast" — the cover carries only (cell, id, 4
+    *                               bbox scalars), so each candidate
+    *                               probe reads a ~1-cache-line row, and
+    *                               the bbox passes probe a broadcast
+    *                               (id → ring) dictionary holding each
+    *                               ring once, in the same stage. It wins
+    *                               when rings are long and the layer
+    *                               fits executor memory (a planet-scale
+    *                               OSM layer at ~10^7 rings × ~200 B
+    *                               does).
     */
   def pipJoin(points: DataFrame, polys: DataFrame, res: Int,
       mode: String = "auto", salt: Int = 1,
-      hotThreshold: Long = 2000000L, ringDict: String = "inline"): DataFrame = {
-    require(RingDictModes(ringDict), s"ringDict must be inline|broadcast|shuffle, got '$ringDict'")
-    val pts = points.withColumn("cell", pointCell(res))
-    if (ringDict == "inline") {
-      // bbox columns ride along as 4 scalars: the refine first rejects
-      // on them (fixed-width reads only) and dereferences the ring
-      // arrays' variable-length bytes ONLY for bbox-passing candidates.
-      val cover = coverWithBbox(polys, res)
-      cellJoin(pts, cover, mode, salt, hotThreshold)
-        .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-          col("lat") >= col("miny") && col("lat") <= col("maxy") &&
-          PointInRingExpr.pipContains(col("xs"), col("ys"), col("lon"), col("lat")))
-        .drop("cell", "xs", "ys", "minx", "maxx", "miny", "maxy")
-    } else {
-      val cover = coverWithBbox(polys, res).drop("xs", "ys")
-      val cand = cellJoin(pts, cover, mode, salt, hotThreshold)
-        .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-          col("lat") >= col("miny") && col("lat") <= col("maxy"))
-      refineViaDict(cand, polys.select(col("way_id"), col("xs"), col("ys")),
-        Seq("way_id"), ringDict)
-    }
-  }
+      hotThreshold: Long = HotThreshold, ringDict: String = "inline"): DataFrame =
+    refined(points, polys, res, mode, salt, hotThreshold, ringDict,
+      "way_id", polys.select(col("way_id"), col("xs"), col("ys")))
 
   /** Multipolygon (holes-aware) PIP join — the area semantics the
     * reference delegates to osm2rdf's GeometryHandler
@@ -242,7 +240,7 @@ object SpatialJoin {
   def pipJoinMulti(points: DataFrame, rings: DataFrame, res: Int,
       keyCols: Seq[String] = Seq("doc_id", "entity"),
       mode: String = "auto", salt: Int = 1,
-      hotThreshold: Long = 2000000L, ringDict: String = "inline"): DataFrame = {
+      hotThreshold: Long = HotThreshold, ringDict: String = "inline"): DataFrame = {
     multiRefined(points, rings, res, mode, salt, hotThreshold, ringDict)
       .groupBy(keyCols.map(col) :+ col("rel_id"): _*)
       .agg(max(when(col("role") === "outer", 1).otherwise(0)).as("o_hit"),
@@ -251,9 +249,9 @@ object SpatialJoin {
       .drop("o_hit", "i_hit")
   }
 
-  /** Shared slim-candidate generation of the multipolygon joins:
-    * (rel_id, role) does not identify a RING (a relation may carry
-    * several outers), so the ring dictionary keys on
+  /** [[refined]] for the multipolygon joins. (rel_id, role) does not
+    * identify a RING (a relation may carry several outers), so the
+    * broadcast ring dictionary keys on
     * `__rk = xxhash64(rel_id, role, xs, ys)` — a pure function of row
     * content, so the cover plan and the dictionary plan derive
     * identical keys independently. Byte-identical duplicate rings
@@ -265,25 +263,10 @@ object SpatialJoin {
     * exchange. */
   private def multiRefined(points: DataFrame, rings: DataFrame, res: Int,
       mode: String, salt: Int, hotThreshold: Long, ringDict: String): DataFrame = {
-    require(RingDictModes(ringDict), s"ringDict must be inline|broadcast|shuffle, got '$ringDict'")
-    val pts = points.withColumn("cell", pointCell(res))
-    if (ringDict == "inline") {
-      val cover = coverWithBbox(rings, res)
-      cellJoin(pts, cover, mode, salt, hotThreshold)
-        .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-          col("lat") >= col("miny") && col("lat") <= col("maxy") &&
-          PointInRingExpr.pipContains(col("xs"), col("ys"), col("lon"), col("lat")))
-    } else {
-      val ringsK = rings.withColumn("__rk",
-        xxhash64(col("rel_id"), col("role"), col("xs"), col("ys")))
-      val cover = coverWithBbox(ringsK, res).drop("xs", "ys")
-      val cand = cellJoin(pts, cover, mode, salt, hotThreshold)
-        .filter(col("lon") >= col("minx") && col("lon") <= col("maxx") &&
-          col("lat") >= col("miny") && col("lat") <= col("maxy"))
-      refineViaDict(cand,
-        ringsK.select(col("__rk"), col("xs"), col("ys")).dropDuplicates("__rk"),
-        Seq("__rk"), ringDict)
-    }
+    val ringsK = rings.withColumn("__rk",
+      xxhash64(col("rel_id"), col("role"), col("xs"), col("ys")))
+    refined(points, ringsK, res, mode, salt, hotThreshold, ringDict, "__rk",
+      ringsK.select(col("__rk"), col("xs"), col("ys")).dropDuplicates("__rk"))
   }
 
   /** Even-odd multipolygon containment — the NESTING-correct variant
@@ -304,7 +287,7 @@ object SpatialJoin {
   def pipJoinMultiEvenOdd(points: DataFrame, rings: DataFrame, res: Int,
       keyCols: Seq[String] = Seq("doc_id", "entity"),
       mode: String = "auto", salt: Int = 1,
-      hotThreshold: Long = 2000000L, ringDict: String = "inline"): DataFrame = {
+      hotThreshold: Long = HotThreshold, ringDict: String = "inline"): DataFrame = {
     multiRefined(points, rings, res, mode, salt, hotThreshold, ringDict)
       .groupBy(keyCols.map(col) :+ col("rel_id"): _*)
       .agg(count(lit(1)).as("__hits"))

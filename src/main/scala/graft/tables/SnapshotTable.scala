@@ -114,40 +114,46 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     case None => throw new IllegalStateException(s"no current snapshot at $root")
   }
 
-  /** True if `id` is a merge-on-read DELTA commit (see
-    * [[mergeIntoDelta]]) rather than a full bucketed layout. */
-  private def isDelta(info: Map[String, String]): Boolean =
-    info.contains("deltaParent")
+  /** Manifest keys linking a merge-on-read delta commit to its parent:
+    * over a bucketed base ([[mergeIntoDelta]]) and over a z-ordered base
+    * ([[mergeIntoZDelta]]). */
+  private val DeltaParent = "deltaParent"
+  private val ZDeltaParent = "zdeltaParent"
+
+  private def isDelta(info: Map[String, String]): Boolean = info.contains(DeltaParent)
+  private def isZDelta(info: Map[String, String]): Boolean = info.contains(ZDeltaParent)
 
   /** Delta snapshot ids above the chain's base, oldest first. */
-  private def deltaChain(id: Long): Seq[Long] =
-    snapshotInfo(id).get("deltaParent") match {
-      case Some(p) => deltaChain(p.toLong) :+ id
+  private def deltaChain(id: Long, parentKey: String): Seq[Long] =
+    snapshotInfo(id).get(parentKey) match {
+      case Some(p) => deltaChain(p.toLong, parentKey) :+ id
       case None => Nil
     }
 
-  private def chainBase(id: Long): Long =
-    snapshotInfo(id).get("deltaParent") match {
-      case Some(p) => chainBase(p.toLong)
+  private def chainBase(id: Long, parentKey: String): Long =
+    snapshotInfo(id).get(parentKey) match {
+      case Some(p) => chainBase(p.toLong, parentKey)
       case None => id
     }
 
-  /** Merge-on-read resolution: base layout ∪ delta files, LATEST
-    * commit wins per key (a delta replaces the key's whole row family;
-    * `__del` tombstones drop it). One shuffle on the key. */
-  private def resolveDelta(id: Long, info: Map[String, String]): DataFrame = {
-    val keyCols = info("keyCols").split(",").toSeq
-    val baseDf = readAt(chainBase(id))
-      .withColumn("__del", lit(false)).withColumn("__c", lit(0))
-    val all = deltaChain(id).zipWithIndex.map { case (d, i) =>
+  /** Merge-on-read overlay: `base` ∪ the `deltas`' files, LATEST commit
+    * wins per key (a delta replaces the key's whole row family; `__del`
+    * tombstones drop it). One shuffle on the key. */
+  private def overlay(base: DataFrame, deltas: Seq[Long], keyCols: Seq[String]): DataFrame = {
+    val all = deltas.zipWithIndex.map { case (d, i) =>
       scanDelta(d).drop("__b").withColumn("__c", lit(i + 1))
-    }.foldLeft(baseDf)(_ unionByName _)
+    }.foldLeft(base.withColumn("__del", lit(false)).withColumn("__c", lit(0)))(_ unionByName _)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*)
     all.withColumn("__mc", max(col("__c")).over(w))
       .filter(col("__c") === col("__mc") && !col("__del"))
       .drop("__del", "__c", "__mc")
   }
+
+  /** The delta snapshot `id` resolved over its chain's base. */
+  private def resolveDelta(id: Long, info: Map[String, String], parentKey: String): DataFrame =
+    overlay(readAt(chainBase(id, parentKey)), deltaChain(id, parentKey),
+      info("keyCols").split(",").toSeq)
 
   /** Time travel: read the table as of a given snapshot id.
     *
@@ -155,44 +161,10 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * bucket manifest and no data dirs of its own — that case returns
     * an empty frame with the schema recorded in the snapshot metadata
     * instead of pointing spark.read at a dir with no parquet files. */
-  /** True if `id` is a merge-on-read delta over a Z-ORDERED base (see
-    * [[mergeIntoZDelta]]). */
-  private def isZDelta(info: Map[String, String]): Boolean =
-    info.contains("zdeltaParent")
-
-  private def zDeltaChain(id: Long): Seq[Long] =
-    snapshotInfo(id).get("zdeltaParent") match {
-      case Some(p) => zDeltaChain(p.toLong) :+ id
-      case None => Nil
-    }
-
-  private def zChainBase(id: Long): Long =
-    snapshotInfo(id).get("zdeltaParent") match {
-      case Some(p) => zChainBase(p.toLong)
-      case None => id
-    }
-
-  /** Merge-on-read resolution over a z-ordered base: base scan ∪ delta
-    * files, LATEST commit wins per key, tombstones drop. Same shape as
-    * [[resolveDelta]] — one shuffle on the key. */
-  private def resolveZDelta(id: Long): DataFrame = {
-    val keyCols = snapshotInfo(id)("keyCols").split(",").toSeq
-    val baseDf = readAt(zChainBase(id))
-      .withColumn("__del", lit(false)).withColumn("__c", lit(0))
-    val all = zDeltaChain(id).zipWithIndex.map { case (d, i) =>
-      scanDelta(d).withColumn("__c", lit(i + 1))
-    }.foldLeft(baseDf)(_ unionByName _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-    all.withColumn("__mc", max(col("__c")).over(w))
-      .filter(col("__c") === col("__mc") && !col("__del"))
-      .drop("__del", "__c", "__mc")
-  }
-
   def readAt(id: Long): DataFrame = {
     val info = snapshotInfo(id)
-    if (isDelta(info)) return resolveDelta(id, info)
-    if (isZDelta(info)) return resolveZDelta(id)
+    if (isDelta(info)) return resolveDelta(id, info, DeltaParent)
+    if (isZDelta(info)) return resolveDelta(id, info, ZDeltaParent)
     val buckets = bucketPaths(id)
     if (buckets.nonEmpty)
       scan(info, buckets.values.map(_.toString).toSeq.sorted)
@@ -471,8 +443,8 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     val bboxPred =
       col(lonCol) >= minLon && col(lonCol) <= maxLon &&
         col(latCol) >= minLat && col(latCol) <= maxLat
-    val chain = if (isZDelta(info)) zDeltaChain(cur) else Nil
-    val baseId = if (chain.nonEmpty) zChainBase(cur) else cur
+    val chain = if (isZDelta(info)) deltaChain(cur, ZDeltaParent) else Nil
+    val baseId = if (chain.nonEmpty) chainBase(cur, ZDeltaParent) else cur
     val ivs = graft.geo.ZOrder.zIntervals(minLon, maxLon, minLat, maxLat, bits)
     val all = bucketPaths(baseId)
     val baseScan: Option[DataFrame] =
@@ -494,17 +466,8 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     // merge-on-read: the pruned base still enjoys the manifest skip;
     // delta rows join UNFILTERED so a row moved OUT of the box still
     // suppresses its stale base copy — the bbox re-applies at the end
-    val keyCols = info("keyCols").split(",").toSeq
-    val base0 = baseScan.getOrElse(empty) // schema DDL already carries zval
-      .withColumn("__del", lit(false)).withColumn("__c", lit(0))
-    val withDeltas = chain.zipWithIndex.map { case (d, i) =>
-      scanDelta(d).withColumn("__c", lit(i + 1))
-    }.foldLeft(base0)(_ unionByName _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-    withDeltas.withColumn("__mc", max(col("__c")).over(w))
-      .filter(col("__c") === col("__mc") && !col("__del"))
-      .drop("__del", "__c", "__mc")
+    // (the schema DDL of `empty` already carries zval)
+    overlay(baseScan.getOrElse(empty), chain, info("keyCols").split(",").toSeq)
       .filter(bboxPred)
   }
 
@@ -717,7 +680,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     require(tableKeys.split(",").toSeq == keyCols,
       s"table bucketed on [$tableKeys], merge keyed on [${keyCols.mkString(",")}]")
     val numBuckets = info("numBuckets").toInt
-    if (deltaChain(cur).length + 1 > compactEvery)
+    if (deltaChain(cur, DeltaParent).length + 1 > compactEvery)
       compactWith(updates, keyCols, numBuckets, deleteMarker, keys)
     else {
       val marked = deleteMarker match {
@@ -753,7 +716,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
           "bucketRows" -> info.getOrElse("bucketRows", ""),
           "bucketBytes" -> info.getOrElse("bucketBytes", ""),
           "rowCountApprox" -> "true",
-          "deltaParent" -> cur.toString))
+          DeltaParent -> cur.toString))
       MergeResult(sid, updateRows)
     }
   }
@@ -803,7 +766,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     }
     val rows0 = withDel.drop("zval")
       .withColumn("zval", graft.geo.ZOrder.zValue(col(lonCol), col(latCol), zBits))
-    if (zDeltaChain(cur).length + 1 > compactEvery)
+    if (deltaChain(cur, ZDeltaParent).length + 1 > compactEvery)
       return compactZWith(rows0, keyCols, lonCol, latCol, zBits,
         info("numBuckets").toInt)
     val id = cur + 1
@@ -828,7 +791,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
         "bucketRows" -> info.getOrElse("bucketRows", ""),
         "bucketBytes" -> info.getOrElse("bucketBytes", ""),
         "rowCountApprox" -> "true",
-        "zdeltaParent" -> cur.toString))
+        ZDeltaParent -> cur.toString))
     MergeResult(sid, updateRows)
   }
 
@@ -840,7 +803,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     val info = snapshotInfo(cur)
     require(isZDelta(info), s"no z-delta chain to compact at $root")
     val Array(lonCol, latCol) = info("zorder").split(",")
-    commitZOrdered(resolveZDelta(cur), "compact", lonCol, latCol,
+    commitZOrdered(resolveDelta(cur, info, ZDeltaParent), "compact", lonCol, latCol,
       info("zbits").toInt, info("numBuckets").toInt)
   }
 
@@ -866,8 +829,8 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * member's bucketSrc in turn). */
   private def referencedBy(keep: Seq[Long]): Set[Long] =
     keep.flatMap { id =>
-      val chain = (deltaChain(id) :+ chainBase(id)) ++
-        (zDeltaChain(id) :+ zChainBase(id)) :+ id
+      val chain = Seq(DeltaParent, ZDeltaParent)
+        .flatMap(k => deltaChain(id, k) :+ chainBase(id, k)) :+ id
       chain ++ chain.flatMap(c => bucketSources(c).values)
     }.toSet
 
@@ -917,8 +880,8 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     val info = snapshotInfo(snap)
     val dirs: Seq[(Int, Path)] =
       if (isDelta(info))
-        (deltaChain(snap).map(d => -1 -> dataDir(d))) ++
-          bucketPaths(chainBase(snap)).toSeq
+        (deltaChain(snap, DeltaParent).map(d => -1 -> dataDir(d))) ++
+          bucketPaths(chainBase(snap, DeltaParent)).toSeq
       else if (bucketPaths(snap).nonEmpty) bucketPaths(snap).toSeq
       else Seq(-1 -> dataDir(snap))
     val rows = dirs.flatMap { case (b, d) =>

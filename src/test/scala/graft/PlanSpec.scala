@@ -35,7 +35,7 @@ class PlanSpec extends SparkTestBase {
       synth.SynthUniverse.wayMembers(spark, sfSmall),
       synth.SynthUniverse.nodes(spark, sfSmall))
     val plan = formatted(
-      spatial.SpatialJoin.pipJoin(pts, polys, res = 6, mode = "broadcast"))
+      spatial.SpatialJoin.pipJoin(pts, polys, res = 6, mode = "auto"))
     assert(plan.contains("BroadcastHashJoin"), plan.linesIterator.take(30).mkString("\n"))
   }
 

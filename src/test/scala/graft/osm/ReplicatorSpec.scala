@@ -306,10 +306,21 @@ class ReplicatorSpec extends SparkTestBase {
         val bad = Seq(1).toDF("not_a_winner")
         intercept[org.apache.spark.sql.AnalysisException](
           new Replicator(spark, root).applyOps(bad))
-        bad.unpersist()
         assert(state === caller, "after a throw")
       }
     } finally set(saved)
+  }
+
+  test("a throwing applyOps leaves nothing cached") {
+    val root = fresh("throw-cache")
+    metaStoreBatch(root)
+    // no kind/id/action columns: fails after applyOps has cached its input
+    val bad = Seq(1).toDF("not_a_winner")
+    intercept[org.apache.spark.sql.AnalysisException](
+      new Replicator(spark, root).applyOps(bad))
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    assert(spark.sharedState.cacheManager.lookupCachedData(castToImpl(bad)).isEmpty,
+      "applyOps left its input cached after a throw")
   }
 
   test("a modify whose rebuild is empty removes the object: layers == fold, triples == derivation") {

@@ -2,13 +2,16 @@ package graft.spatial
 
 import scala.util.Random
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 import graft.SparkTestBase
 import graft.geo.GeoFunctions
 
 /** The salted partitioned cell join must emit exactly the rows of the
-  * unsalted and the broadcast joins, with salting actually firing: the
+  * unsalted join and of the `auto` join, which the planner broadcasts on
+  * this small fixture, with salting actually firing: the
   * hot-cell threshold is low enough that the histogram pre-pass salts
   * the dense cells. Rings are random concave stars, and points include
   * every ring vertex and edge midpoint, so on-edge hits (covers
@@ -17,13 +20,13 @@ import graft.geo.GeoFunctions
   * is exact in doubles, and
   * some points fall on cell edges (res-8 cells are binary fractions of
   * a degree wide). */
-class SaltedPipJoinSpec extends SparkTestBase {
+class SaltedPipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val Res = 8
   private val Salt = 8
   private val Hot = 40L
-  private val RingDicts = Seq("inline", "broadcast", "shuffle")
+  private val RingDicts = Seq("inline", "broadcast")
 
   private def grid(v: Double): Double = math.rint(v * 64) / 64
 
@@ -151,23 +154,28 @@ class SaltedPipJoinSpec extends SparkTestBase {
       val salted = rowsOf(join(pointsDf, "partitioned", Salt, rd))
       assert(salted === expected(name))
       assert(rowsOf(join(pointsDf, "partitioned", 1, rd)) === salted)
-      assert(rowsOf(join(pointsDf, "broadcast", 1, rd)) === salted)
+      // `auto` on this small fixture: the planner broadcasts the cell join
+      val auto = join(pointsDf, "auto", 1, rd)
+      assert(rowsOf(auto) === salted)
+      val joins = executedJoins(auto)
+      assert(joins.exists { case (keys, _, bhj) => keys == Set("cell") && bhj }, joins)
     }
 
-  /** Asserts one action of `join` in `mode` with `salt` evaluates each
-    * point row once. A deterministic identity on lon counts the rows it
-    * sees: the histogram, both of its broadcasts and the join's point
-    * side all need lon, so a re-derived point side shows up as a
-    * multiple, and so does a cell key the optimizer re-derives for an
-    * inferred not-null filter. */
-  private def assertPointsEvaluatedOnce(mode: String, salt: Int): Unit =
+  /** Asserts one action of `join` in `mode` with `salt` and `ringDict`
+    * evaluates each point row once. A deterministic identity on lon
+    * counts the rows it sees: the histogram, both of its broadcasts and
+    * the join's point side all need lon, so a re-derived point side
+    * shows up as a multiple, and so does a cell key the optimizer
+    * re-derives for an inferred not-null filter. */
+  private def assertPointsEvaluatedOnce(mode: String, salt: Int,
+      ringDict: String = "inline"): Unit =
     for ((name, join) <- joins) {
       val seen = spark.sparkContext.longAccumulator(s"$name points seen")
       val tap = udf((lon: Double) => { seen.add(1L); lon })
       val pts = pointsDf.withColumn("lon", tap(col("lon")))
-      join(pts, mode, salt, "inline").write.format("noop").mode("overwrite").save()
+      join(pts, mode, salt, ringDict).write.format("noop").mode("overwrite").save()
       assert(seen.value === points.length.toLong,
-        s"$name, $mode, salt $salt evaluated ${seen.value} point rows for ${points.length} points")
+        s"$name, $mode, salt $salt, $ringDict evaluated ${seen.value} point rows for ${points.length} points")
     }
 
   test("one action of the salted join evaluates each point row once") {
@@ -176,7 +184,45 @@ class SaltedPipJoinSpec extends SparkTestBase {
 
   test("one action of the unsalted, auto and broadcast joins evaluates each point row once") {
     assertPointsEvaluatedOnce("partitioned", 1)
+    // on this fixture the planner broadcasts the auto cell join
     assertPointsEvaluatedOnce("auto", 1)
-    assertPointsEvaluatedOnce("broadcast", 1)
+    assertPointsEvaluatedOnce("partitioned", 1, ringDict = "broadcast")
+  }
+
+  /** (key names, whether the condition holds `pip_contains`, whether it
+    * is a broadcast hash join) of every join one action of `df`
+    * executed; key names as the benchmark's trace reads them. */
+  private def executedJoins(df: DataFrame): Seq[(Set[String], Boolean, Boolean)] = {
+    df.collect()
+    collect(df.queryExecution.executedPlan) { case j: BaseJoinExec =>
+      (j.leftKeys.flatMap(_.references.map(_.name)).toSet,
+        j.condition.exists(_.toString.contains("pip_contains")),
+        j.isInstanceOf[BroadcastHashJoinExec])
+    }
+  }
+
+  private def saltedPipJoin(ringDict: String): DataFrame =
+    SpatialJoin.pipJoin(pointsDf, polysDf, Res, mode = "partitioned", salt = Salt,
+      hotThreshold = Hot, ringDict = ringDict)
+
+  test("salted, ringDict=broadcast: one {cell, s} join feeds one refining {way_id} join") {
+    val joins = executedJoins(saltedPipJoin("broadcast")).map { case (k, pip, _) => k -> pip }
+    assert(joins.filter(_._1 == Set("cell", "s")) === Seq(Set("cell", "s") -> false), joins)
+    assert(joins.filter(_._1 == Set("way_id")) === Seq(Set("way_id") -> true), joins)
+  }
+
+  test("salted, ringDict=inline: one cell join, and it carries pip_contains") {
+    val joins = executedJoins(saltedPipJoin("inline")).map { case (k, pip, _) => k -> pip }
+    assert(joins.filter(_._2) === Seq(Set("cell", "s") -> true), joins)
+    assert(!joins.exists(_._1 == Set("way_id")), joins)
+  }
+
+  test("ringDict=shuffle and mode=broadcast are rejected, naming the valid values") {
+    val rd = intercept[IllegalArgumentException](
+      SpatialJoin.pipJoin(pointsDf, polysDf, Res, ringDict = "shuffle"))
+    assert(rd.getMessage.contains("ringDict must be inline or broadcast, got 'shuffle'"))
+    val mode = intercept[IllegalArgumentException](
+      SpatialJoin.pipJoinMulti(pointsDf, ringsDf, Res, mode = "broadcast"))
+    assert(mode.getMessage.contains("mode must be auto or partitioned, got 'broadcast'"))
   }
 }
