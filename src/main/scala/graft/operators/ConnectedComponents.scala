@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,20 +21,6 @@ import org.apache.spark.sql.functions._
   * contract as q49's label propagation and the recursive-CTE oracle.
   */
 object ConnectedComponents {
-
-  /** Driver fast-path edge cap: edge sets at or below this size are
-    * solved by a single-collect union-find instead of the distributed
-    * star rounds. Rationale (r6 optimization, guide §1.2/§5): the IVM
-    * cluster family feeds TINY touched-component subgraphs (tens to
-    * thousands of edges) into the star loop, where each of the 5-15
-    * rounds costs several fixed-overhead Spark jobs (window, distinct,
-    * count, except) — seconds of wall for microseconds of actual work.
-    * The collect is bounded by this constant (same pattern as
-    * knnBroadcastLimit): it never scales with the corpus, and anything
-    * bigger takes the unchanged O(log n)-round distributed path.
-    * Override per session via spark.graft.ccDriverEdgeCap (0 disables).
-    */
-  val DefaultDriverEdgeCap = 1000000L
 
   /** Single-pass min-root union-find over collected (u, v) edges:
     * roots only ever link under smaller ids, so each fixpoint root IS
@@ -63,13 +49,10 @@ object ConnectedComponents {
 
   /** @param pairs two columns (u, v) of undirected edges (self-loops
     *              ignored); any additional columns are dropped
-    * @param driverEdgeCap override for [[DefaultDriverEdgeCap]]
-    *              (-1 = session conf / default; 0 = force distributed)
     * @return (labels(doc_id, cluster_id), rounds taken — 0 on the
-    *         driver fast path)
+    *         [[DriverGraph]] fast path, a union-find over the edges)
     */
-  def alternatingStar(pairs: DataFrame, maxRounds: Int = 30,
-      driverEdgeCap: Long = -1L): (DataFrame, Int) = {
+  def alternatingStar(pairs: DataFrame, maxRounds: Int = 30): (DataFrame, Int) = {
     // localCheckpoint (not cache) at the input boundary and EVERY
     // round: each round's plan references `edges` four times, so
     // without plan TRUNCATION the logical tree grows 4^rounds on top
@@ -80,30 +63,13 @@ object ConnectedComponents {
     // edge set the round computes anyway.
     var edges = pairs.select(col("u"), col("v"))
       .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    val spark = pairs.sparkSession
-    val cap =
-      if (driverEdgeCap >= 0L) driverEdgeCap
-      else spark.conf.getOption("spark.graft.ccDriverEdgeCap")
-        .map(_.toLong).getOrElse(DefaultDriverEdgeCap)
-    val bothLong = edges.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (cap > 0 && bothLong && edges.count() <= cap) {
-      // the count above is on checkpointed data (no recompute); the
-      // collect is bounded by cap — never corpus-scale
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val labelRows = unionFindLabels(es)
-        .map { case (n, l) => org.apache.spark.sql.Row(n, l) }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("cluster_id",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      val labels = spark.createDataFrame(
-        spark.sparkContext.parallelize(labelRows.toIndexedSeq,
-          math.max(1, math.min(spark.sparkContext.defaultParallelism,
-            1 + labelRows.length / 10000))), schema)
-      edges.unpersist()
-      return (labels, 0)
+    DriverGraph.collectUnder(edges) match {
+      case Some(rows) =>
+        edges.unpersist()
+        val labels = unionFindLabels(DriverGraph.pairs(rows))
+          .map { case (n, l) => Row(n, l) }
+        return (DriverGraph.toDf(pairs.sparkSession, Seq("doc_id", "cluster_id"), labels), 0)
+      case None =>
     }
     var converged = false
     var iter = 0

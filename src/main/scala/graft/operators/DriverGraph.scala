@@ -1,56 +1,74 @@
 package graft.operators
 
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Shared plumbing for the bounded DRIVER fast paths of the iterative
-  * graph operators (r6 optimization wave 2 — same contract as
-  * [[ConnectedComponents.DefaultDriverEdgeCap]] / knnBroadcastLimit):
-  * a closed-form or touched-component graph whose edge set fits under
-  * a constant cap is collected once and solved by the IDENTICAL
-  * recurrence in tight JVM code, skipping 2k+ rounds of fixed-overhead
-  * Spark jobs (each round = join + distinct + checkpoint ≈ 0.2-0.5 s
-  * of scheduler/exchange latency for microseconds of actual work on
-  * these sizes — guide §1.2: fix the algorithmic shape first, and the
-  * shape here IS "don't run a distributed round on 15k edges").
+/** The small-graph module: every bounded DRIVER fast path of the
+  * iterative graph operators and queries goes through it. Eight paths
+  * use it: [[ConnectedComponents.alternatingStar]],
+  * [[KCore.membership]], [[Mis.of]], [[IncrementalBfs.maintain]], and
+  * GraphQueries' `bfsHops` (q161, q253, q264), q251, q274 and q291.
   *
-  * The collect is bounded by the cap (default 1e6 edges), never
-  * corpus-scale: bigger inputs take the unchanged distributed path,
-  * so the 100 TB story is intact. Specs pin fast == distributed on
-  * randomized graphs per operator.
+  * Each path has one shape. [[collectUnder]] returns `Some(rows)`, the
+  * driver runs the IDENTICAL recurrence on those rows, and [[toDf]]
+  * hands the result back as a small frame. `None` means the unchanged
+  * distributed rounds run, with the same round bounds and the same
+  * "did not converge" failures. The point is to skip rounds of
+  * fixed-overhead Spark jobs (a join, a distinct and a checkpoint each,
+  * 0.2–0.5 s of scheduling) that do microseconds of work on graphs of
+  * thousands of edges.
+  *
+  * The cap is one session conf, `spark.graft.graphDriverEdgeCap`
+  * (default 1e6 rows; 0 forces every distributed path), read only by
+  * [[edgeCap]]. The gate IS the collect: one `limit(cap + 1)` job,
+  * so a frame over the cap costs a bounded read, never a full
+  * `count()`, and nothing collected scales with the corpus.
+  * GraphFastPathSpec, KCoreSpec, MisSpec and ConnectedComponentsSpec
+  * pin fast == distributed for every path.
   */
 object DriverGraph {
 
-  val DefaultEdgeCap = 1000000L
+  type Adjacency = mutable.LongMap[mutable.ArrayBuffer[Long]]
 
-  /** Per-session override: spark.graft.graphDriverEdgeCap (0 disables
-    * every driver graph fast path that routes through this helper). */
+  /** Rows a fast path may collect from one frame. */
   def edgeCap(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.graphDriverEdgeCap")
-      .map(_.toLong).getOrElse(DefaultEdgeCap)
+      .map(_.toLong).getOrElse(1000000L)
 
-  /** Collect a 2-long-column frame as edge pairs. Caller must have
-    * bounded the size (count <= cap) first. */
-  def collectEdges(df: DataFrame): Array[(Long, Long)] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1)))
-
-  def collectIds(df: DataFrame): Array[Long] =
-    df.collect().map(_.getLong(0))
-
-  /** Multi-source K-bounded BFS over an adjacency list — the driver
-    * mirror of the frontier⋈links round loop: hops = first round a
-    * node is reached, seeds at 0, unreached absent. */
-  def bfs(seeds: Array[Long], edges: Array[(Long, Long)], k: Int): scala.collection.mutable.LongMap[Long] = {
-    val adj = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]()
-    edges.foreach { case (s, d) =>
-      adj.getOrElseUpdate(s, new scala.collection.mutable.ArrayBuffer[Long]()) += d
+  /** The rows of `frame` if it has at most [[edgeCap]] of them and only
+    * LongType columns; `None` (take the distributed path) otherwise or
+    * when the cap is 0. One bounded job either way. */
+  def collectUnder(frame: DataFrame): Option[Array[Row]] = {
+    val cap = edgeCap(frame.sparkSession)
+    if (cap <= 0 || !frame.schema.fields.forall(_.dataType == LongType)) None
+    else {
+      val rows = frame.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
+      if (rows.length <= cap) Some(rows) else None
     }
-    val dist = new scala.collection.mutable.LongMap[Long]()
-    var frontier = new scala.collection.mutable.ArrayBuffer[Long]()
+  }
+
+  /** The first two columns of collected rows as (src, dst) pairs. */
+  def pairs(rows: Array[Row]): Array[(Long, Long)] =
+    rows.map(r => (r.getLong(0), r.getLong(1)))
+
+  def adjacency(edges: Iterable[(Long, Long)]): Adjacency = {
+    val adj: Adjacency = new mutable.LongMap()
+    edges.foreach { case (s, d) =>
+      adj.getOrElseUpdate(s, new mutable.ArrayBuffer[Long]()) += d }
+    adj
+  }
+
+  /** Multi-source K-bounded BFS — the driver mirror of the
+    * frontier⋈links round loop: hops = first round a node is reached,
+    * seeds at 0, unreached absent. */
+  def bfs(seeds: Iterable[Long], adj: Adjacency, k: Int): mutable.LongMap[Long] = {
+    val dist = new mutable.LongMap[Long]()
+    var frontier = new mutable.ArrayBuffer[Long]()
     seeds.foreach { s => if (!dist.contains(s)) { dist.update(s, 0L); frontier += s } }
     var h = 1L
     while (h <= k && frontier.nonEmpty) {
-      val next = new scala.collection.mutable.ArrayBuffer[Long]()
+      val next = new mutable.ArrayBuffer[Long]()
       frontier.foreach { u =>
         adj.get(u).foreach(_.foreach { v =>
           if (!dist.contains(v)) { dist.update(v, h); next += v }
@@ -62,17 +80,23 @@ object DriverGraph {
     dist
   }
 
-  /** (doc_id, hops) rows back to a small distributed frame — same
-    * partition sizing as the CC fast path. */
-  def toHopsDf(spark: SparkSession, rows: Array[(Long, Long)],
-      names: (String, String) = ("doc_id", "hops")): DataFrame = {
-    val schema = StructType(Seq(
-      StructField(names._1, LongType, nullable = true),
-      StructField(names._2, LongType, nullable = true)))
+  /** Driver rows back to a small frame of nullable LongType columns.
+    * Each slice ships as one primitive array: Java-serializing boxed
+    * Rows into the tasks cost ~0.25 s per 150k rows (q291's registers
+    * at sf0.1). */
+  def toDf(spark: SparkSession, names: Seq[String], rows: Array[Row]): DataFrame = {
+    val w = names.length
+    val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism,
+      1 + rows.length / 10000))
+    val flat = rows.grouped(math.max(1, (rows.length + slices - 1) / slices))
+      .map(_.flatMap(r => Array.tabulate(w)(r.getLong))).toSeq
     spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        rows.toIndexedSeq.map(r => Row(r._1, r._2)),
-        math.max(1, math.min(spark.sparkContext.defaultParallelism,
-          1 + rows.length / 10000))), schema)
+      spark.sparkContext.parallelize(flat, math.max(1, flat.size))
+        .flatMap(_.grouped(w).map(a => Row.fromSeq(a.toSeq))),
+      StructType(names.map(StructField(_, LongType, nullable = true))))
   }
+
+  /** (doc_id, hops) rows, the BFS family's result frame. */
+  def toHopsDf(spark: SparkSession, rows: Iterable[(Long, Long)]): DataFrame =
+    toDf(spark, Seq("doc_id", "hops"), rows.map { case (d, h) => Row(d, h) }.toArray)
 }

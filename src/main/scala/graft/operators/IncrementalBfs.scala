@@ -31,64 +31,39 @@ object IncrementalBfs {
   def maintain(postDocs: DataFrame, baseLinks: DataFrame,
       postLinksAll: DataFrame, changedSrc: DataFrame, stored: DataFrame,
       seedsPost: DataFrame, k: Int): DataFrame = {
-    // r6 driver fast path (DriverGraph contract): under the edge cap,
-    // run the IDENTICAL halo + relaxation recurrence below on the
-    // collected graph — the distributed path pays ~2k rounds of
-    // fixed-overhead jobs (join + distinct + eager checkpoint each)
-    // for microseconds of work at touched-component sizes. Everything
-    // collected is bounded by the cap (edges) or by the node set it
-    // implies; bigger graphs take the unchanged distributed rounds.
-    // GraphFastPathSpec pins fast == distributed on random rewires.
-    {
-      val spark = postDocs.sparkSession
-      val cap = DriverGraph.edgeCap(spark)
-      if (cap > 0 &&
-          baseLinks.count() + postLinksAll.count() <= cap &&
-          postDocs.count() <= cap) {
-        val live = new scala.collection.mutable.LongMap[Boolean]()
-        DriverGraph.collectIds(postDocs.select(col("doc_id")))
-          .foreach(live.update(_, true))
-        val baseE = DriverGraph.collectEdges(baseLinks.select(col("src"), col("dst")))
-        val postEAll = DriverGraph.collectEdges(postLinksAll.select(col("src"), col("dst")))
-        val changed = new scala.collection.mutable.LongMap[Boolean]()
-        DriverGraph.collectIds(changedSrc.select(col("src")))
-          .foreach(changed.update(_, true))
-        val storedM = stored.select(col("doc_id"), col("hops")).collect()
-          .map(r => (r.getLong(0), r.getLong(1)))
-        val seedSet = new scala.collection.mutable.LongMap[Boolean]()
-        DriverGraph.collectIds(seedsPost.select(col("doc_id")))
-          .foreach(seedSet.update(_, true))
+    // [[DriverGraph]] fast path: the IDENTICAL halo + relaxation
+    // recurrence below, on the collected graph. Base and post edges
+    // share one gate, tagged 0/1.
+    val tagged = baseLinks.select(col("src"), col("dst"), lit(0L).as("post"))
+      .unionByName(postLinksAll.select(col("src"), col("dst"), lit(1L).as("post")))
+    def ids(df: DataFrame, c: String): Option[Array[Long]] =
+      DriverGraph.collectUnder(df.select(col(c))).map(_.map(_.getLong(0)))
+    val collected = for {
+      edges <- DriverGraph.collectUnder(tagged)
+      liveIds <- ids(postDocs, "doc_id")
+      changedIds <- ids(changedSrc, "src")
+      storedRows <- DriverGraph.collectUnder(stored.select(col("doc_id"), col("hops")))
+      seedIds <- ids(seedsPost, "doc_id")
+    } yield (edges, liveIds.toSet, changedIds.toSet, DriverGraph.pairs(storedRows), seedIds.toSet)
+    collected match {
+      case Some((edges, live, changed, storedM, seedSet)) =>
+        val (baseRows, postRows) = edges.partition(_.getLong(2) == 0L)
+        val baseE = DriverGraph.pairs(baseRows)
+        val postEAll = DriverGraph.pairs(postRows)
         // dangling-dst removal, exactly as the distributed postLinks
-        val postE = postEAll.filter(e => live.contains(e._2))
+        val postE = postEAll.filter(e => live(e._2))
         // d0 = old ∪ new out-neighbors of the changed sources
-        val d0 = (baseE ++ postEAll).filter(e => changed.contains(e._1)).map(_._2).distinct
+        val unionE = baseE ++ postEAll
+        val d0 = unionE.filter(e => changed(e._1)).map(_._2).distinct
         // halo = (k-1)-ball around d0 in the union graph
-        val unionAdj = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]()
-        (baseE ++ postEAll).foreach { case (s, d) =>
-          unionAdj.getOrElseUpdate(s, new scala.collection.mutable.ArrayBuffer[Long]()) += d
-        }
-        val halo = new scala.collection.mutable.LongMap[Boolean]()
-        var frontier = new scala.collection.mutable.ArrayBuffer[Long]()
-        d0.foreach { x => halo.update(x, true); frontier += x }
-        for (_ <- 1 until k) {
-          val next = new scala.collection.mutable.ArrayBuffer[Long]()
-          frontier.foreach { u =>
-            unionAdj.get(u).foreach(_.foreach { v =>
-              if (!halo.contains(v)) { halo.update(v, true); next += v }
-            })
-          }
-          frontier = next
-        }
+        val halo = DriverGraph.bfs(d0, DriverGraph.adjacency(unionE), k - 1)
         // passThrough = live stored nodes outside the halo
-        val passThrough = storedM.filter { case (n, _) =>
-          live.contains(n) && !halo.contains(n) }
+        val passThrough = storedM.filter { case (n, _) => live(n) && !halo.contains(n) }
         // relaxation over post edges INTO the live halo
-        val edgesIn = postE.filter(e => live.contains(e._2) && halo.contains(e._2))
-        val preds = new scala.collection.mutable.LongMap[Long]()
-        passThrough.foreach { case (n, h) => preds.update(n, h) }
+        val edgesIn = postE.filter(e => halo.contains(e._2))
+        val preds = scala.collection.mutable.LongMap(passThrough.toIndexedSeq: _*)
         val est = new scala.collection.mutable.LongMap[Long]()
-        halo.keys.foreach { n =>
-          if (live.contains(n) && seedSet.contains(n)) est.update(n, 0L) }
+        halo.keys.foreach { n => if (live(n) && seedSet(n)) est.update(n, 0L) }
         for (_ <- 1 to k) {
           val withEst = preds.clone()
           est.foreach { case (n, h) => withEst.update(n, h) }
@@ -103,9 +78,9 @@ object IncrementalBfs {
             if (!est.get(n).exists(_ <= c)) est.update(n, c)
           }
         }
-        val out = passThrough ++ est.toArray.filter(_._2 <= k)
-        return DriverGraph.toHopsDf(spark, out)
-      }
+        return DriverGraph.toHopsDf(postDocs.sparkSession,
+          passThrough ++ est.toArray.filter(_._2 <= k))
+      case None =>
     }
     // edges to a deleted dst are dangling — traversal may not continue
     val postLinks = postLinksAll

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed k-core decomposition (fixed-k membership) by iterative
@@ -28,92 +28,75 @@ object KCore {
     * (columns u, v; each undirected edge once), with their in-core
     * degree. Returns (node, deg).
     *
-    * r6: edge sets at or below the bounded driver cap (the
-    * [[ConnectedComponents.DefaultDriverEdgeCap]] convention —
-    * `spark.graft.ccDriverEdgeCap`, 0 disables) run the IDENTICAL
-    * synchronized peel loop on the driver — same rounds, same
-    * fail-loud bound, same output — skipping the per-round fixed
-    * Spark-job overhead that dominates small inputs; bigger graphs
-    * take the unchanged distributed path. */
-  def membership(edges: DataFrame, k: Int, maxRounds: Int,
-      driverEdgeCap: Long = -1L): DataFrame = {
+    * Under the [[DriverGraph]] cap the driver runs the IDENTICAL
+    * synchronized peel loop — same rounds, same fail-loud bound, same
+    * output. */
+  def membership(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
-    val e = edges.select(col("u"), col("v")).cache()
-    val cap =
-      if (driverEdgeCap >= 0L) driverEdgeCap
-      else spark.conf.getOption("spark.graft.ccDriverEdgeCap")
-        .map(_.toLong).getOrElse(ConnectedComponents.DefaultDriverEdgeCap)
-    val bothLong = e.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (cap > 0 && bothLong && e.count() <= cap) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      e.unpersist()
-      var surv = es.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-      var n = surv.size
+    val uv = edges.select(col("u"), col("v"))
+    DriverGraph.collectUnder(uv) match {
+      case Some(rows) =>
+        val es = DriverGraph.pairs(rows)
+        var surv = es.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
+        var n = surv.size
+        var rounds = 0
+        var stable = false
+        while (!stable) {
+          if (rounds >= maxRounds)
+            throw new IllegalStateException(
+              s"k-core peel did not converge in $maxRounds rounds (still $n vertices)")
+          val deg = new scala.collection.mutable.LongMap[Int]()
+          es.foreach { case (u, v) =>
+            if (surv(u) && surv(v)) {
+              deg(u) = deg.getOrElse(u, 0) + 1
+              deg(v) = deg.getOrElse(v, 0) + 1
+            }
+          }
+          val next = deg.iterator.collect { case (x, d) if d >= k => x }.toSet
+          stable = next.size == n
+          surv = next
+          n = next.size
+          rounds += 1
+        }
+        val deg = new scala.collection.mutable.LongMap[Long]()
+        es.foreach { case (u, v) =>
+          if (surv(u) && surv(v)) {
+            deg(u) = deg.getOrElse(u, 0L) + 1L
+            deg(v) = deg.getOrElse(v, 0L) + 1L
+          }
+        }
+        return DriverGraph.toDf(spark, Seq("node", "deg"),
+          deg.toArray.map { case (x, d) => Row(x, d) })
+      case None =>
+    }
+    val e = uv.cache()
+    try {
+      val ends = e.select(col("u").as("x")).unionByName(e.select(col("v").as("x")))
+      var surv = ends.distinct().localCheckpoint()
+      var n = surv.count()
       var rounds = 0
       var stable = false
       while (!stable) {
         if (rounds >= maxRounds)
           throw new IllegalStateException(
             s"k-core peel did not converge in $maxRounds rounds (still $n vertices)")
-        val deg = new scala.collection.mutable.LongMap[Int]()
-        es.foreach { case (u, v) =>
-          if (surv(u) && surv(v)) {
-            deg(u) = deg.getOrElse(u, 0) + 1
-            deg(v) = deg.getOrElse(v, 0) + 1
-          }
-        }
-        val next = deg.iterator.collect { case (x, d) if d >= k => x }.toSet
-        stable = next.size == n
+        val e2 = e
+          .join(surv.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
+          .join(surv.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
+        val deg = e2.select(col("u").as("x")).unionByName(e2.select(col("v").as("x")))
+          .groupBy(col("x")).agg(count(lit(1)).as("d"))
+        val next = deg.filter(col("d") >= k).select(col("x")).localCheckpoint()
+        val m = next.count()
+        stable = m == n
         surv = next
-        n = next.size
+        n = m
         rounds += 1
       }
-      val deg = new scala.collection.mutable.LongMap[Long]()
-      es.foreach { case (u, v) =>
-        if (surv(u) && surv(v)) {
-          deg(u) = deg.getOrElse(u, 0L) + 1L
-          deg(v) = deg.getOrElse(v, 0L) + 1L
-        }
-      }
-      val rows = deg.toArray.map { case (x, d) => org.apache.spark.sql.Row(x, d) }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("deg",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq,
-          math.max(1, math.min(spark.sparkContext.defaultParallelism,
-            1 + rows.length / 10000))), schema)
-    }
-    val ends = e.select(col("u").as("x")).unionByName(e.select(col("v").as("x")))
-    var surv = ends.distinct().localCheckpoint()
-    var n = surv.count()
-    var rounds = 0
-    var stable = false
-    while (!stable) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"k-core peel did not converge in $maxRounds rounds (still $n vertices)")
       val e2 = e
         .join(surv.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
         .join(surv.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-      val deg = e2.select(col("u").as("x")).unionByName(e2.select(col("v").as("x")))
-        .groupBy(col("x")).agg(count(lit(1)).as("d"))
-      val next = deg.filter(col("d") >= k).select(col("x")).localCheckpoint()
-      val m = next.count()
-      stable = m == n
-      surv = next
-      n = m
-      rounds += 1
-    }
-    val e2 = e
-      .join(surv.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
-      .join(surv.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-    val out = e2.select(col("u").as("node")).unionByName(e2.select(col("v").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    e.unpersist()
-    out
+      e2.select(col("u").as("node")).unionByName(e2.select(col("v").as("node")))
+        .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+    } finally e.unpersist()
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Deterministic maximal-independent-set (Luby's algorithm with FIXED
@@ -30,115 +30,99 @@ object Mis {
   /** MIS vertices of the undirected simple graph `edges` (u, v; each
     * edge once). Returns (node).
     *
-    * r6: edge sets at or below the bounded driver cap (the
-    * [[ConnectedComponents.DefaultDriverEdgeCap]] convention —
-    * `spark.graft.ccDriverEdgeCap`, 0 disables) simulate the IDENTICAL
-    * fixed-priority Luby rounds on the driver — same winners, same
-    * round accounting, same fail-loud bound — skipping the ~6
-    * Spark jobs per round that dominate small inputs; bigger graphs
-    * take the unchanged distributed path. */
-  def of(edges: DataFrame, maxRounds: Int,
-      driverEdgeCap: Long = -1L): DataFrame = {
+    * Under the [[DriverGraph]] cap the driver simulates the IDENTICAL
+    * fixed-priority Luby rounds — same winners, same round accounting,
+    * same fail-loud bound. */
+  def of(edges: DataFrame, maxRounds: Int): DataFrame = {
     val spark = edges.sparkSession
-    val e = edges.select(col("u"), col("v")).cache()
-    val cap =
-      if (driverEdgeCap >= 0L) driverEdgeCap
-      else spark.conf.getOption("spark.graft.ccDriverEdgeCap")
-        .map(_.toLong).getOrElse(ConnectedComponents.DefaultDriverEdgeCap)
-    val bothLong = e.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (cap > 0 && bothLong && e.count() <= cap) {
-      val es = e.collect().map(r => (r.getLong(0), r.getLong(1)))
-      e.unpersist()
-      def priL(x: Long): Long = {
-        val m = (x * 2654435761L) % 1000003L
-        if (m < 0) m + 1000003L else m
-      }
-      var active = es.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-      val mis = scala.collection.mutable.Set[Long]()
+    val uv = edges.select(col("u"), col("v"))
+    DriverGraph.collectUnder(uv) match {
+      case Some(rows) =>
+        val es = DriverGraph.pairs(rows)
+        def priL(x: Long): Long = {
+          val m = (x * 2654435761L) % 1000003L
+          if (m < 0) m + 1000003L else m
+        }
+        var active = es.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
+        val mis = scala.collection.mutable.Set[Long]()
+        var rounds = 0
+        while (active.nonEmpty) {
+          if (rounds >= maxRounds)
+            throw new IllegalStateException(
+              s"MIS did not converge in $maxRounds rounds (still ${active.size} active)")
+          // min (priority, id) over ACTIVE neighbors, per active vertex
+          val nbrMin = new scala.collection.mutable.LongMap[(Long, Long)]()
+          def upd(x: Long, o: Long): Unit = {
+            val cand = (priL(o), o)
+            val cur = nbrMin.getOrElse(x, null)
+            if (cur == null || cand._1 < cur._1 ||
+              (cand._1 == cur._1 && cand._2 < cur._2)) nbrMin(x) = cand
+          }
+          es.foreach { case (u, v) =>
+            if (active(u) && active(v)) { upd(u, v); upd(v, u) }
+          }
+          val winners = active.filter { x =>
+            nbrMin.get(x) match {
+              case None => true
+              case Some((p, i)) =>
+                val px = priL(x)
+                px < p || (px == p && x < i)
+            }
+          }
+          val killed = scala.collection.mutable.Set[Long]()
+          es.foreach { case (u, v) =>
+            if (active(u) && active(v)) {
+              if (winners(u)) killed += v
+              if (winners(v)) killed += u
+            }
+          }
+          mis ++= winners
+          active = active -- winners -- killed
+          rounds += 1
+        }
+        return DriverGraph.toDf(spark, Seq("node"), mis.toArray.map(Row(_)))
+      case None =>
+    }
+    val e = uv.cache()
+    try {
+      var active = e.select(col("u").as("x")).unionByName(e.select(col("v").as("x")))
+        .distinct().localCheckpoint()
+      var mis = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row], active.schema).localCheckpoint()
+      var n = active.count()
       var rounds = 0
-      while (active.nonEmpty) {
+      while (n > 0) {
         if (rounds >= maxRounds)
           throw new IllegalStateException(
-            s"MIS did not converge in $maxRounds rounds (still ${active.size} active)")
-        // min (priority, id) over ACTIVE neighbors, per active vertex
-        val nbrMin = new scala.collection.mutable.LongMap[(Long, Long)]()
-        def upd(x: Long, o: Long): Unit = {
-          val cand = (priL(o), o)
-          val cur = nbrMin.getOrElse(x, null)
-          if (cur == null || cand._1 < cur._1 ||
-            (cand._1 == cur._1 && cand._2 < cur._2)) nbrMin(x) = cand
-        }
-        es.foreach { case (u, v) =>
-          if (active(u) && active(v)) { upd(u, v); upd(v, u) }
-        }
-        val winners = active.filter { x =>
-          nbrMin.get(x) match {
-            case None => true
-            case Some((p, i)) =>
-              val px = priL(x)
-              px < p || (px == p && x < i)
-          }
-        }
-        val killed = scala.collection.mutable.Set[Long]()
-        es.foreach { case (u, v) =>
-          if (active(u) && active(v)) {
-            if (winners(u)) killed += v
-            if (winners(v)) killed += u
-          }
-        }
-        mis ++= winners
-        active = active -- winners -- killed
+            s"MIS did not converge in $maxRounds rounds (still $n active)")
+        val ea = e
+          .join(active.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
+          .join(active.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
+        // per active vertex: min (priority, id) over active neighbors
+        val nbrMin = ea.select(col("u").as("x"), col("v").as("o"))
+          .unionByName(ea.select(col("v").as("x"), col("u").as("o")))
+          .groupBy(col("x"))
+          .agg(min(struct(pri(col("o")).as("p"), col("o").as("i"))).as("nm"))
+        // a vertex with NO active neighbor wins unconditionally
+        val winners = active.join(nbrMin, Seq("x"), "left")
+          .filter(col("nm").isNull ||
+            struct(pri(col("x")).as("p"), col("x").as("i")) < col("nm"))
+          .select(col("x")).localCheckpoint()
+        val killed = ea.join(winners.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
+          .select(col("v").as("x"))
+          .unionByName(
+            ea.join(winners.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
+              .select(col("u").as("x")))
+          .distinct()
+        mis = mis.unionByName(winners).localCheckpoint()
+        active = active
+          .join(winners, Seq("x"), "left_anti")
+          .join(killed, Seq("x"), "left_anti")
+          .localCheckpoint()
+        n = active.count()
         rounds += 1
       }
-      val rows = mis.toArray.map(org.apache.spark.sql.Row(_))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = true)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toIndexedSeq,
-          math.max(1, math.min(spark.sparkContext.defaultParallelism,
-            1 + rows.length / 10000))), schema)
-    }
-    var active = e.select(col("u").as("x")).unionByName(e.select(col("v").as("x")))
-      .distinct().localCheckpoint()
-    var mis = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      active.schema).localCheckpoint()
-    var n = active.count()
-    var rounds = 0
-    while (n > 0) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"MIS did not converge in $maxRounds rounds (still $n active)")
-      val ea = e
-        .join(active.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
-        .join(active.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-      // per active vertex: min (priority, id) over active neighbors
-      val nbrMin = ea.select(col("u").as("x"), col("v").as("o"))
-        .unionByName(ea.select(col("v").as("x"), col("u").as("o")))
-        .groupBy(col("x"))
-        .agg(min(struct(pri(col("o")).as("p"), col("o").as("i"))).as("nm"))
-      // a vertex with NO active neighbor wins unconditionally
-      val winners = active.join(nbrMin, Seq("x"), "left")
-        .filter(col("nm").isNull ||
-          struct(pri(col("x")).as("p"), col("x").as("i")) < col("nm"))
-        .select(col("x")).localCheckpoint()
-      val killed = ea.join(winners.withColumnRenamed("x", "u"), Seq("u"), "left_semi")
-        .select(col("v").as("x"))
-        .unionByName(
-          ea.join(winners.withColumnRenamed("x", "v"), Seq("v"), "left_semi")
-            .select(col("u").as("x")))
-        .distinct()
-      mis = mis.unionByName(winners).localCheckpoint()
-      active = active
-        .join(winners, Seq("x"), "left_anti")
-        .join(killed, Seq("x"), "left_anti")
-        .localCheckpoint()
-      n = active.count()
-      rounds += 1
-    }
-    e.unpersist()
-    mis.select(col("x").as("node"))
+      mis.select(col("x").as("node"))
+    } finally e.unpersist()
   }
 }

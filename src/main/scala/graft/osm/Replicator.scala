@@ -104,8 +104,8 @@ class Replicator(spark: SparkSession, root: String) {
     //    0–8 classes and `applyOps` fell from 5.1–7.1 s to 3.2–4.8 s; at
     //    sf0.1 (12,613 winners per batch) it was no slower. Whole-stage
     //    codegen off alone still compiled 101–106 classes per batch.
-    // every frame the batch caches; released when the batch ends, also
-    // on a throw
+    // every frame the batch caches that was not cached before; released
+    // when the batch ends, also on a throw
     val held = scala.collection.mutable.ArrayBuffer[DataFrame]()
     try Replicator.withSqlConfs(spark, Replicator.BatchConfs)(applyOpsInner(winnersIn, held))
     finally held.foreach(_.unpersist())
@@ -138,11 +138,16 @@ class Replicator(spark: SparkSession, root: String) {
     * failure leaves some layers advanced, which the idempotent MERGE +
     * post-batch seq checkpoint (ST4) makes safe to re-apply.
     *
-    * Every frame it caches goes into `held`, which the caller releases. */
+    * Every frame it caches, unless the caller had cached it already,
+    * goes into `held`, which the caller releases. */
   private def applyOpsInner(winnersIn: DataFrame,
       held: scala.collection.mutable.Buffer[DataFrame]): Long = {
     import ChangePipeline.in
-    def cached(df: DataFrame): DataFrame = { held += df; df.cache() }
+    def cached(df: DataFrame): DataFrame = {
+      import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+      if (spark.sharedState.cacheManager.lookupCachedData(castToImpl(df)).isEmpty) held += df
+      df.cache()
+    }
     val winners = cached(winnersIn) // ST2+ST5, read by every layer's delta
     val ids = ChangePipeline.batchIds(winners) // also materializes the cache
     // J10 metadata: a layer whose snapshot carries ts/tags columns

@@ -1,8 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.DriverGraph
 
 /** Link-graph analytics over a deterministic hyperlink graph derived
   * from the `documents` table — the web-graph signals (PageRank-style
@@ -47,32 +48,25 @@ object GraphQueries {
     * equi-join on src + one left_anti vs visited, round-local
     * distinct. Returns (doc_id, hops), unreached nodes absent. */
   private def bfsHops(seeds: DataFrame, lnk: DataFrame, k: Int): DataFrame = {
-    // r6 driver fast path (DriverGraph contract): the closed-form link
-    // graphs these queries traverse are tiny at test scale, and each
-    // distributed round costs several fixed-overhead jobs. Under the
-    // cap, collect once and run the identical frontier recurrence in
-    // JVM code; above it, the unchanged round loop runs
-    // (GraphFastPathSpec pins fast == distributed).
-    val spark = seeds.sparkSession
-    val cap = graft.operators.DriverGraph.edgeCap(spark)
-    if (cap > 0 && lnk.count() <= cap) {
-      val dist = graft.operators.DriverGraph.bfs(
-        graft.operators.DriverGraph.collectIds(seeds.select(col("doc_id"))),
-        graft.operators.DriverGraph.collectEdges(lnk.select(col("src"), col("dst"))),
-        k)
-      return graft.operators.DriverGraph.toHopsDf(spark, dist.toArray)
+    // DriverGraph fast path: the identical frontier recurrence
+    val fast = for {
+      edges <- DriverGraph.collectUnder(lnk.select(col("src"), col("dst")))
+      seedRows <- DriverGraph.collectUnder(seeds.select(col("doc_id")))
+    } yield DriverGraph.toHopsDf(seeds.sparkSession, DriverGraph.bfs(
+      seedRows.map(_.getLong(0)), DriverGraph.adjacency(DriverGraph.pairs(edges)), k))
+    fast.getOrElse {
+      var visited = seeds.select(col("doc_id"), lit(0L).as("hops"))
+      var frontier = visited.select(col("doc_id"))
+      for (h <- 1 to k) {
+        val next = frontier.join(lnk, frontier("doc_id") === lnk("src"))
+          .select(col("dst").as("doc_id")).distinct()
+          .join(visited.select("doc_id"), Seq("doc_id"), "left_anti")
+          .select(col("doc_id"), lit(h.toLong).as("hops"))
+        visited = visited.unionByName(next)
+        frontier = next.select(col("doc_id"))
+      }
+      visited
     }
-    var visited = seeds.select(col("doc_id"), lit(0L).as("hops"))
-    var frontier = visited.select(col("doc_id"))
-    for (h <- 1 to k) {
-      val next = frontier.join(lnk, frontier("doc_id") === lnk("src"))
-        .select(col("dst").as("doc_id")).distinct()
-        .join(visited.select("doc_id"), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), lit(h.toLong).as("hops"))
-      visited = visited.unionByName(next)
-      frontier = next.select(col("doc_id"))
-    }
-    visited
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -268,77 +262,64 @@ object GraphQueries {
       val lnk = links(docs, n)
       val h = graft.text.TextFunctions.hash60(
         concat(lit("hb:"), col("doc_id").cast("string")))
-      var regs = docs.withColumn("h", h)
+      val init = docs.withColumn("h", h)
         .select(col("doc_id").as("v"), (col("h") % 64).as("j"),
           when(expr("h div 64") === 0L, lit(55L))
             .otherwise(lit(55L) - length(bin(expr("h div 64")))).as("r"))
         .withColumn("r", least(col("r"), lit(30L)))
-        .localCheckpoint()
-      // r6 driver fast path (DriverGraph contract): after k merge
-      // rounds regs(v) is exactly the max-merge of INITIAL registers
-      // over v's k-out-ball (induction on rounds; max is idempotent),
-      // and the init frame carries ONE register per node — so under
-      // the edge cap both legs (register merge + exact ball) fall out
-      // of one bounded BFS per node over the collected edges, with the
-      // integer fold formulas mirrored exactly (1L<<(30-r), floor-div
-      // err_bp). The distributed rounds below are the >cap path.
-      // GraphFastPathSpec pins fast == distributed.
-      val cap = graft.operators.DriverGraph.edgeCap(s)
-      if (cap > 0 && n * 3 <= cap) {
-        val edges = graft.operators.DriverGraph.collectEdges(
-          lnk.select(col("src"), col("dst")))
-        val adj = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]()
-        edges.foreach { case (a, b) =>
-          adj.getOrElseUpdate(a, new scala.collection.mutable.ArrayBuffer[Long]()) += b }
-        val init = regs.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        val initJ = new scala.collection.mutable.LongMap[Long]()
-        val initR = new scala.collection.mutable.LongMap[Long]()
-        init.foreach { case (v, j, r) => initJ.update(v, j); initR.update(v, r) }
-        val rows = graft.operators.DriverGraph.collectIds(docs).map { v =>
-          // 3-hop out-ball including v
-          val ball = new scala.collection.mutable.LongMap[Boolean]()
-          ball.update(v, true)
-          var frontier = scala.collection.mutable.ArrayBuffer(v)
-          for (_ <- 1 to 3) {
-            val next = new scala.collection.mutable.ArrayBuffer[Long]()
-            frontier.foreach { c =>
-              adj.get(c).foreach(_.foreach { w =>
-                if (!ball.contains(w)) { ball.update(w, true); next += w }
-              })
-            }
-            frontier = next
-          }
+      // DriverGraph fast path: after k merge rounds regs(v) is the
+      // max-merge of the INITIAL registers over v's k-out-ball
+      // (induction on rounds; max is idempotent), and the init frame
+      // carries one register per node, so one bounded BFS per node
+      // yields both the merged registers and the exact ball size.
+      val fast = for {
+        edges <- DriverGraph.collectUnder(lnk.select(col("src"), col("dst")))
+        initRows <- DriverGraph.collectUnder(init)
+      } yield {
+        val adj = DriverGraph.adjacency(DriverGraph.pairs(edges))
+        val reg = new scala.collection.mutable.LongMap[(Long, Long)]()
+        initRows.foreach(r => reg.update(r.getLong(0), (r.getLong(1), r.getLong(2))))
+        val merged = scala.collection.mutable.ArrayBuffer[Row]()
+        val balls = initRows.map { r =>
+          val v = r.getLong(0)
+          val ball = DriverGraph.bfs(Seq(v), adj, 3)
           val jr = new scala.collection.mutable.LongMap[Long]() // j -> max r
           ball.keys.foreach { u =>
-            val j = initJ(u); val r = initR(u)
+            val (j, r) = reg(u)
             if (!jr.get(j).exists(_ >= r)) jr.update(j, r)
           }
-          val mOcc = jr.size.toLong
-          val occSum = jr.values.map(r => 1L << (30 - r)).sum
-          val nSum = occSum + (64L - mOcc) * 1073741824L
-          val nBall = ball.size.toLong
-          val est = 709213L * (4398046511104L / nSum) / 1000000L
-          val errBp = Math.floorDiv((est - nBall) * 10000L, nBall)
-          org.apache.spark.sql.Row(v, mOcc, nSum, nBall, est, errBp)
+          jr.foreach { case (j, r) => merged += Row(v, j, r) }
+          Row(v, ball.size.toLong)
         }
-        val schema = org.apache.spark.sql.types.StructType(
-          Seq("doc_id", "m_occ", "n_sum", "n_ball", "est", "err_bp").map(
-            org.apache.spark.sql.types.StructField(_,
-              org.apache.spark.sql.types.LongType, nullable = true)))
-        s.createDataFrame(
-          s.sparkContext.parallelize(rows.toIndexedSeq,
-            math.max(1, math.min(s.sparkContext.defaultParallelism,
-              1 + rows.length / 10000))), schema)
-      } else {
-      for (_ <- 1 to 3) {
-        val nb = lnk.join(regs.select(col("v").as("w"), col("j"), col("r")),
-            lnk("dst") === col("w"))
-          .select(col("src").as("v"), col("j"), col("r"))
-        regs = regs.unionByName(nb)
-          .groupBy(col("v"), col("j")).agg(max(col("r")).as("r"))
-          .localCheckpoint()
+        (DriverGraph.toDf(s, Seq("v", "j", "r"), merged.toArray),
+          DriverGraph.toDf(s, Seq("v", "n_ball"), balls))
       }
-      val folded = regs
+      val (merged, exact) = fast.getOrElse {
+        var regs = init.localCheckpoint()
+        for (_ <- 1 to 3) {
+          val nb = lnk.join(regs.select(col("v").as("w"), col("j"), col("r")),
+              lnk("dst") === col("w"))
+            .select(col("src").as("v"), col("j"), col("r"))
+          regs = regs.unionByName(nb)
+            .groupBy(col("v"), col("j")).agg(max(col("r")).as("r"))
+            .localCheckpoint()
+        }
+        // exact K=3 out-ball alongside (q251's pair loop, out direction);
+        // the renamed edge copy avoids self-join lineage ambiguity once
+        // the frontier itself derives from the edge table
+        val lnk2 = lnk.select(col("src").as("e_src"), col("dst").as("e_dst"))
+        var seen = docs.select(col("doc_id").as("v"), col("doc_id").as("u"))
+        var frontier = seen
+        for (_ <- 1 to 3) {
+          val nxt = frontier.join(lnk2, frontier("u") === col("e_src"))
+            .select(col("v"), col("e_dst").as("u")).distinct()
+            .join(seen, Seq("v", "u"), "left_anti")
+          seen = seen.union(nxt)
+          frontier = nxt
+        }
+        (regs, seen.groupBy(col("v")).agg(count(lit(1)).as("n_ball")))
+      }
+      val folded = merged
         .select(col("v"), expr("CAST(pow(2, 30 - r) AS BIGINT)").as("p"))
         .groupBy(col("v"))
         .agg(sum(col("p")).as("occ_sum"), count(lit(1)).as("m_occ"))
@@ -346,31 +327,15 @@ object GraphQueries {
           (col("occ_sum") + (lit(64L) - col("m_occ")) * lit(1073741824L))
             .as("n_sum"),
           col("m_occ"))
-      // exact K=3 out-ball alongside (q251's pair loop, out direction);
-      // the renamed edge copy avoids self-join lineage ambiguity once
-      // the frontier itself derives from the edge table
-      val lnk2 = lnk.select(col("src").as("e_src"), col("dst").as("e_dst"))
-      var seen = docs.select(col("doc_id").as("v"), col("doc_id").as("u"))
-      var frontier = seen
-      for (_ <- 1 to 3) {
-        val nxt = frontier.join(lnk2, frontier("u") === col("e_src"))
-          .select(col("v"), col("e_dst").as("u")).distinct()
-          .join(seen, Seq("v", "u"), "left_anti")
-        seen = seen.union(nxt)
-        frontier = nxt
-      }
-      val exact = seen.groupBy(col("v")).agg(count(lit(1)).as("n_ball"))
       folded.join(exact, Seq("v"))
         .select(col("v").as("doc_id"), col("m_occ"), col("n_sum"),
-          col("n_ball"),
-          expr("709213 * (4398046511104 div n_sum) div 1000000").as("est"))
+          col("n_ball"), graft.text.TextFunctions.hllEstimate("n_sum").as("est"))
         .select(col("doc_id"), col("m_occ"), col("n_sum"), col("n_ball"),
           col("est"),
           // est underestimates small balls — err can be NEGATIVE, so
           // the quotient must be the engine-identical floor
           expr("((est - n_ball) * 10000 - pmod((est - n_ball) * 10000, n_ball)) div n_ball")
             .as("err_bp"))
-      }
     }),
     "q251_harmonic_centrality" -> ((s, dir) => {
       // bounded-hop (K=4) harmonic centrality c(x) = Σ_u 1/d(u, x)
@@ -389,74 +354,43 @@ object GraphQueries {
       val docs = Tables.documents(s, dir).select(col("doc_id"))
       val n = docs.count()
       val lnk = links(docs, n)
-      // r6 driver fast path (DriverGraph contract): the reach-pair
-      // loop below runs 4 rounds x (join + distinct + anti-join) of
-      // fixed-overhead jobs; under the edge cap the identical
-      // first-hop-pair semantics compute as n bounded forward BFS
-      // balls (out-degree 3 ⟹ ball <= 120) in JVM code.
-      // GraphFastPathSpec pins fast == distributed.
-      val cap = graft.operators.DriverGraph.edgeCap(s)
-      if (cap > 0 && n * 3 <= cap) {
-        val edges = graft.operators.DriverGraph.collectEdges(
-          lnk.select(col("src"), col("dst")))
-        val adj = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]()
-        edges.foreach { case (a, b) =>
-          adj.getOrElseUpdate(a, new scala.collection.mutable.ArrayBuffer[Long]()) += b }
-        val ids = graft.operators.DriverGraph.collectIds(docs)
+      // DriverGraph fast path: the identical first-hop-pair semantics
+      // as one bounded forward BFS per source (out-degree 3 ⟹ ball
+      // <= 120); a node with no out-edge reaches nothing
+      val fast = DriverGraph.collectUnder(lnk.select(col("src"), col("dst"))).map { edges =>
+        val adj = DriverGraph.adjacency(DriverGraph.pairs(edges))
         // per-x accumulators: harmonic x12 numerator and reach count
         val h12 = new scala.collection.mutable.LongMap[Long]()
         val nr = new scala.collection.mutable.LongMap[Long]()
-        ids.foreach { u =>
-          val dist = new scala.collection.mutable.LongMap[Long]()
-          dist.update(u, 0L)
-          var frontier = scala.collection.mutable.ArrayBuffer(u)
-          var h = 1L
-          while (h <= 4 && frontier.nonEmpty) {
-            val next = new scala.collection.mutable.ArrayBuffer[Long]()
-            frontier.foreach { c =>
-              adj.get(c).foreach(_.foreach { v =>
-                if (!dist.contains(v)) {
-                  dist.update(v, h); next += v
-                  h12.update(v, h12.getOrElse(v, 0L) + 12L / h)
-                  nr.update(v, nr.getOrElse(v, 0L) + 1L)
-                }
-              })
+        adj.keys.foreach { u =>
+          DriverGraph.bfs(Seq(u), adj, 4).foreach { case (x, h) =>
+            if (h > 0) {
+              h12.update(x, h12.getOrElse(x, 0L) + 12L / h)
+              nr.update(x, nr.getOrElse(x, 0L) + 1L)
             }
-            frontier = next
-            h += 1
           }
         }
-        val rows = h12.toArray.map { case (x, hv) =>
-          org.apache.spark.sql.Row(x, hv, nr(x)) }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("harmonic_x12",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("n_reach",
-            org.apache.spark.sql.types.LongType, nullable = true)))
-        s.createDataFrame(
-          s.sparkContext.parallelize(rows.toIndexedSeq,
-            math.max(1, math.min(s.sparkContext.defaultParallelism,
-              1 + rows.length / 10000))), schema)
-      } else {
-      var seen = docs.select(col("doc_id").as("u"), col("doc_id").as("x"))
-      var frontier = seen
-      val perHop = (1 to 4).map { h =>
-        val nxt = lnk.join(frontier, lnk("dst") === frontier("u"))
-          .select(lnk("src").as("u"), frontier("x")).distinct()
-          .join(seen, Seq("u", "x"), "left_anti")
-        seen = seen.union(nxt)
-        frontier = nxt
-        nxt.groupBy(col("x"))
-          .agg(count(lit(1)).as("cnt"))
-          .select(col("x"), col("cnt"), lit((12 / h).toLong).as("w12"))
+        DriverGraph.toDf(s, Seq("doc_id", "harmonic_x12", "n_reach"),
+          h12.toArray.map { case (x, hv) => Row(x, hv, nr(x)) })
       }
-      perHop.reduce(_ unionByName _)
-        .groupBy(col("x"))
-        .agg(sum(col("cnt") * col("w12")).as("harmonic_x12"),
-          sum(col("cnt")).as("n_reach"))
-        .select(col("x").as("doc_id"), col("harmonic_x12"), col("n_reach"))
+      fast.getOrElse {
+        var seen = docs.select(col("doc_id").as("u"), col("doc_id").as("x"))
+        var frontier = seen
+        val perHop = (1 to 4).map { h =>
+          val nxt = lnk.join(frontier, lnk("dst") === frontier("u"))
+            .select(lnk("src").as("u"), frontier("x")).distinct()
+            .join(seen, Seq("u", "x"), "left_anti")
+          seen = seen.union(nxt)
+          frontier = nxt
+          nxt.groupBy(col("x"))
+            .agg(count(lit(1)).as("cnt"))
+            .select(col("x"), col("cnt"), lit((12 / h).toLong).as("w12"))
+        }
+        perHop.reduce(_ unionByName _)
+          .groupBy(col("x"))
+          .agg(sum(col("cnt") * col("w12")).as("harmonic_x12"),
+            sum(col("cnt")).as("n_reach"))
+          .select(col("x").as("doc_id"), col("harmonic_x12"), col("n_reach"))
       }
     }),
     "q252_graph_audit" -> ((s, dir) => {
@@ -845,23 +779,22 @@ object GraphQueries {
             pmod(col("doc_id") * 13 + k * 29, lit(30L)).as("et"))): _*)).as("e"))
         .select(col("src"), col("e.dst").as("dst"),
           col("e.et").cast("long").as("et"))
-      // r6 driver fast path (DriverGraph contract): identical
-      // (node, arrival) reach-pair recurrence on the collected
-      // temporal edge list under the cap — pairs bounded by n x 30
-      // arrival days. GraphFastPathSpec pins fast == distributed.
-      val cap = graft.operators.DriverGraph.edgeCap(s)
-      if (cap > 0 && n * 3 <= cap) {
-        val edges = lt.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      // DriverGraph fast path: the identical (node, arrival) reach-pair
+      // recurrence — its own frontier, since its state is (node, t)
+      val seeds = docs.filter(col("doc_id") % 50 === 0)
+      val fast = for {
+        edges <- DriverGraph.collectUnder(lt)
+        seedRows <- DriverGraph.collectUnder(seeds)
+      } yield {
         val adj = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[(Long, Long)]]()
-        edges.foreach { case (src, dst, et) =>
-          adj.getOrElseUpdate(src, new scala.collection.mutable.ArrayBuffer[(Long, Long)]()) += ((dst, et)) }
+        edges.foreach { r =>
+          adj.getOrElseUpdate(r.getLong(0), new scala.collection.mutable.ArrayBuffer[(Long, Long)]()) +=
+            ((r.getLong(1), r.getLong(2))) }
         // seen keyed on node*64 + t (t in 0..29 < 64): one LongMap
         val seen = new scala.collection.mutable.LongMap[Boolean]()
         var frontier = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-        graft.operators.DriverGraph.collectIds(
-            docs.filter(col("doc_id") % 50 === 0))
-          .foreach { d => seen.update(d * 64L, true); frontier += ((d, 0L)) }
+        seedRows.foreach { r =>
+          val d = r.getLong(0); seen.update(d * 64L, true); frontier += ((d, 0L)) }
         for (_ <- 1 to 4) {
           val next = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
           frontier.foreach { case (u, t) =>
@@ -879,34 +812,23 @@ object GraphQueries {
           val (mn, c) = agg.getOrElse(node, (Long.MaxValue, 0L))
           agg.update(node, (math.min(mn, t), c + 1L))
         }
-        val rows = agg.toArray.map { case (nid, (mn, c)) =>
-          org.apache.spark.sql.Row(nid, mn, c) }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("earliest_arrival",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("n_arrivals",
-            org.apache.spark.sql.types.LongType, nullable = true)))
-        s.createDataFrame(
-          s.sparkContext.parallelize(rows.toIndexedSeq,
-            math.max(1, math.min(s.sparkContext.defaultParallelism,
-              1 + rows.length / 10000))), schema)
-      } else {
-      var seen = docs.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id"), lit(0L).as("t"))
-      var frontier = seen
-      for (_ <- 1 to 4) {
-        val next = frontier.join(lt,
-            frontier("doc_id") === lt("src") && lt("et") >= frontier("t"))
-          .select(col("dst").as("doc_id"), col("et").as("t")).distinct()
-          .join(seen, Seq("doc_id", "t"), "left_anti")
-        seen = seen.unionByName(next)
-        frontier = next
+        DriverGraph.toDf(s, Seq("doc_id", "earliest_arrival", "n_arrivals"),
+          agg.toArray.map { case (nid, (mn, c)) => Row(nid, mn, c) })
       }
-      seen.groupBy(col("doc_id"))
-        .agg(min(col("t")).as("earliest_arrival"),
-          count(lit(1)).as("n_arrivals"))
+      fast.getOrElse {
+        var seen = seeds.select(col("doc_id"), lit(0L).as("t"))
+        var frontier = seen
+        for (_ <- 1 to 4) {
+          val next = frontier.join(lt,
+              frontier("doc_id") === lt("src") && lt("et") >= frontier("t"))
+            .select(col("dst").as("doc_id"), col("et").as("t")).distinct()
+            .join(seen, Seq("doc_id", "t"), "left_anti")
+          seen = seen.unionByName(next)
+          frontier = next
+        }
+        seen.groupBy(col("doc_id"))
+          .agg(min(col("t")).as("earliest_arrival"),
+            count(lit(1)).as("n_arrivals"))
       }
     }),
     "q265_incremental_triangles" -> ((s, dir) => {

@@ -1898,7 +1898,7 @@ object TextQueries {
         .agg(count(lit(1)).as("exact"))
       nsum.crossJoin(exact)
         .select(col("m_used"), col("n_sum"), col("exact"),
-          expr("709213 * (4398046511104 div n_sum) div 1000000").as("est"))
+          hllEstimate("n_sum").as("est"))
         .select(col("m_used"), col("n_sum"), col("exact"), col("est"),
           expr("(est - exact) * 10000 div exact").as("err_bp"))
     }),

@@ -32,6 +32,13 @@ object TextFunctions {
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
+  /** HyperLogLog estimate over m = 64 registers of rank <= 30 from
+    * `nSum` = Σ 2^(30−r) (empty registers count 2^30): α·m²·2^30/nSum
+    * in exact integers, with α in ppm and m²·2^30 = 2^42 — the one
+    * definition shared by q224 and q291 (their oracles mirror it). */
+  def hllEstimate(nSum: String): Column =
+    expr(s"709213 * (4398046511104 div $nSum) div 1000000")
+
   /** Count-Min sketch cell coordinates of a term: array of d
     * (j, bkt = hash60("cms<j>:" || term) mod w) structs — the ONE
     * definition shared by batch q217, its DuckDB oracle recipe, and

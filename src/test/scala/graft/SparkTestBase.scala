@@ -9,6 +9,13 @@ trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   val sfSmoke = "/root/testdata/sf0.001"
   val sfSmall = "/root/testdata/sf0.01"
+
+  /** Run `f` with `spark.graft.graphDriverEdgeCap` at `cap` (0 forces
+    * every distributed graph path), then unset it. */
+  def withCap[A](cap: Long)(f: => A): A = {
+    spark.conf.set("spark.graft.graphDriverEdgeCap", cap.toString)
+    try f finally spark.conf.unset("spark.graft.graphDriverEdgeCap")
+  }
 }
 
 object SparkTestBase {

@@ -13,9 +13,9 @@ class ConnectedComponentsSpec extends SparkTestBase {
     // chain 0-1-2-...-1023: diameter 1023. Label propagation needs
     // ~1023 rounds; alternating star must land well under 2*log2(n)+4.
     val edges = (0L until 1023L).map(i => (i, i + 1)).toDF("u", "v")
-    // driverEdgeCap = 0 forces the distributed star rounds — this test
-    // exists to prove the O(log n) round bound, not the fast path
-    val (labels, rounds) = ConnectedComponents.alternatingStar(edges, driverEdgeCap = 0L)
+    // cap 0 forces the distributed star rounds — this test exists to
+    // prove the O(log n) round bound, not the fast path
+    val (labels, rounds) = withCap(0L) { ConnectedComponents.alternatingStar(edges) }
     assert(rounds <= 24, s"took $rounds rounds on a 1024-chain")
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 1024)
@@ -39,7 +39,7 @@ class ConnectedComponentsSpec extends SparkTestBase {
   }
 
   test("driver union-find fast path equals the distributed star on random graphs") {
-    // the r6 fast path (edge sets <= cap collect to a driver
+    // the fast path (edge sets <= cap collect to a driver
     // union-find) must be label-identical to the distributed rounds on
     // arbitrary topologies, including chains, hubs and cycles
     for (seed <- Seq(3L, 17L, 91L)) {
@@ -48,7 +48,7 @@ class ConnectedComponentsSpec extends SparkTestBase {
         .filter { case (a, b) => a != b }
         .toDF("u", "v")
       val (fast, fr) = ConnectedComponents.alternatingStar(edges)
-      val (dist, _) = ConnectedComponents.alternatingStar(edges, driverEdgeCap = 0L)
+      val (dist, _) = withCap(0L) { ConnectedComponents.alternatingStar(edges) }
       assert(fr == 0, "expected the driver fast path under the default cap")
       val a = fast.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val b = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -4,26 +4,20 @@ import graft.{Bench, SparkEntry, SparkTestBase}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The r6 DriverGraph fast paths (bounded-collect BFS / incremental
-  * BFS maintenance) must be row-identical to the distributed round
-  * loops they replace — toggled via spark.graft.graphDriverEdgeCap
-  * (0 = force the distributed path), same convention as the CC
-  * union-find fast path. */
+/** The DriverGraph fast paths must be row-identical to the distributed
+  * round loops they replace — toggled via spark.graft.graphDriverEdgeCap
+  * (0 = force the distributed path) — and the gate must read a bounded
+  * prefix of its input, never all of it. */
 class GraphFastPathSpec extends SparkTestBase {
   import spark.implicits._
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq.toVector: Seq[Any]).toSet
 
-  private def withCap[A](cap: Long)(f: => A): A = {
-    spark.conf.set("spark.graft.graphDriverEdgeCap", cap.toString)
-    try f finally spark.conf.unset("spark.graft.graphDriverEdgeCap")
-  }
-
   test("bfs-family queries: driver fast path equals distributed rounds") {
     for (q <- Seq("q161_bfs_hops", "q264_scc_mutual", "q253_incremental_bfs",
         "q251_harmonic_centrality", "q274_temporal_reach",
-        "q291_hyperball")) {
+        "q291_hyperball", "q119_cc_alternating_star", "q191_kcore", "q196_mis")) {
       val fast = rows(SparkEntry.queries(q)(spark, sfSmoke))
       Bench.clearState(spark)
       val dist = withCap(0L) { rows(SparkEntry.queries(q)(spark, sfSmoke)) }
@@ -56,7 +50,7 @@ class GraphFastPathSpec extends SparkTestBase {
       // would be circular — use a driver reference instead)
       val baseEdges = baseLinks.collect().map(r => (r.getLong(0), r.getLong(1)))
       val storedRef = DriverGraph.bfs(
-        seeds.collect().map(_.getLong(0)), baseEdges, 4).toArray
+        seeds.collect().map(_.getLong(0)), DriverGraph.adjacency(baseEdges), 4)
       val stored = DriverGraph.toHopsDf(spark, storedRef)
       val seedsPost = seeds.join(postDocs, Seq("doc_id"), "left_semi")
       val fast = rows(IncrementalBfs.maintain(postDocs, baseLinks,
@@ -68,5 +62,22 @@ class GraphFastPathSpec extends SparkTestBase {
       assert(fast == dist, s"maintain fast path diverged for seed $seed")
       assert(fast.nonEmpty)
     }
+  }
+
+  test("collectUnder over the cap reads at most cap + 1 rows per partition") {
+    val seen = spark.sparkContext.longAccumulator("collectUnder rows read")
+    val counted = udf((x: Long) => { seen.add(1L); x }).asNondeterministic()
+    val input = spark.range(0L, 100000L, 1L, 4)
+      .select(counted(col("id")).as("u"), col("id").as("v"))
+    assert(input.rdd.getNumPartitions == 4)
+    assert(withCap(10L) { DriverGraph.collectUnder(input) }.isEmpty)
+    info(s"the gate read ${seen.value} of 100000 rows")
+    assert(seen.value <= 4L * 11L, s"the gate read ${seen.value} rows")
+  }
+
+  test("collectUnder: cap 0 takes the distributed path even on an empty input") {
+    val empty = spark.range(0L).select(col("id").as("u"), col("id").as("v"))
+    assert(withCap(0L) { DriverGraph.collectUnder(empty) }.isEmpty)
+    assert(DriverGraph.collectUnder(empty).exists(_.isEmpty))
   }
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.functions.col
 
 /** k-core peeling: exact agreement with a brute-force sequential peel
   * on random graphs, a planted cascade (path + clique) that needs many
@@ -36,14 +38,15 @@ class KCoreSpec extends SparkTestBase {
         (rnd.nextInt(35).toLong, rnd.nextInt(35).toLong)
       }.filter(p => p._1 != p._2)
       val want = bruteCore(pairs, k)
-      // default = r6 driver fast path; driverEdgeCap = 0 forces the
-      // distributed peel — both must match the brute-force reference
+      // default = driver fast path; cap 0 forces the distributed
+      // peel — both must match the brute-force reference
       val got = KCore.membership(edgeDf(pairs), k, maxRounds = 40)
         .collect().map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
       assert(got == want, s"trial $trial k=$k (fast path)")
-      val gotDist = KCore.membership(edgeDf(pairs), k, maxRounds = 40,
-          driverEdgeCap = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
+      val gotDist = withCap(0L) {
+        KCore.membership(edgeDf(pairs), k, maxRounds = 40)
+          .collect().map(r => r.getLong(0) -> r.getLong(1).toInt).toMap
+      }
       assert(gotDist == want, s"trial $trial k=$k (distributed)")
     }
   }
@@ -65,10 +68,16 @@ class KCoreSpec extends SparkTestBase {
       KCore.membership(edgeDf(path ++ clique), k = 2, maxRounds = 3)
     }
     assert(ex.getMessage.contains("did not converge"))
+    val cacheWasEmpty = spark.sharedState.cacheManager.isEmpty
     val exDist = intercept[IllegalStateException] {
-      KCore.membership(edgeDf(path ++ clique), k = 2, maxRounds = 3,
-        driverEdgeCap = 0L)
+      withCap(0L) { KCore.membership(edgeDf(path ++ clique), k = 2, maxRounds = 3) }
     }
     assert(exDist.getMessage.contains("did not converge"))
+    assert(!cacheWasEmpty || spark.sharedState.cacheManager.isEmpty,
+      "the distributed peel left its edge cache behind after the throw")
+    // and, also when another suite left a cache behind, not this one
+    assert(spark.sharedState.cacheManager.lookupCachedData(
+      castToImpl(edgeDf(path ++ clique).select(col("u"), col("v")))).isEmpty,
+      "this graph's edge cache is still held after the throw")
   }
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.functions.col
 
 /** Fixed-priority Luby MIS: independence + maximality on random
   * graphs, equality with the sequential greedy-by-priority reference
@@ -35,13 +37,14 @@ class MisSpec extends SparkTestBase {
       }.filter(p => p._1 != p._2)
       val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }
         .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSet }
-      // default = r6 driver fast path; driverEdgeCap = 0 forces the
-      // distributed rounds — both must equal the greedy reference
+      // default = driver fast path; cap 0 forces the distributed
+      // rounds — both must equal the greedy reference
       val got = Mis.of(edgeDf(pairs), maxRounds = 40)
         .collect().map(_.getLong(0)).toSet
       assert(got == greedyMis(pairs), s"trial $trial (fast path)")
-      val gotDist = Mis.of(edgeDf(pairs), maxRounds = 40, driverEdgeCap = 0L)
-        .collect().map(_.getLong(0)).toSet
+      val gotDist = withCap(0L) {
+        Mis.of(edgeDf(pairs), maxRounds = 40).collect().map(_.getLong(0)).toSet
+      }
       assert(gotDist == got, s"trial $trial (distributed)")
       assert(got.forall(v => !(adj(v) & got).nonEmpty), "not independent")
       assert(adj.keySet.forall(v => got(v) || (adj(v) & got).nonEmpty),
@@ -59,9 +62,16 @@ class MisSpec extends SparkTestBase {
       Mis.of(edgeDf(path), maxRounds = 2)
     }
     assert(ex.getMessage.contains("did not converge"))
+    val cacheWasEmpty = spark.sharedState.cacheManager.isEmpty
     val exDist = intercept[IllegalStateException] {
-      Mis.of(edgeDf(path), maxRounds = 2, driverEdgeCap = 0L)
+      withCap(0L) { Mis.of(edgeDf(path), maxRounds = 2) }
     }
     assert(exDist.getMessage.contains("did not converge"))
+    assert(!cacheWasEmpty || spark.sharedState.cacheManager.isEmpty,
+      "the distributed rounds left their edge cache behind after the throw")
+    // and, also when another suite left a cache behind, not this one
+    assert(spark.sharedState.cacheManager.lookupCachedData(
+      castToImpl(edgeDf(path).select(col("u"), col("v")))).isEmpty,
+      "this graph's edge cache is still held after the throw")
   }
 }

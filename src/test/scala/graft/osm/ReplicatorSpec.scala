@@ -323,6 +323,17 @@ class ReplicatorSpec extends SparkTestBase {
       "applyOps left its input cached after a throw")
   }
 
+  test("applyOps leaves an input the caller cached still cached") {
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val root = fresh("caller-cache")
+    val winners = metaStoreBatch(root).cache()
+    try {
+      assert(new Replicator(spark, root).applyOps(winners) === 6L)
+      assert(spark.sharedState.cacheManager.lookupCachedData(castToImpl(winners)).isDefined,
+        "applyOps un-cached the caller's winners")
+    } finally winners.unpersist()
+  }
+
   test("a modify whose rebuild is empty removes the object: layers == fold, triples == derivation") {
     import graft.rdf.TripleDerive._
     import org.apache.spark.sql.functions.{lit, map, posexplode, regexp_replace, split,
