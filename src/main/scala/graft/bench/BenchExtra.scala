@@ -1,6 +1,5 @@
 package graft.bench
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** Iteration-only benchmark harness (guide §1.4): times an arbitrary
@@ -9,14 +8,14 @@ import org.apache.spark.sql.SparkSession
   * best-of-N after [[WarmReps]] untimed reps per query, `.count()`
   * action) but without the e2e setup, so a
   * change to one operator can be measured in seconds instead of a full
-  * suite run. Optionally dumps `.explain("formatted")` per query.
+  * suite run. The round-6 formatted plans of these queries
+  * (`plans/r06/`) are in git history at commit 9c1d84d.
   *
   * Usage:
   * {{{
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *   SPARK_GRAFT_EXTRA_ONLY=q124_incremental_clusters,q127_editdist_verify \
   *   SPARK_GRAFT_EXTRA_REPS=3 \
-  *   SPARK_GRAFT_EXPLAIN_DIR=plans/r06 SPARK_GRAFT_EXPLAIN_SUFFIX=_before \
   *   sbt "runMain graft.bench.BenchExtra"
   * }}}
   *
@@ -46,8 +45,6 @@ object BenchExtra {
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(graft.Bench.headline)
     val reps = sys.env.getOrElse("SPARK_GRAFT_EXTRA_REPS", "3").toInt
-    val explainDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
-    val explainSuffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "")
 
     // JIT/codegen warm-up, same spirit as Bench's untimed pass
     graft.SparkEntry.queries("q01_pricing_agg")(spark, sfDir).count()
@@ -61,13 +58,6 @@ object BenchExtra {
     }
 
     val results = names.map { name =>
-      explainDir.foreach { d =>
-        Files.createDirectories(Paths.get(d))
-        val plan = graft.SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(d, s"$name$explainSuffix.txt"), plan)
-      }
       // untimed reps first: a query's first reps still run JIT/codegen
       // of its own plan (measured 13 s, 5 s, 4 s, then ~3 s from the
       // fifth rep at sf0.1), which best-of-3 alone does not absorb

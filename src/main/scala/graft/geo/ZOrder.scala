@@ -1,38 +1,36 @@
 package graft.geo
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
-/** Z-order (Morton-curve) clustering for scan pruning — the lakehouse
+/** Z-order (Morton-curve) encoding for scan pruning — the lakehouse
   * answer to spatial locality at 100 TB. The reference walks its whole
-  * endpoint per query (/root/reference/src/sparql/SparqlWrapper.cpp
-  * runs every SELECT against the full store); a Spark-native engine
-  * instead PLACES the data so a bbox query never reads most of it:
+  * endpoint per query (its src/sparql/SparqlWrapper.cpp runs every
+  * SELECT against the full store); a Spark-native engine
+  * instead PLACES the data so a bbox query never reads most of it.
+  * This object holds the curve; the layout that uses it is
+  * [[graft.tables.SnapshotTable.createZOrdered]] / `readBbox`:
   *
-  *  - the stored table is clustered along the interleaved-bit curve
-  *    and PARTITIONED by the top z-prefix (`zbucket` directories —
-  *    the same role as an Iceberg spatial partition transform), so a
-  *    bbox predicate prunes whole directories before listing files;
-  *  - the box is decomposed into a bounded set of EXACT-cover
+  *  - [[zValue]] interleaves the quantized lon/lat bits, so the stored
+  *    table can be bucketed by the top z-prefix and sorted by z;
+  *  - [[zIntervals]] decomposes a box into a bounded set of EXACT-cover
   *    z-intervals by quadtree recursion (the BIGMIN idea) — a single
   *    corner envelope [z(lo), z(hi)] degenerates to ~the full range
   *    when the box straddles the space's midlines, the decomposition
   *    does not;
-  *  - the trailing exact lon/lat predicate removes the curve's jumps,
-  *    so the result is exact regardless of interval over-approximation.
+  *  - the reader's trailing exact lon/lat predicate removes the curve's
+  *    jumps, so the result is exact regardless of interval
+  *    over-approximation.
   *
   * Same public pattern as Delta OPTIMIZE ZORDER BY + GeoMesa z-range
   * scans. All row-side arithmetic is codegen'd builtins (floor /
-  * shiftleft / bitwise or) mirrored verbatim in the DuckDB oracle,
-  * like [[GeoFunctions]].
+  * shiftleft / bitwise or) mirrored verbatim in the DuckDB oracle
+  * ([[quantSql]], [[interleaveSql]]), like [[GeoFunctions]].
   */
 object ZOrder {
   val LonLo = -180.0; val LonSpan = 360.0
   val LatLo = -90.0;  val LatSpan = 180.0
-
-  /** Directory-partition granularity: top `BucketBits` bits of z. */
-  val BucketBits = 5
 
   private def quant(c: Column, lo: Double, span: Double, bits: Int): Column = {
     val n = 1L << bits
@@ -132,46 +130,5 @@ object ZOrder {
       merged.remove(best)
     }
     merged.toSeq
-  }
-
-  private def bucketShift(bits: Int): Int = 2 * bits - BucketBits
-
-  /** Write `df` clustered along the curve: `zbucket` (top z-prefix)
-    * directory partitions for coarse pruning, range-repartition on
-    * zval for disjoint per-file z-ranges, sort within partitions for
-    * row-group locality. Both derived columns are persisted — the
-    * read-side predicates target them directly. */
-  def cluster(df: DataFrame, lonCol: String, latCol: String, bits: Int,
-      path: String, numFiles: Int): Unit =
-    df.withColumn("zval", zValue(col(lonCol), col(latCol), bits))
-      .withColumn("zbucket", shiftright(col("zval"), bucketShift(bits)))
-      .repartitionByRange(numFiles, col("zval"))
-      .sortWithinPartitions(col("zval"))
-      .write.mode("overwrite").partitionBy("zbucket").parquet(path)
-
-  /** Bbox query over a z-clustered table: literal zbucket intervals
-    * prune directories, literal zval intervals prune files/row-groups,
-    * the exact lon/lat predicate removes the curve's jumps. */
-  def bboxRead(spark: SparkSession, path: String, lonCol: String,
-      latCol: String, bits: Int,
-      minLon: Double, maxLon: Double, minLat: Double, maxLat: Double): DataFrame = {
-    require(minLon <= maxLon && minLat <= maxLat,
-      s"degenerate bbox [$minLon,$maxLon]x[$minLat,$maxLat]: min must not " +
-        "exceed max (an antimeridian-crossing box must be split into two " +
-        "boxes at +-180 by the caller)")
-    val ivs = zIntervals(minLon, maxLon, minLat, maxLat, bits)
-    if (ivs.isEmpty) // fully outside the quantized domain
-      return spark.read.parquet(path).filter(lit(false))
-    val shift = bucketShift(bits)
-    val zPred = ivs.map { case (lo, hi) =>
-      col("zval") >= lo && col("zval") <= hi
-    }.reduce(_ || _)
-    val bPred = ivs.map { case (lo, hi) =>
-      col("zbucket") >= (lo >> shift) && col("zbucket") <= (hi >> shift)
-    }.reduce(_ || _)
-    spark.read.parquet(path)
-      .filter(bPred && zPred &&
-        col(lonCol) >= minLon && col(lonCol) <= maxLon &&
-        col(latCol) >= minLat && col(latCol) <= maxLat)
   }
 }

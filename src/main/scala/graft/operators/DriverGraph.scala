@@ -21,9 +21,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * The cap is one session conf, `spark.graft.graphDriverEdgeCap`
   * (default 1e6 rows; 0 forces every distributed path), read only by
-  * [[edgeCap]]. The gate IS the collect: one `limit(cap + 1)` job,
-  * so a frame over the cap costs a bounded read, never a full
-  * `count()`, and nothing collected scales with the corpus.
+  * [[edgeCap]]. The gate IS the collect, `limit(cap + 1)`, so a frame
+  * over the cap costs a bounded read, never a full `count()`, and
+  * nothing collected scales with the corpus (see [[collectUnder]] for
+  * its job count).
   * GraphFastPathSpec, KCoreSpec, MisSpec and ConnectedComponentsSpec
   * pin fast == distributed for every path.
   */
@@ -38,7 +39,18 @@ object DriverGraph {
 
   /** The rows of `frame` if it has at most [[edgeCap]] of them and only
     * LongType columns; `None` (take the distributed path) otherwise or
-    * when the cap is 0. One bounded job either way. */
+    * when the cap is 0.
+    *
+    * The collect runs Spark's incremental limit scan: one partition
+    * first, then up to 4× the partitions scanned so far
+    * (`spark.sql.limit.initialNumPartitions` 1, `scaleUpFactor` 4), each
+    * round one job. So a frame of P partitions under the cap costs up to
+    * 1 + ⌈log₅ P⌉ jobs: 1 for one partition, 2 for four, and 1 when
+    * Spark knows the frame's row bound is within the limit and drops
+    * it. Over the cap, the scan ends as soon as cap + 1 rows are in.
+    * A one-job read would have every partition ship up to
+    * cap + 1 rows, or one task read the whole input, so the extra jobs
+    * stay. */
   def collectUnder(frame: DataFrame): Option[Array[Row]] = {
     val cap = edgeCap(frame.sparkSession)
     if (cap <= 0 || !frame.schema.fields.forall(_.dataType == LongType)) None

@@ -905,10 +905,7 @@ object RelationalQueries {
       // ONE equi-join shuffle on user_id with the time range as a
       // post-join filter (never a time-bucket cover: the window is
       // fixed and small relative to per-user history, so the user key
-      // alone co-locates everything once). Streaming face:
-      // streaming/StreamJoin.attribution — Structured Streaming's
-      // watermarked stream-stream inner join, proven equal to this
-      // query by StreamJoinSpec under arrival disorder.
+      // alone co-locates everything once).
       val e = events(s, dir).select(col("event_id"), col("user_id"), col("ts"))
       val clicks = e.filter(col("event_id") % 5 === 0)
         .select(col("event_id").as("click_id"), col("user_id"),

@@ -634,8 +634,8 @@ object SpatialQueries {
       // written clustered along the Morton curve, and the query reads
       // it back through a literal z-interval that pushes down to the
       // parquet scan — at 100 TB whole files/row-groups outside the
-      // interval are skipped via min/max stats (ZOrderSpec measures
-      // the file-count drop). The oracle both proves the pruned read
+      // interval are skipped via min/max stats (SnapshotTableSpec
+      // measures the file-count drop). The oracle both proves the pruned read
       // returns exactly the bbox rows AND pins the Morton encoding
       // itself cross-engine (zval is part of the hashed output).
       // goes through the TABLE layer (SnapshotTable z-clustered mode):

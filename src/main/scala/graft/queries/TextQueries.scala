@@ -2185,9 +2185,7 @@ object TextQueries {
       // ONE map-side-combined sum bounded at d·w = 1024 output rows;
       // the delta legs scan only the touched docs — O(batch), never a
       // corpus re-scan (the stored matrix is rebuilt in-query as
-      // oracle scaffolding, q52/q70/q171 adjudication). Pairs with
-      // streaming/SketchStream: the live hose maintains the same
-      // matrix per-arrival; this is the batch-reconciliation face.
+      // oracle scaffolding, q52/q70/q171 adjudication).
       val D = 4; val W = 256L
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       def cellsOf(d: DataFrame, sign: Long): DataFrame = d

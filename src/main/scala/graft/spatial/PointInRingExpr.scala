@@ -58,7 +58,10 @@ object PointInRingExpr {
 
   /** Boundary-inclusive crossing-number over ArrayData, no allocation.
     * Exact-comparison on-segment test matches the oracle's inclusive
-    * BETWEEN on axis-aligned edges. Called from generated code. */
+    * BETWEEN on axis-aligned edges. Called from generated code. (An
+    * earlier JTS PreparedGeometry-per-task cache held millions of live
+    * objects and made the refine heap-bound; the rings are small after
+    * the cell prefilter, so an R-tree per polygon buys nothing.) */
   def contains(xs: ArrayData, ys: ArrayData, px: Double, py: Double): Boolean = {
     val n = xs.numElements()
     var inside = false

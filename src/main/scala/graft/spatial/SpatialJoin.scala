@@ -19,8 +19,9 @@ import graft.geo.{CellIndex, GeoFunctions}
   *  - each point encodes to exactly ONE cell (codegen'd arithmetic) —
   *    so the equi-join emits no duplicate candidates and needs no
   *    post-dedup;
-  *  - the refine is [[pointInRing]]'s boundary-inclusive crossing test
-  *    (the `pip_contains` codegen expression), run on bbox passes only;
+  *  - the refine is [[PointInRingExpr]]'s boundary-inclusive crossing
+  *    test (the `pip_contains` codegen expression), run on bbox passes
+  *    only;
   *  - the partitioned path counts points per cell and salts only the
   *    hot cells: their polygon rows replicate ×min(S, ⌈count/threshold⌉)
   *    and each of their points picks one shard by hash (explicit skew
@@ -36,35 +37,6 @@ object SpatialJoin {
       .select(col("way_id"),
         transform(col("ring"), r => r.getField("lon")).as("xs"),
         transform(col("ring"), r => r.getField("lat")).as("ys"))
-
-  /** Boundary-inclusive point-in-ring: crossing-number with an exact
-    * on-segment pre-test (covers semantics — boundary counts, matching
-    * the oracle's BETWEEN). Pure primitive arithmetic, ZERO allocation
-    * per candidate row — the earlier JTS PreparedGeometry-per-task
-    * cache held millions of live objects across 32 tasks and made the
-    * refine stage heap-bound (2-5x slower at large heaps) instead of
-    * CPU-bound. Rings here are small (the refine input is already
-    * cell-prefiltered), so an R-tree per polygon buys nothing. */
-  def pointInRing(xs: Array[Double], ys: Array[Double],
-      px: Double, py: Double): Boolean = {
-    val n = xs.length
-    var inside = false
-    var j = n - 1
-    var i = 0
-    while (i < n) {
-      val xi = xs(i); val yi = ys(i); val xj = xs(j); val yj = ys(j)
-      val cross = (px - xi) * (yj - yi) - (py - yi) * (xj - xi)
-      if (cross == 0.0 &&
-          px >= math.min(xi, xj) && px <= math.max(xi, xj) &&
-          py >= math.min(yi, yj) && py <= math.max(yi, yj)) return true
-      if ((yi > py) != (yj > py)) {
-        val xCross = xi + (py - yi) * (xj - xi) / (yj - yi)
-        if (px < xCross) inside = !inside
-      }
-      j = i; i += 1
-    }
-    inside
-  }
 
   /** Ring rows -> exploded cover with bbox scalars (shared candidate
     * generation of [[pipJoin]] and [[pipJoinMulti]]). */
@@ -128,7 +100,7 @@ object SpatialJoin {
 
   /** The refined (point, ring) rows of every PIP join: each point's cell
     * joins the rings' cover under `mode`, the bbox test runs on 4
-    * fixed-width scalars, and `pip_contains` ([[pointInRing]]) runs only
+    * fixed-width scalars, and `pip_contains` ([[PointInRingExpr]]) runs only
     * on bbox passes. Under `ringDict = "broadcast"` the cover carries no
     * ring arrays: the bbox passes join `dict`, (`ringKey`, xs, ys) rows
     * holding each ring once, on `ringKey`, which `rings` must carry.

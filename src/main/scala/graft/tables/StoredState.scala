@@ -17,28 +17,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The build is keyed by sfDir, a version tag AND a fingerprint of the
   * input files (relative path, size, mtime of everything under sfDir),
-  * so neither a code change (bump [[Version]]) nor a fixture change
-  * under the same path can ever serve stale state — Bench can run the
-  * `_stored` twins without Verify, so a silently stale cache would
-  * otherwise go uncaught (r5 advice). `sbt clean` wipes `target/` as
-  * the belt-and-braces invalidation.
+  * re-taken on every [[table]] call. A code change (bump [[Version]])
+  * or a fixture rewrite that changes a file's size or mtime gets a new
+  * root, even within one JVM — Bench can run the `_stored` twins
+  * without Verify, so a silently stale cache would otherwise go
+  * uncaught. The key is make-style, not content: a rewrite that keeps
+  * every size and mtime (`cp -p`, `rsync -a`, a coarse-mtime file
+  * system) still serves the old state. `sbt clean` wipes `target/`
+  * for that case.
   */
 object StoredState {
 
   /** Bump when any builder's derivation changes shape or content. */
   private val Version = "v2"
 
-  /** Content key of the input dir: murmur3 over the sorted
-    * (relative path, size, mtime) of every regular file. Memoized per
-    * dir — one directory scan per JVM, negligible next to a builder
-    * job (and a mid-session fixture edit is not a supported regime;
-    * restart invalidates). */
-  private val keyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def inputKey(dir: String): String =
-    keyCache.computeIfAbsent(dir, computeInputKey)
-
+  /** Key of the input dir: murmur3 over the sorted (relative path,
+    * size, mtime) of every regular file. One directory walk per call,
+    * negligible next to a builder job. */
   private[graft] def computeInputKey(dir: String): String = {
     val base = Paths.get(dir)
     val entries = scala.collection.mutable.ArrayBuffer[String]()
@@ -68,7 +63,7 @@ object StoredState {
   }
 
   private def root(dir: String): String =
-    s"target/stored-state/$Version-${inputKey(dir)}/" +
+    s"target/stored-state/$Version-${computeInputKey(dir)}/" +
       dir.replaceAll("[^A-Za-z0-9.]+", "_")
 
   /** Read `name` from parquet, building it first iff absent. */

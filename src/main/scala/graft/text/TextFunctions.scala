@@ -41,10 +41,9 @@ object TextFunctions {
 
   /** Count-Min sketch cell coordinates of a term: array of d
     * (j, bkt = hash60("cms<j>:" || term) mod w) structs — the ONE
-    * definition shared by batch q217, its DuckDB oracle recipe, and
-    * the streaming maintenance face ([[graft.streaming.SketchStream]]),
-    * so the sketch a stream maintains is mergeable with any sketch a
-    * batch job built. */
+    * definition shared by q217, its maintained twin q270 and their
+    * DuckDB oracle recipe, so any two sketches built with the same
+    * (d, w) merge by per-cell sum. */
   def cmsCells(term: Column, d: Int, w: Long): Column =
     array((0 until d).map(j => struct(lit(j).as("j"),
       pmod(hash60(concat(lit(s"cms$j:"), term)), lit(w)).as("bkt"))): _*)

@@ -2,21 +2,15 @@ package graft.geo
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.FileSourceScanExec
 
-/** Z-order clustering: encoding parity (scalar == column), z-interval
-  * decomposition soundness, and the property that justifies the
-  * operator at 100 TB — the pushed-down predicates actually PRUNE a
-  * clustered layout (and provably do NOT prune an unclustered one),
-  * even for the hard case of a box straddling the space's midlines. */
+/** Z-order encoding: parity (scalar == column), z-interval
+  * decomposition soundness, and its advantage over the corner envelope
+  * on a box straddling the space's midlines. The z layout's pruning
+  * and exactness are pinned by SnapshotTableSpec (`readBbox`) and
+  * SnapshotZMergeSpec (merge-on-read). */
 class ZOrderSpec extends SparkTestBase {
 
   private val bits = 16
-
-  private def uniformPts(n: Int) = spark.range(n).select(
-    col("id"),
-    (pmod(col("id") * 7919, lit(36000)) / 100.0 - 180.0).as("lon"),
-    (pmod(col("id") * 104729, lit(18000)) / 100.0 - 90.0).as("lat"))
 
   // straddles (0, 0) — the single corner-envelope interval would
   // degenerate to ~3/4 of the z space here; the decomposition must not
@@ -70,56 +64,5 @@ class ZOrderSpec extends SparkTestBase {
     assert(envelope.toDouble / total > 0.5, "test premise: envelope degenerates")
     assert(covered / total < 0.10,
       s"decomposition should cover <10% of z space, covered ${covered / total}")
-  }
-
-  /** Runs the read, returns (ids, files enumerated by the scan after
-    * partition pruning). */
-  private def runAndCountFiles(read: org.apache.spark.sql.DataFrame): (Array[Long], Long) = {
-    val rows = read.collect().map(_.getAs[Long]("id")).sorted
-    val scans = read.queryExecution.executedPlan.collect {
-      case s: FileSourceScanExec => s
-    }
-    assert(scans.nonEmpty, read.queryExecution.executedPlan.toString)
-    (rows, scans.head.metrics("numFiles").value)
-  }
-
-  private def countParquetFiles(root: String): Long = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
-      .count(p => p.getFileName.toString.endsWith(".parquet"))
-  }
-
-  test("clustered layout: bbox read prunes zbucket directories and stays exact") {
-    import spark.implicits._
-    // 40k uniform points; the straddling box covers ~2.5% of the extent
-    val pts = uniformPts(40000)
-    val root = "target/test_zcluster"
-    ZOrder.cluster(pts, "lon", "lat", bits, root, numFiles = 32)
-    val total = countParquetFiles(root)
-
-    val read = ZOrder.bboxRead(spark, root, "lon", "lat", bits,
-      box._1, box._2, box._3, box._4)
-    val (got, filesRead) = runAndCountFiles(read)
-    val want = pts.filter(col("lon") >= box._1 && col("lon") <= box._2 &&
-        col("lat") >= box._3 && col("lat") <= box._4)
-      .select("id").as[Long].collect().sorted
-    assert(got.sameElements(want))
-    assert(filesRead > 0 && filesRead * 2 <= total,
-      s"expected <= half of $total files after zbucket pruning, read $filesRead")
-  }
-
-  test("row-ordered layout reads everything — clustering is what buys the skip") {
-    val root = "target/test_zcluster_rowordered"
-    // same columns, same file count, but id-ordered (spatially random)
-    // and unpartitioned: no directory to prune, every file overlaps z
-    uniformPts(40000)
-      .withColumn("zval", ZOrder.zValue(col("lon"), col("lat"), bits))
-      .withColumn("zbucket", shiftright(col("zval"), 2 * bits - ZOrder.BucketBits))
-      .repartitionByRange(32, col("id"))
-      .write.mode("overwrite").parquet(root)
-    val read = ZOrder.bboxRead(spark, root, "lon", "lat", bits,
-      box._1, box._2, box._3, box._4)
-    val (_, filesRead) = runAndCountFiles(read)
-    assert(filesRead == 32, s"unclustered layout should read all 32 files, read $filesRead")
   }
 }

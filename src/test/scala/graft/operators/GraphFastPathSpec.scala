@@ -75,6 +75,19 @@ class GraphFastPathSpec extends SparkTestBase {
     assert(seen.value <= 4L * 11L, s"the gate read ${seen.value} rows")
   }
 
+  test("collectUnder under the cap: one job for one partition, two for four") {
+    import org.apache.spark.JobCounter
+    for ((parts, jobs) <- Seq(1 -> 1, 4 -> 2)) {
+      // RDD-backed: a frame whose row count the optimizer knows (a range)
+      // has its limit removed, and then collects in one job anyway
+      val input = spark.sparkContext.parallelize(0L until 100L, parts).toDF("u")
+        .select(col("u"), col("u").as("v"))
+      val (got, n) = JobCounter(spark.sparkContext)(DriverGraph.collectUnder(input))
+      assert(got.map(_.length).contains(100))
+      assert(n.jobs == jobs, s"$parts partitions: ${n.jobs} jobs")
+    }
+  }
+
   test("collectUnder: cap 0 takes the distributed path even on an empty input") {
     val empty = spark.range(0L).select(col("id").as("u"), col("id").as("v"))
     assert(withCap(0L) { DriverGraph.collectUnder(empty) }.isEmpty)

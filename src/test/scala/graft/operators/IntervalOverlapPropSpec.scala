@@ -7,9 +7,7 @@ import org.scalacheck.Gen
 /** Property coverage for the newest operators beyond their DuckDB
   * oracles: interval-overlap join vs brute force (negative coordinates
   * included — floor-division bucketing must stay sound below zero),
-  * the JTS overlay area vs the rectangle closed form, and the
-  * streaming-side hash replica vs the Spark-SQL hash on arbitrary
-  * strings. */
+  * and the JTS overlay area vs the rectangle closed form. */
 class IntervalOverlapPropSpec extends SparkTestBase with PropHelpers {
   import spark.implicits._
 
@@ -62,17 +60,6 @@ class IntervalOverlapPropSpec extends SparkTestBase with PropHelpers {
       val bad = rows.select(area.as("got"), col("expect"))
         .filter(abs(col("got") - col("expect")) > 1e-9).count()
       assert(bad == 0L, s"$bad rectangle pairs disagree with the closed form")
-    }
-  }
-
-  test("NearDupStream.hash60 equals the Spark-SQL hash60 on arbitrary strings") {
-    val str = Gen.listOfN(12, Gen.alphaNumChar).map(_.mkString)
-    forAll(Gen.listOfN(40, str), Gen.const(())) { (ss, _) =>
-      val viaSql = ss.toDF("s")
-        .select(graft.text.TextFunctions.hash60(col("s")).as("h"))
-        .as[Long].collect()
-      val viaScala = ss.map(graft.streaming.NearDupStream.hash60)
-      assert(viaSql.toSeq == viaScala, "hash60 replica diverges")
     }
   }
 }

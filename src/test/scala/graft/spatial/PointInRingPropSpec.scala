@@ -3,9 +3,11 @@ package graft.spatial
 import graft.PropHelpers
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 
-/** The engine's crossing-number containment must agree with JTS
+/** The engine's crossing-number containment (the `pip_contains`
+  * kernel, [[PointInRingExpr.contains]]) must agree with JTS
   * `covers` (the reference's geometry authority, vendored spatialjoin /
   * osm2rdf GeometryHandler) on arbitrary simple polygons. Integer
   * vertex and probe coordinates keep every cross product exact in
@@ -14,6 +16,9 @@ import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 class PointInRingPropSpec extends AnyFunSuite with PropHelpers {
 
   private val gf = new GeometryFactory()
+
+  private def inRing(xs: Array[Double], ys: Array[Double], px: Double, py: Double): Boolean =
+    PointInRingExpr.contains(ArrayData.toArrayData(xs), ArrayData.toArrayData(ys), px, py)
 
   private val polyGen: Gen[Array[Coordinate]] = for {
     n <- Gen.choose(4, 12)
@@ -32,7 +37,7 @@ class PointInRingPropSpec extends AnyFunSuite with PropHelpers {
         val ys = ring.map(_.y)
         val poly = gf.createPolygon(ring)
         val pt = gf.createPoint(new Coordinate(px.toDouble, py.toDouble))
-        val got = SpatialJoin.pointInRing(xs, ys, px.toDouble, py.toDouble)
+        val got = inRing(xs, ys, px.toDouble, py.toDouble)
         val want = poly.covers(pt)
         assert(got === want, s"disagree at ($px,$py) on ${poly.toText}")
       }
@@ -45,10 +50,10 @@ class PointInRingPropSpec extends AnyFunSuite with PropHelpers {
         val xs = ring.map(_.x * 2) // doubling keeps midpoints integral
         val ys = ring.map(_.y * 2)
         xs.indices.dropRight(1).foreach { i =>
-          assert(SpatialJoin.pointInRing(xs, ys, xs(i), ys(i)), s"vertex $i")
+          assert(inRing(xs, ys, xs(i), ys(i)), s"vertex $i")
           val mx = (xs(i) + xs(i + 1)) / 2
           val my = (ys(i) + ys(i + 1)) / 2
-          assert(SpatialJoin.pointInRing(xs, ys, mx, my), s"midpoint $i")
+          assert(inRing(xs, ys, mx, my), s"midpoint $i")
         }
       }
     }

@@ -2,6 +2,7 @@ package graft.spatial
 
 import scala.util.Random
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
@@ -97,7 +98,8 @@ class SaltedPipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     spark.sparkContext.parallelize(polys, 4).toDF("way_id", "xs", "ys")
 
   private def inRing(xs: Seq[Double], ys: Seq[Double], x: Double, y: Double): Boolean =
-    SpatialJoin.pointInRing(xs.toArray, ys.toArray, x, y)
+    PointInRingExpr.contains(ArrayData.toArrayData(xs.toArray), ArrayData.toArrayData(ys.toArray),
+      x, y)
 
   /** The three joins as (points, mode, salt, ringDict) -> (doc_id, id). */
   private val joins: Seq[(String, (DataFrame, String, Int, String) => DataFrame)] = Seq(
@@ -110,7 +112,7 @@ class SaltedPipJoinSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       ringsDf, Res, mode = mode, salt = salt, hotThreshold = Hot, ringDict = rd)
       .select(col("doc_id"), col("rel_id"))))
 
-  /** Brute-force rows of each join, from [[SpatialJoin.pointInRing]]. */
+  /** Brute-force rows of each join, from [[PointInRingExpr.contains]]. */
   private lazy val expected: Map[String, Seq[(Long, Long)]] = {
     val pip = for {
       (d, _, x, y) <- points

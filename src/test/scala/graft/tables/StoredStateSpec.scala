@@ -4,10 +4,10 @@ import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
 import graft.SparkTestBase
 
-/** The stored-state cache must be keyed by the CONTENT of the input
-  * fixture dir (r5 advice): a fixture change under the same path must
-  * produce a different cache root, so Bench's `_stored` twins can
-  * never serve state derived from older inputs. */
+/** The stored-state cache must be keyed by the input fixture dir's
+  * files (path, size, mtime), re-read on every call: a fixture change
+  * under the same path must produce a different cache root, so Bench's
+  * `_stored` twins do not serve state derived from older inputs. */
 class StoredStateSpec extends SparkTestBase {
 
   private def mkFixture(): java.nio.file.Path = {
@@ -73,5 +73,18 @@ class StoredStateSpec extends SparkTestBase {
     assert(get().count() === 5)
     assert(get().count() === 5)
     assert(builds === 1, "second read must come from parquet, not the builder")
+  }
+
+  test("table() serves the new rows after a fixture file is rewritten in the same JVM") {
+    val d = mkFixture()
+    val f = d.resolve("rows.txt")
+    def get() = StoredState.table(spark, d.toString, "rows") {
+      import spark.implicits._
+      Files.readAllLines(f).toArray(Array.empty[String]).toSeq.toDF("line")
+    }
+    Files.writeString(f, "x\ny\n")
+    assert(get().count() === 2)
+    Files.writeString(f, "x\ny\nz\n") // a different size
+    assert(get().count() === 3, "a rewritten fixture must not serve the old state")
   }
 }
