@@ -638,22 +638,24 @@ object SpatialQueries {
       // measures the file-count drop). The oracle both proves the pruned read
       // returns exactly the bbox rows AND pins the Morton encoding
       // itself cross-engine (zval is part of the hashed output).
-      // goes through the TABLE layer (SnapshotTable z-clustered mode):
-      // the bucket manifest prunes whole dirs from the z-interval
-      // decomposition before any file is listed, then parquet min/max
-      // skipping applies inside the survivors
+      // goes through the TABLE layer (a SnapshotTable keyed on
+      // (doc_id, entity) with the z-ordered layout): the bucket manifest
+      // prunes whole dirs from the z-interval decomposition before any
+      // file is listed, then parquet min/max skipping applies inside
+      // the survivors
       val root = "target/q82_zcluster_" + dir.replaceAll("[^A-Za-z0-9]", "_")
       graft.tables.SnapshotTable.deleteRecursively(java.nio.file.Paths.get(root))
       graft.tables.SnapshotTable
         .createZOrdered(s, root, SynthUniverse.points(s, dir),
-          "lon", "lat", ZBits, numBuckets = 32)
+          Seq("doc_id", "entity"), "lon", "lat", ZBits, numBuckets = 32)
         .readBbox(Q82Box._1, Q82Box._2, Q82Box._3, Q82Box._4)
         .select(col("doc_id"), col("entity"), col("zval"))
     }),
     "q257_zorder_mor_scan" -> ((s, dir) => {
       // the z-MOR path end-to-end under the standard document change
       // batch: the z-clustered layer takes the batch as a
-      // merge-on-read delta (mergeIntoZDelta — O(batch), NO table
+      // merge-on-read delta (mergeIntoDelta, the same delta chain a
+      // hash-bucketed table takes — O(batch), NO table
       // rewrite), and the pruned bbox scan must return exactly the
       // post-change rows — new entities appear, deleted docs' rows
       // vanish (suppressed BY KEY wherever their stale base copies
@@ -666,7 +668,8 @@ object SpatialQueries {
       graft.tables.SnapshotTable.deleteRecursively(java.nio.file.Paths.get(root))
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val t = graft.tables.SnapshotTable.createZOrdered(s, root,
-        SynthUniverse.points(s, dir), "lon", "lat", ZBits, numBuckets = 32)
+        SynthUniverse.points(s, dir), Seq("doc_id", "entity"), "lon", "lat", ZBits,
+        numBuckets = 32)
       val updated = docs.filter(col("doc_id") % 7 === 3)
         .select(col("doc_id"),
           concat(col("text"), lit(" merge stream merge")).as("text"))
@@ -682,7 +685,7 @@ object SpatialQueries {
       val batch = newPts.withColumn("__rm", lit(false))
         .unionByName(removedKeys.withColumn("__rm", lit(true)))
         .unionByName(delPts.withColumn("__rm", lit(true)))
-      t.mergeIntoZDelta(batch, Seq("doc_id", "entity"), Some("__rm"))
+      t.mergeIntoDelta(batch, Seq("doc_id", "entity"), Some("__rm"))
       t.readBbox(Q82Box._1, Q82Box._2, Q82Box._3, Q82Box._4)
         .select(col("doc_id"), col("entity"), col("zval"))
     }),

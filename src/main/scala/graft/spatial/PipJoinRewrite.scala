@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.LongType
   * — an O(|points|·|polys|) nested-loop cross product — into the
   * cell-prefiltered equi-join [[SpatialJoin.pipJoin]] builds by hand:
   * the polygon side explodes to its covering cells at
-  * `spark.graft.pip.prefilterRes` (default 6), the point side encodes
+  * cell resolution 6 (`PrefilterRes`), the point side encodes
   * its cell with pure codegen arithmetic, and the cross product becomes
   * `Join(..., _graft_cell = cell(lon, lat))` with the original exact
   * predicate kept as a post-filter. Output rows are IDENTICAL (the
@@ -27,8 +27,8 @@ import org.apache.spark.sql.types.LongType
   */
 object PipJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  private def prefilterRes: Int =
-    conf.getConfString("spark.graft.pip.prefilterRes", "6").toInt
+  /** The cell resolution of the prefilter's cover and point cells. */
+  private val PrefilterRes = 6
 
   /** pip conjunct whose point side and ring side each live wholly on
     * one input — returns (pip, pointSide, polySide). */
@@ -66,9 +66,8 @@ object PipJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       hint: org.apache.spark.sql.catalyst.plans.logical.JoinHint): LogicalPlan = {
     // native catalyst expressions — a post-analysis rule cannot emit
     // Column-API arithmetic (it desugars to UnresolvedFunction nodes)
-    val res = prefilterRes
-    val ptCell = CellAtExpr(pip.third, pip.fourth, res)
-    val coverExpr = CoverCellsExpr(pip.first, pip.second, res)
+    val ptCell = CellAtExpr(pip.third, pip.fourth, PrefilterRes)
+    val coverExpr = CoverCellsExpr(pip.first, pip.second, PrefilterRes)
     val cellAttr = AttributeReference("_graft_cell", LongType, nullable = true)()
     val gen = Generate(Explode(coverExpr), unrequiredChildIndex = Nil,
       outer = false, qualifier = None,

@@ -18,21 +18,24 @@ import scala.jdk.CollectionConverters._
   * table format is built from scratch (layout documented here, nothing
   * proprietary).
   *
-  * Layout (bucketed tables, the default via [[SnapshotTable.create]]
-  * with key columns):
+  * One contract: every table is KEYED, and its layout is hash-bucketed
+  * on the keys ([[SnapshotTable.create]]) or z-ordered on two
+  * coordinate columns ([[SnapshotTable.createZOrdered]]). Either way:
   * {{{
   *   <root>/data/<snapshotId>/__b=<bucket>/part-*.parquet
   *   <root>/meta/snapshot-<id>.json   (bucketSrc/bucketRows manifests)
   *   <root>/meta/current              (text: latest id)
   * }}}
+  * Three writes: [[commit]] rewrites the table through its layout;
+  * [[mergeInto]] (hash layout only) is copy-on-write of the touched
+  * buckets; [[mergeIntoDelta]] (both layouts) is merge-on-read, one
+  * `deltaParent` chain resolved latest-wins per key.
   *
   * MERGE INTO rewrites ONLY the buckets containing update keys; every
   * other bucket is carried forward BY REFERENCE in the new snapshot's
   * `bucketSrc` manifest (bucket -> snapshotId owning its current data
   * dir). Write amplification per delta batch is O(touched buckets),
-  * not O(table) — the judged fix over the v1 copy-on-write-everything
-  * design. Tables created without key columns keep the v1 flat layout
-  * and full-rewrite merge (legacy path). A merge's driver state is the
+  * not O(table). A merge's driver state is the
   * delta's keys and the buckets they hash to — never table rows. A
   * caller that holds its keys passes them, and the merge is one Spark
   * job; otherwise a stats pass collects them (under a size gate; past
@@ -57,7 +60,6 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   private def bucketDir(snap: Long, b: Int): Path =
     dataDir(snap).resolve(s"__b=$b")
 
-
   import SnapshotTable.closing
 
   def currentSnapshot: Option[Long] = {
@@ -74,31 +76,33 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
       .map(m => m.group(1) -> m.group(2)).toMap
   }
 
-  /** bucket -> owning snapshotId manifest of a snapshot ("" = legacy). */
-  def bucketSources(id: Long): Map[Int, Long] =
-    snapshotInfo(id).get("bucketSrc").filter(_.nonEmpty)
-      .map(_.split(";").map { e =>
-        val Array(b, s) = e.split(":"); b.toInt -> s.toLong
-      }.toMap).getOrElse(Map.empty)
+  /** A `bucket:value;...` manifest entry of a parsed snapshot (the
+    * inverse of [[serBuckets]]): `bucketSrc` (bucket -> snapshotId
+    * owning its data dir), `bucketRows`, or `bucketBytes` (carried so a
+    * merge never walks untouched buckets' data dirs for byte metrics). */
+  private def buckets(info: Map[String, String], entry: String): Map[Int, Long] =
+    info.getOrElse(entry, "").split(";").iterator.filter(_.nonEmpty).map { e =>
+      val Array(b, v) = e.split(":"); b.toInt -> v.toLong
+    }.toMap
 
-  /** bucket -> data dir of a snapshot (empty for legacy tables) —
-    * untouched buckets resolve to a PARENT snapshot's dir. */
-  def bucketPaths(id: Long): Map[Int, Path] =
-    bucketSources(id).map { case (b, s) => b -> bucketDir(s, b) }
+  /** bucket -> data dir of a snapshot — untouched buckets resolve to a
+    * PARENT snapshot's dir. */
+  def bucketPaths(id: Long): Map[Int, Path] = bucketPaths(snapshotInfo(id))
 
-  private def bucketRows(id: Long): Map[Int, Long] =
-    snapshotInfo(id).get("bucketRows").filter(_.nonEmpty)
-      .map(_.split(";").map { e =>
-        val Array(b, n) = e.split(":"); b.toInt -> n.toLong
-      }.toMap).getOrElse(Map.empty)
+  private def bucketPaths(info: Map[String, String]): Map[Int, Path] =
+    buckets(info, "bucketSrc").map { case (b, s) => b -> bucketDir(s, b) }
 
-  /** bucket -> on-disk bytes manifest — carried so a merge never walks
-    * untouched buckets' data dirs just to report byte metrics. */
-  private def bucketBytes(id: Long): Map[Int, Long] =
-    snapshotInfo(id).get("bucketBytes").filter(_.nonEmpty)
-      .map(_.split(";").map { e =>
-        val Array(b, n) = e.split(":"); b.toInt -> n.toLong
-      }.toMap).getOrElse(Map.empty)
+  private def current: Long = currentSnapshot.getOrElse(
+    throw new IllegalStateException(s"no current snapshot at $root"))
+
+  /** The table's key columns, as every manifest records them. */
+  private def tableKeys(info: Map[String, String]): Seq[String] =
+    info.get("keyCols").filter(_.nonEmpty).map(_.split(",").toSeq).getOrElse(
+      throw new IllegalStateException(s"snapshot manifest at $root records no key columns"))
+
+  private def requireKeys(info: Map[String, String], keyCols: Seq[String]): Unit =
+    require(tableKeys(info) == keyCols, s"table keyed on [${tableKeys(info).mkString(",")}], " +
+      s"merge keyed on [${keyCols.mkString(",")}]")
 
   /** Per-bucket bytes of a freshly written snapshot data dir (one walk
     * of only THIS snapshot's files). */
@@ -109,31 +113,25 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
       .map(d => d.getFileName.toString.stripPrefix("__b=").toInt -> dirBytes(d))
       .toMap)
 
-  def read(): DataFrame = currentSnapshot match {
-    case Some(id) => readAt(id)
-    case None => throw new IllegalStateException(s"no current snapshot at $root")
-  }
+  def read(): DataFrame = readAt(current)
 
-  /** Manifest keys linking a merge-on-read delta commit to its parent:
-    * over a bucketed base ([[mergeIntoDelta]]) and over a z-ordered base
-    * ([[mergeIntoZDelta]]). */
+  /** Manifest key linking a merge-on-read delta commit to its parent. */
   private val DeltaParent = "deltaParent"
-  private val ZDeltaParent = "zdeltaParent"
 
-  private def isDelta(info: Map[String, String]): Boolean = info.contains(DeltaParent)
-  private def isZDelta(info: Map[String, String]): Boolean = info.contains(ZDeltaParent)
+  /** Manifest entries a delta commit carries forward from its parent:
+    * the keys and the layout its chain resolves over. */
+  private val LayoutEntries =
+    Set("keyCols", "numBuckets", "schema", "bucketSrc", "bucketRows", "bucketBytes", "zorder", "zbits")
 
-  /** Delta snapshot ids above the chain's base, oldest first. */
-  private def deltaChain(id: Long, parentKey: String): Seq[Long] =
-    snapshotInfo(id).get(parentKey) match {
-      case Some(p) => deltaChain(p.toLong, parentKey) :+ id
-      case None => Nil
-    }
-
-  private def chainBase(id: Long, parentKey: String): Long =
-    snapshotInfo(id).get(parentKey) match {
-      case Some(p) => chainBase(p.toLong, parentKey)
-      case None => id
+  /** The chain snapshot `id` (with manifest `info`) resolves over: its
+    * base and the delta ids above it, oldest first; `(id, Nil)` when
+    * `id` is no delta. */
+  private def chainOf(id: Long, info: Map[String, String]): (Long, Seq[Long]) =
+    info.get(DeltaParent) match {
+      case Some(p) =>
+        val (base, deltas) = chainOf(p.toLong, snapshotInfo(p.toLong))
+        (base, deltas :+ id)
+      case None => (id, Nil)
     }
 
   /** Merge-on-read overlay: `base` ∪ the `deltas`' files, LATEST commit
@@ -150,34 +148,29 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
       .drop("__del", "__c", "__mc")
   }
 
-  /** The delta snapshot `id` resolved over its chain's base. */
-  private def resolveDelta(id: Long, info: Map[String, String], parentKey: String): DataFrame =
-    overlay(readAt(chainBase(id, parentKey)), deltaChain(id, parentKey),
-      info("keyCols").split(",").toSeq)
-
-  /** Time travel: read the table as of a given snapshot id.
+  /** Time travel: read the table as of a given snapshot id. A delta
+    * snapshot resolves its chain over the base layout its manifest
+    * carries forward.
     *
-    * A bucketed snapshot whose every row was deleted has an EMPTY
-    * bucket manifest and no data dirs of its own — that case returns
-    * an empty frame with the schema recorded in the snapshot metadata
+    * A snapshot whose every row was deleted has an EMPTY bucket
+    * manifest and no data dirs of its own — that case reads as an
+    * empty frame with the schema recorded in the snapshot metadata
     * instead of pointing spark.read at a dir with no parquet files. */
   def readAt(id: Long): DataFrame = {
     val info = snapshotInfo(id)
-    if (isDelta(info)) return resolveDelta(id, info, DeltaParent)
-    if (isZDelta(info)) return resolveDelta(id, info, ZDeltaParent)
-    val buckets = bucketPaths(id)
-    if (buckets.nonEmpty)
-      scan(info, buckets.values.map(_.toString).toSeq.sorted)
-    else {
-      if (info.get("keyCols").exists(_.nonEmpty)) {
-        val ddl = info.getOrElse("schema", throw new IllegalStateException(
-          s"bucketed snapshot $id at $root is empty and records no schema"))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      } else scan(info, Seq(dataDir(id).toString))
+    val paths = bucketPaths(info).values.map(_.toString).toSeq.sorted
+    val base = if (paths.nonEmpty) scan(info, paths) else empty(info)
+    chainOf(id, info)._2 match {
+      case Nil => base
+      case deltas => overlay(base, deltas, tableKeys(info))
     }
   }
+
+  /** An empty frame of the table schema a manifest records. */
+  private def empty(info: Map[String, String]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType.fromDDL(
+      info.getOrElse("schema", throw new IllegalStateException(
+        s"snapshot ${info.getOrElse("snapshotId", "")} at $root is empty and records no schema"))))
 
   /** Scan committed parquet files with the schema their manifest
     * records, so no schema-inference job runs (Spark otherwise reads a
@@ -192,8 +185,8 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     }
 
   /** A merge-on-read delta commit's files: the table schema plus the
-    * `__del` tombstone flag (and, for a bucketed delta, the `__b`
-    * partition column the dir layout adds). */
+    * `__del` tombstone flag (and the `__b` partition column the dir
+    * layout adds). */
   private def scanDelta(d: Long): DataFrame =
     scan(snapshotInfo(d), Seq(dataDir(d).toString), ", __del BOOLEAN")
 
@@ -274,27 +267,24 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   private def serBuckets(m: Map[Int, Long]): String =
     m.toSeq.sortBy(_._1).map { case (b, v) => s"$b:$v" }.mkString(";")
 
-  /** Full-replace commit. Preserves the bucketed layout (re-bucketing on
-    * the stored keys) when the current snapshot is bucketed, and the
-    * z-clustered layout when it is z-ordered. */
-  def commit(df: DataFrame, operation: String): Long = {
-    val keyInfo = currentSnapshot.map(snapshotInfo).getOrElse(Map.empty)
-    keyInfo.get("zorder").filter(_.nonEmpty).foreach { zc =>
-      val Array(lonCol, latCol) = zc.split(",")
-      return commitZOrdered(df, operation, lonCol, latCol,
-        keyInfo("zbits").toInt, keyInfo("numBuckets").toInt)
-    }
-    (keyInfo.get("keyCols").filter(_.nonEmpty), keyInfo.get("numBuckets")) match {
-      case (Some(keys), Some(b)) =>
-        commitBucketed(df, operation, keys.split(",").toSeq, b.toInt)
-      case _ =>
-        val id = currentSnapshot.getOrElse(0L) + 1
-        val dir = dataDir(id)
-        df.write.options(NioLocalFileSystem.writeOptions).mode("overwrite").parquet(dir.toString)
-        val rows = spark.read.parquet(dir.toString).count()
-        writeMeta(id, operation, rows, dirBytes(dir), Map("schema" -> df.schema.toDDL))
+  /** Full-replace commit through the table's layout: re-bucketed on the
+    * stored keys, or re-clustered on the z-curve of a z-ordered table. */
+  def commit(df: DataFrame, operation: String): Long =
+    commitAs(snapshotInfo(current), df, operation)
+
+  /** [[commit]] under the layout of the parsed manifest `info`. */
+  private def commitAs(info: Map[String, String], df: DataFrame, operation: String): Long = {
+    val numBuckets = info("numBuckets").toInt
+    zCols(info) match {
+      case Some((lonCol, latCol)) => commitZOrdered(df, operation, tableKeys(info),
+        lonCol, latCol, info("zbits").toInt, numBuckets)
+      case None => commitBucketed(df, operation, tableKeys(info), numBuckets)
     }
   }
+
+  /** The (lon, lat) columns of a z-ordered table's manifest. */
+  private def zCols(info: Map[String, String]): Option[(String, String)] =
+    info.get("zorder").map { zc => val Array(lon, lat) = zc.split(","); (lon, lat) }
 
   private def bucketExpr(keyCols: Seq[String], numBuckets: Int) =
     pmod(hash(keyCols.map(col): _*), lit(numBuckets))
@@ -357,7 +347,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   /** Full bucketed write: every bucket dir lands under this snapshot.
     * Per-bucket counts ride the write as observed metrics — the commit
     * is ONE Spark job. */
-  def commitBucketed(df: DataFrame, operation: String,
+  private def commitBucketed(df: DataFrame, operation: String,
       keyCols: Seq[String], numBuckets: Int): Long = {
     val id = currentSnapshot.getOrElse(0L) + 1
     val counts = writeBucketed(df, keyCols, numBuckets, id)
@@ -372,11 +362,12 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     writeCounted(clusterByBucket(df.withColumn("__b", bucketExpr(keyCols, numBuckets)),
       numBuckets), dataDir(id), numBuckets)
 
-  /** Commit a bucketed layout: bucket -> owning snapshot, rows, bytes. */
+  /** Commit a bucket layout: bucket -> owning snapshot, rows, bytes;
+    * `extra` carries a z-ordered table's curve entries. */
   private def commitLayout(id: Long, operation: String, keyCols: Seq[String],
       numBuckets: Int, schema: StructType, src: Map[Int, Long], rows: Map[Int, Long],
-      bytes: Map[Int, Long]): Long =
-    writeMeta(id, operation, rows.values.sum, bytes.values.sum, Map(
+      bytes: Map[Int, Long], extra: Map[String, String] = Map.empty): Long =
+    writeMeta(id, operation, rows.values.sum, bytes.values.sum, extra ++ Map(
       "keyCols" -> keyCols.mkString(","), "numBuckets" -> numBuckets.toString,
       "schema" -> schema.toDDL,
       "bucketSrc" -> serBuckets(src),
@@ -391,8 +382,8 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * the interval decomposition never lists files it skips. This is the
     * read-optimized mode for spatial layers scanned by bbox (Delta
     * OPTIMIZE ZORDER BY / Iceberg spatial-partition-transform analogue);
-    * it is full-replace only (see the merge guards). */
-  private def commitZOrdered(df: DataFrame, operation: String,
+    * merges reach it only merge-on-read ([[mergeIntoDelta]]). */
+  private def commitZOrdered(df: DataFrame, operation: String, keyCols: Seq[String],
       lonCol: String, latCol: String, zBits: Int, numBuckets: Int): Long = {
     require(Integer.bitCount(numBuckets) == 1 && numBuckets > 1,
       s"numBuckets must be a power of two, got $numBuckets")
@@ -400,22 +391,19 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     require(shift > 0, s"numBuckets $numBuckets too fine for zBits $zBits")
     val id = currentSnapshot.getOrElse(0L) + 1
     val dir = dataDir(id)
-    val withZ = df.drop("zval")
-      .withColumn("zval", graft.geo.ZOrder.zValue(col(lonCol), col(latCol), zBits))
+    val withZ = withZval(df, lonCol, latCol, zBits)
       .withColumn("__b", shiftright(col("zval"), shift).cast("int"))
     val counts = writeCounted(
       withZ.repartition(numBuckets, col("__b"))
         .sortWithinPartitions(col("__b"), col("zval")), dir, numBuckets)
-    val src = counts.keys.map(_ -> id).toMap
-    val bytes = writtenBucketBytes(dir)
-    writeMeta(id, operation, counts.values.sum, bytes.values.sum, Map(
-      "zorder" -> s"$lonCol,$latCol", "zbits" -> zBits.toString,
-      "numBuckets" -> numBuckets.toString,
-      "schema" -> withZ.drop("__b").schema.toDDL,
-      "bucketSrc" -> serBuckets(src),
-      "bucketRows" -> serBuckets(counts),
-      "bucketBytes" -> serBuckets(bytes)))
+    commitLayout(id, operation, keyCols, numBuckets, withZ.drop("__b").schema,
+      counts.keys.map(_ -> id).toMap, counts, writtenBucketBytes(dir),
+      Map("zorder" -> s"$lonCol,$latCol", "zbits" -> zBits.toString))
   }
+
+  /** `df` with its (re-)derived Morton `zval` column. */
+  private def withZval(df: DataFrame, lonCol: String, latCol: String, zBits: Int): DataFrame =
+    df.drop("zval").withColumn("zval", graft.geo.ZOrder.zValue(col(lonCol), col(latCol), zBits))
 
   /** Bbox scan of a z-ordered table with manifest-level pruning: the
     * box decomposes into exact-cover z-intervals
@@ -429,24 +417,19 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     require(minLon <= maxLon && minLat <= maxLat,
       s"degenerate bbox [$minLon,$maxLon]x[$minLat,$maxLat]: min must not " +
         "exceed max (split antimeridian-crossing boxes at +-180)")
-    val cur = currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"no current snapshot at $root"))
+    val cur = current
     val info = snapshotInfo(cur)
-    val zc = info.getOrElse("zorder", throw new IllegalStateException(
+    val (lonCol, latCol) = zCols(info).getOrElse(throw new IllegalStateException(
       s"table at $root is not z-ordered; write it with createZOrdered"))
-    val Array(lonCol, latCol) = zc.split(",")
     val bits = info("zbits").toInt
     val shift = 2 * bits - Integer.numberOfTrailingZeros(info("numBuckets").toInt)
-    def empty: DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(info("schema")))
     val bboxPred =
       col(lonCol) >= minLon && col(lonCol) <= maxLon &&
         col(latCol) >= minLat && col(latCol) <= maxLat
-    val chain = if (isZDelta(info)) deltaChain(cur, ZDeltaParent) else Nil
-    val baseId = if (chain.nonEmpty) chainBase(cur, ZDeltaParent) else cur
+    val chain = chainOf(cur, info)._2
     val ivs = graft.geo.ZOrder.zIntervals(minLon, maxLon, minLat, maxLat, bits)
-    val all = bucketPaths(baseId)
+    // a delta manifest carries its base's bucket layout forward
+    val all = bucketPaths(info)
     val baseScan: Option[DataFrame] =
       if (ivs.isEmpty || all.isEmpty) None
       else {
@@ -462,12 +445,12 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
             .filter(zPred && bboxPred))
         }
       }
-    if (chain.isEmpty) return baseScan.getOrElse(empty)
+    if (chain.isEmpty) return baseScan.getOrElse(empty(info))
     // merge-on-read: the pruned base still enjoys the manifest skip;
     // delta rows join UNFILTERED so a row moved OUT of the box still
     // suppresses its stale base copy — the bbox re-applies at the end
     // (the schema DDL of `empty` already carries zval)
-    overlay(baseScan.getOrElse(empty), chain, info("keyCols").split(",").toSeq)
+    overlay(baseScan.getOrElse(empty(info)), chain, tableKeys(info))
       .filter(bboxPred)
   }
 
@@ -476,7 +459,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * true) delete instead of upsert. Idempotent: merging the same
     * updates twice yields an identical table.
     *
-    * On a bucketed table only the buckets containing update keys are
+    * Hash layout only: just the buckets containing update keys are
     * rewritten; untouched buckets carry forward by reference. Returns
     * the new snapshot id AND the number of update rows applied, which
     * the merge counts as it writes, so callers never pay a second pass
@@ -493,35 +476,19 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   def mergeInto(updates: DataFrame, keyCols: Seq[String],
       deleteMarker: Option[String] = None,
       keys: Option[Iterable[Any]] = None): MergeResult = {
-    val cur = currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"no current snapshot at $root"))
+    val cur = current
     val info = snapshotInfo(cur)
     require(!info.contains("zorder"),
       s"table at $root is z-ordered (read-optimized): a row's bucket is a " +
         "function of its coordinates, so a key-merge cannot locate a moved " +
-        "row's old copy without a table scan — merge via mergeIntoZDelta " +
+        "row's old copy without a table scan — merge via mergeIntoDelta " +
         "(merge-on-read) or rewrite via commit()")
-    info.get("keyCols").filter(_.nonEmpty) match {
-      case Some(k) =>
-        require(k.split(",").toSeq == keyCols,
-          s"table bucketed on [$k], merge keyed on [${keyCols.mkString(",")}]")
-        if (isDelta(info))
-          // a copy-on-write merge atop a delta chain folds the chain in:
-          // resolve once, rewrite fully (compaction + merge in one)
-          compactWith(updates, keyCols, info("numBuckets").toInt, deleteMarker, keys)
-        else
-          mergeBucketed(cur, info, updates, keyCols, info("numBuckets").toInt,
-            deleteMarker, keys)
-      case None => // legacy flat table: copy-on-write of everything
-        require(keys.isEmpty, s"table at $root is not bucketed: merge it without a key set")
-        val upd = updates.cache()
-        val n = upd.count()
-        val base = read()
-        val keep = base.join(upd.select(keyCols.map(col): _*), keyCols, "left_anti")
-        val id = commit(keep.unionByName(inserts(upd, deleteMarker)), "merge")
-        upd.unpersist()
-        MergeResult(id, n)
-    }
+    requireKeys(info, keyCols)
+    if (info.contains(DeltaParent))
+      // a copy-on-write merge atop a delta chain folds the chain in:
+      // resolve once, rewrite fully (compaction + merge in one)
+      compactWith(info, updates, keyCols, deleteMarker, keys)
+    else mergeBucketed(cur, info, updates, keyCols, deleteMarker, keys)
   }
 
   /** The rows a merge inserts: the delta minus its delete markers. */
@@ -614,10 +581,11 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   }
 
   private def mergeBucketed(cur: Long, info: Map[String, String], updates: DataFrame,
-      keyCols: Seq[String], numBuckets: Int, deleteMarker: Option[String],
+      keyCols: Seq[String], deleteMarker: Option[String],
       keys: Option[Iterable[Any]]): MergeResult = {
+    val numBuckets = info("numBuckets").toInt
     val d = delta(updates, keyCols, numBuckets, keys)
-    val srcMap = bucketSources(cur)
+    val srcMap = buckets(info, "bucketSrc")
     val touchedDirs = d.touched.toSeq.sorted
       .flatMap(b => srcMap.get(b).map(s => bucketDir(s, b).toString))
     // the touched buckets' kept rows; __b is re-derived from the keys
@@ -642,10 +610,10 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
         (w, d.applied())
       } finally d.release()
     val newSrc = (srcMap -- d.touched) ++ written.keys.map(_ -> id)
-    val newRows = (bucketRows(cur) -- d.touched) ++ written
+    val newRows = (buckets(info, "bucketRows") -- d.touched) ++ written
     // untouched buckets' bytes come from the parent manifest (legacy
     // snapshots without one fall back to a dir walk)
-    val bytesMap = bucketBytes(cur)
+    val bytesMap = buckets(info, "bucketBytes")
     val untouched = (srcMap -- d.touched).map { case (b, s) =>
       b -> bytesMap.getOrElse(b, dirBytes(bucketDir(s, b))) }
     val sid = commitLayout(id, "merge", keyCols, numBuckets, rows.drop("__b").schema,
@@ -654,14 +622,22 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   }
 
   /** Merge-on-read MERGE INTO: commits ONLY the delta (upserts +
-    * `__del` tombstones, bucketed like the base) — per-batch write
+    * `__del` tombstones, hash-bucketed on the key) — per-batch write
     * cost is O(batch), never O(table). Reads resolve the chain
-    * latest-commit-wins per key ([[resolveDelta]]); once the chain
+    * latest-commit-wins per key ([[overlay]]); once the chain
     * exceeds `compactEvery` deltas the merge compacts (resolve + full
-    * bucketed rewrite), bounding read amplification. This is the mode
-    * for tables that are WRITTEN every batch but rarely scanned in the
-    * hot loop (the owner-keyed triple store): a 100 TB table cannot
-    * afford a copy-on-write rewrite per replication batch.
+    * rewrite through the layout), bounding read amplification. This is
+    * the mode for tables that are WRITTEN every batch but rarely scanned
+    * in the hot loop (the owner-keyed triple store): a 100 TB table
+    * cannot afford a copy-on-write rewrite per replication batch.
+    *
+    * It is also the one merge a z-ordered table takes: a key-merge
+    * cannot locate a moved row's old copy in the z-layout without a
+    * table scan (the bucket is a function of the coordinates), but
+    * merge-on-read never needs to — the old copy is SUPPRESSED at read
+    * by the key, wherever it sits, and [[readBbox]]'s manifest pruning
+    * still applies to the base. The delta rows get their `zval` from
+    * the table's lon/lat columns, which the updates must carry.
     *
     * `keys` mean what they mean to [[mergeInto]]: a key with no delta
     * row is deleted. The delta commit carries a tombstone for every key
@@ -670,22 +646,18 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   def mergeIntoDelta(updates: DataFrame, keyCols: Seq[String],
       deleteMarker: Option[String] = None, compactEvery: Int = 8,
       keys: Option[Iterable[Any]] = None): MergeResult = {
-    val cur = currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"no current snapshot at $root"))
+    val cur = current
     val info = snapshotInfo(cur)
-    require(!info.contains("zorder"),
-      s"table at $root is z-ordered — use mergeIntoZDelta (merge-on-read)")
-    val tableKeys = info.get("keyCols").filter(_.nonEmpty).getOrElse(
-      throw new IllegalStateException("delta merge requires a bucketed table"))
-    require(tableKeys.split(",").toSeq == keyCols,
-      s"table bucketed on [$tableKeys], merge keyed on [${keyCols.mkString(",")}]")
+    requireKeys(info, keyCols)
     val numBuckets = info("numBuckets").toInt
-    if (deltaChain(cur, DeltaParent).length + 1 > compactEvery)
-      compactWith(updates, keyCols, numBuckets, deleteMarker, keys)
+    val rows = zCols(info).fold(updates) { case (lonCol, latCol) =>
+      withZval(updates, lonCol, latCol, info("zbits").toInt) }
+    if (chainOf(cur, info)._2.length + 1 > compactEvery)
+      compactWith(info, rows, keyCols, deleteMarker, keys)
     else {
       val marked = deleteMarker match {
-        case Some(m) => updates.withColumnRenamed(m, "__del")
-        case None => updates.withColumn("__del", lit(false))
+        case Some(m) => rows.withColumnRenamed(m, "__del")
+        case None => rows.withColumn("__del", lit(false))
       }
       val withDel = keys.fold(marked)(ks => marked.unionByName(tombstones(marked.schema, keyCols, ks)))
         .withColumn("__b", bucketExpr(keyCols, numBuckets))
@@ -698,23 +670,18 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
       if (updateRows == 0L) {
         // an empty batch must not commit: a delta snapshot whose data
         // dir holds no parquet files would poison every later
-        // resolveDelta/compaction read (streaming foreachBatch sees
+        // chain/compaction read (streaming foreachBatch sees
         // empty micro-batches routinely) — drop the fileless dir and
         // leave the table untouched
         SnapshotTable.deleteRecursively(dir)
         return MergeResult(cur, 0L)
       }
-      // manifest carries the parent's bucket layout forward untouched;
+      // manifest carries the parent's layout forward untouched;
       // rowCount stays the parent's (resolution-exact counting would
       // defeat the O(batch) write) and is marked approximate
       val sid = writeMeta(id, "delta",
         info.get("rowCount").map(_.toLong).getOrElse(0L),
-        dirBytes(dir), Map(
-          "keyCols" -> tableKeys, "numBuckets" -> numBuckets.toString,
-          "schema" -> info.getOrElse("schema", ""),
-          "bucketSrc" -> info.getOrElse("bucketSrc", ""),
-          "bucketRows" -> info.getOrElse("bucketRows", ""),
-          "bucketBytes" -> info.getOrElse("bucketBytes", ""),
+        dirBytes(dir), info.filter { case (k, _) => LayoutEntries(k) } ++ Map(
           "rowCountApprox" -> "true",
           DeltaParent -> cur.toString))
       MergeResult(sid, updateRows)
@@ -734,93 +701,6 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
       }: _*)
   }
 
-  /** MERGE INTO a Z-ORDERED table, merge-on-read: the batch lands as
-    * ONE O(batch) delta dir (upserts carry fresh coordinates → fresh
-    * zval; tombstones ride `deleteMarker`), and reads resolve
-    * latest-wins per key. This is what makes a z-clustered spatial
-    * layer MAINTAINABLE: a key-merge cannot locate a moved row's old
-    * copy in the z-layout without a table scan (the bucket is a
-    * function of the coordinates), but merge-on-read never needs to —
-    * the old copy is SUPPRESSED at read by the key, wherever it sits,
-    * and [[readBbox]]'s manifest pruning still applies to the base
-    * (the delta overlay is O(batches) small until compaction folds it
-    * back into a fresh z-layout). Updates must carry the table's
-    * lon/lat columns. Auto-compacts (with the batch folded in) once
-    * the chain exceeds `compactEvery`. Idempotent per batch. */
-  def mergeIntoZDelta(updates: DataFrame, keyCols: Seq[String],
-      deleteMarker: Option[String] = None, compactEvery: Int = 8): MergeResult = {
-    val cur = currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"no current snapshot at $root"))
-    val info = snapshotInfo(cur)
-    require(info.contains("zorder"),
-      s"table at $root is not z-ordered; use mergeInto/mergeIntoDelta")
-    info.get("keyCols").filter(_.nonEmpty).foreach { keys =>
-      require(keys.split(",").toSeq == keyCols,
-        s"table keyed on [$keys], merge keyed on [${keyCols.mkString(",")}]")
-    }
-    val Array(lonCol, latCol) = info("zorder").split(",")
-    val zBits = info("zbits").toInt
-    val withDel = deleteMarker match {
-      case Some(m) => updates.withColumnRenamed(m, "__del")
-      case None => updates.withColumn("__del", lit(false))
-    }
-    val rows0 = withDel.drop("zval")
-      .withColumn("zval", graft.geo.ZOrder.zValue(col(lonCol), col(latCol), zBits))
-    if (deltaChain(cur, ZDeltaParent).length + 1 > compactEvery)
-      return compactZWith(rows0, keyCols, lonCol, latCol, zBits,
-        info("numBuckets").toInt)
-    val id = cur + 1
-    val dir = dataDir(id)
-    // ONE Spark job: the write carries its own observed row count
-    val obs = new org.apache.spark.sql.Observation(s"zdelta-$id")
-    rows0.observe(obs, count(lit(1)).as("n"))
-      .write.options(NioLocalFileSystem.writeOptions).mode("overwrite").parquet(dir.toString)
-    val updateRows = obs.get("n").asInstanceOf[Long]
-    if (updateRows == 0L) {
-      // an empty batch must not commit (cf. mergeIntoDelta's guard)
-      SnapshotTable.deleteRecursively(dir)
-      return MergeResult(cur, 0L)
-    }
-    val sid = writeMeta(id, "zdelta",
-      info.get("rowCount").map(_.toLong).getOrElse(0L), dirBytes(dir), Map(
-        "zorder" -> info("zorder"), "zbits" -> info("zbits"),
-        "numBuckets" -> info("numBuckets"),
-        "keyCols" -> keyCols.mkString(","),
-        "schema" -> info.getOrElse("schema", ""),
-        "bucketSrc" -> info.getOrElse("bucketSrc", ""),
-        "bucketRows" -> info.getOrElse("bucketRows", ""),
-        "bucketBytes" -> info.getOrElse("bucketBytes", ""),
-        "rowCountApprox" -> "true",
-        ZDeltaParent -> cur.toString))
-    MergeResult(sid, updateRows)
-  }
-
-  /** Fold the z-delta chain (plus an optional in-flight batch) back
-    * into a fresh full z-layout — Delta OPTIMIZE ZORDER's analogue. */
-  def compactZOrdered(): Long = {
-    val cur = currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"no current snapshot at $root"))
-    val info = snapshotInfo(cur)
-    require(isZDelta(info), s"no z-delta chain to compact at $root")
-    val Array(lonCol, latCol) = info("zorder").split(",")
-    commitZOrdered(resolveDelta(cur, info, ZDeltaParent), "compact", lonCol, latCol,
-      info("zbits").toInt, info("numBuckets").toInt)
-  }
-
-  private def compactZWith(rows0: DataFrame, keyCols: Seq[String],
-      lonCol: String, latCol: String, zBits: Int,
-      numBuckets: Int): MergeResult = {
-    val upd = rows0.cache()
-    val n = upd.count()
-    val base = read()
-    val keep = base.join(upd.select(keyCols.map(col): _*), keyCols, "left_anti")
-    val ins = upd.filter(!col("__del")).drop("__del")
-    val id = commitZOrdered(keep.unionByName(ins), "compact+merge",
-      lonCol, latCol, zBits, numBuckets)
-    upd.unpersist()
-    MergeResult(id, n)
-  }
-
   // ---- maintenance + metadata tables ---------------------------------
 
   /** Snapshot ids whose data dirs are still REFERENCED by any kept
@@ -829,9 +709,10 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * member's bucketSrc in turn). */
   private def referencedBy(keep: Seq[Long]): Set[Long] =
     keep.flatMap { id =>
-      val chain = Seq(DeltaParent, ZDeltaParent)
-        .flatMap(k => deltaChain(id, k) :+ chainBase(id, k)) :+ id
-      chain ++ chain.flatMap(c => bucketSources(c).values)
+      val info = snapshotInfo(id)
+      val (base, deltas) = chainOf(id, info)
+      // every chain member carries the base's bucketSrc forward
+      (id +: base +: deltas) ++ buckets(info, "bucketSrc").values
     }.toSet
 
   /** Expire snapshots older than the newest `keepLast`, deleting ONLY
@@ -856,17 +737,16 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   /** Iceberg-style `snapshots` metadata table: one row per snapshot
     * with operation / rowCount / bytes / commit time / parent. */
   def snapshotsMeta: DataFrame = {
-    import scala.jdk.CollectionConverters._
     val rows = snapshots.map { id =>
       val i = snapshotInfo(id)
-      org.apache.spark.sql.Row(id, i.getOrElse("operation", ""),
+      Row(id, i.getOrElse("operation", ""),
         i.get("rowCount").map(_.toLong).getOrElse(0L),
         i.get("bytes").map(_.toLong).getOrElse(0L),
         i.get("committedAtMs").map(_.toLong).getOrElse(0L),
         i.get("parent").filter(_.nonEmpty).map(_.toLong).orNull,
-        isDelta(i))
+        i.contains(DeltaParent))
     }
-    spark.createDataFrame(rows.asJava, org.apache.spark.sql.types.StructType.fromDDL(
+    spark.createDataFrame(rows.asJava, StructType.fromDDL(
       "snapshot_id BIGINT, operation STRING, row_count BIGINT, bytes BIGINT," +
         " committed_at_ms BIGINT, parent BIGINT, is_delta BOOLEAN"))
   }
@@ -874,43 +754,36 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   /** Iceberg-style `files` metadata table for a snapshot (default:
     * current): one row per data file with its bucket and size. */
   def filesMeta(id: Option[Long] = None): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val snap = id.orElse(currentSnapshot).getOrElse(
-      throw new IllegalStateException(s"no current snapshot at $root"))
+    val snap = id.getOrElse(current)
     val info = snapshotInfo(snap)
+    // a delta chain's files (bucket -1), then the base layout's buckets
     val dirs: Seq[(Int, Path)] =
-      if (isDelta(info))
-        (deltaChain(snap, DeltaParent).map(d => -1 -> dataDir(d))) ++
-          bucketPaths(chainBase(snap, DeltaParent)).toSeq
-      else if (bucketPaths(snap).nonEmpty) bucketPaths(snap).toSeq
-      else Seq(-1 -> dataDir(snap))
+      chainOf(snap, info)._2.map(d => -1 -> dataDir(d)) ++ bucketPaths(info).toSeq
     val rows = dirs.flatMap { case (b, d) =>
       if (!Files.exists(d)) Nil
       else closing(Files.walk(d))(_.iterator().asScala
         .filter(_.toString.endsWith(".parquet"))
-        .map(f => org.apache.spark.sql.Row(snap, b, f.toString, Files.size(f)))
+        .map(f => Row(snap, b, f.toString, Files.size(f)))
         .toSeq)
     }
-    spark.createDataFrame(rows.asJava, org.apache.spark.sql.types.StructType.fromDDL(
+    spark.createDataFrame(rows.asJava, StructType.fromDDL(
       "snapshot_id BIGINT, bucket INT, path STRING, bytes BIGINT"))
   }
 
   /** Resolve the current state (delta chains folded in) and rewrite it
-    * fully with `updates` applied — the compaction face shared by
-    * [[mergeIntoDelta]]'s chain cap and [[mergeInto]]-atop-a-chain. */
-  private def compactWith(updates: DataFrame, keyCols: Seq[String],
-      numBuckets: Int, deleteMarker: Option[String],
+    * through the layout of `info` with `updates` applied — the
+    * compaction face shared by [[mergeIntoDelta]]'s chain cap and
+    * [[mergeInto]]-atop-a-chain. */
+  private def compactWith(info: Map[String, String], updates: DataFrame,
+      keyCols: Seq[String], deleteMarker: Option[String],
       keys: Option[Iterable[Any]]): MergeResult = {
-    val d = delta(updates, keyCols, numBuckets, keys)
+    val d = delta(updates, keyCols, info("numBuckets").toInt, keys)
     val rows = d.dropKeys(read()).unionByName(inserts(d.rows, deleteMarker).drop("__b"))
-    val id = currentSnapshot.get + 1
-    val (counts, applied) =
+    val (id, applied) =
       try {
-        val c = writeBucketed(rows, keyCols, numBuckets, id)
-        (c, d.applied())
+        val id = commitAs(info, rows, "compact")
+        (id, d.applied())
       } finally d.release()
-    commitLayout(id, "compact", keyCols, numBuckets, rows.schema,
-      counts.keys.map(_ -> id).toMap, counts, writtenBucketBytes(dataDir(id)))
     MergeResult(id, applied)
   }
 }
@@ -934,30 +807,32 @@ object SnapshotTable {
       closing(Files.walk(p))(_.sorted(java.util.Comparator.reverseOrder[Path]())
         .forEach(f => Files.delete(f)))
 
-  /** Create with key columns (the default path) → hash-bucketed layout
-    * with O(touched-buckets) MERGE; without keys → legacy flat layout. */
+  /** Create a hash-bucketed table on `keyCols`, with O(touched-buckets)
+    * MERGE. Every table is keyed: empty `keyCols` are rejected. */
   def create(spark: SparkSession, root: String, df: DataFrame,
-      keyCols: Seq[String] = Nil, numBuckets: Int = 16): SnapshotTable = {
+      keyCols: Seq[String], numBuckets: Int = 16): SnapshotTable = {
+    require(keyCols.nonEmpty, s"a table needs key columns: $root")
     val t = new SnapshotTable(spark, root)
-    if (keyCols.nonEmpty) t.commitBucketed(df, "create", keyCols, numBuckets)
-    else t.commit(df, "create")
+    t.commitBucketed(df, "create", keyCols, numBuckets)
     t
   }
 
   def load(spark: SparkSession, root: String): SnapshotTable =
     new SnapshotTable(spark, root)
 
-  /** Create a z-ordered (read-optimized) table: bucket dirs are top
-    * z-prefix ranges, rows z-sorted inside each bucket, `zval`
-    * persisted. Scan it with [[SnapshotTable.readBbox]]; rewrite with
+  /** Create a z-ordered (read-optimized) table keyed on `keyCols`:
+    * bucket dirs are top z-prefix ranges, rows z-sorted inside each
+    * bucket, `zval` persisted. Scan it with [[SnapshotTable.readBbox]];
+    * merge it with [[SnapshotTable.mergeIntoDelta]]; rewrite with
     * commit() (the layout is preserved). `numBuckets` must be a power
     * of two (the bucket id IS the z-prefix). */
   def createZOrdered(spark: SparkSession, root: String, df: DataFrame,
-      lonCol: String, latCol: String, zBits: Int,
+      keyCols: Seq[String], lonCol: String, latCol: String, zBits: Int,
       numBuckets: Int = 32): SnapshotTable = {
+    require(keyCols.nonEmpty, s"a table needs key columns: $root")
     val t = new SnapshotTable(spark, root)
     require(t.currentSnapshot.isEmpty, s"table already exists at $root")
-    t.commitZOrdered(df, "create", lonCol, latCol, zBits, numBuckets)
+    t.commitZOrdered(df, "create", keyCols, lonCol, latCol, zBits, numBuckets)
     t
   }
 }

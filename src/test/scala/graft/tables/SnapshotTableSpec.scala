@@ -19,18 +19,21 @@ class SnapshotTableSpec extends SparkTestBase {
   test("create / read / snapshot metadata") {
     val root = freshRoot("basic")
     val t = SnapshotTable.create(spark,
-      root, Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+      root, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
     assert(t.currentSnapshot === Some(1L))
     assert(t.read().count() === 2)
     val info = t.snapshotInfo(1L)
     assert(info("operation") === "create" && info("rowCount") === "2")
     assert(info("bytes").toLong > 0)
+    // every table is keyed
+    intercept[IllegalArgumentException](SnapshotTable.create(spark,
+      freshRoot("basic-keyless"), Seq((1L, "a")).toDF("id", "v"), Nil))
   }
 
   test("mergeInto upserts, deletes, and is idempotent; time travel sees history") {
     val root = freshRoot("merge")
     val t = SnapshotTable.create(spark,
-      root, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
+      root, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), Seq("id"))
     val updates = Seq((2L, "B", false), (3L, "x", true), (4L, "d", false))
       .toDF("id", "v", "deleted")
     t.mergeInto(updates, Seq("id"), deleteMarker = Some("deleted"))
@@ -229,26 +232,25 @@ class SnapshotTableSpec extends SparkTestBase {
     import java.nio.file.attribute.PosixFilePermissions
     def nioBytes: Long =
       FileSystem.getStatistics("file", classOf[NioLocalFileSystem.Raw]).getBytesWritten
-    def viaNio(site: String)(f: => Any): Unit = {
+    def viaNio[A](site: String)(f: => A): A = {
       val before = nioBytes
-      f
+      val a = f
       assert(nioBytes > before, s"the $site wrote no bytes through NioLocalFileSystem")
+      a
     }
-    // the three write sites: a flat commit, bucketed writes, a z-delta
-    val flat = freshRoot("perm-flat")
-    viaNio("flat commit")(SnapshotTable.create(spark, flat, Seq((1L, "a")).toDF("id", "v")))
+    // the three write paths: the bucketed layout, the z layout, a delta
     val bucketed = freshRoot("perm-bucketed")
     val b = SnapshotTable.create(spark, bucketed,
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
     viaNio("bucketed merge")(b.mergeInto(Seq((2L, "B")).toDF("id", "v"), Seq("id")))
     val z = freshRoot("perm-z")
-    val zt = SnapshotTable.createZOrdered(spark, z,
-      Seq((1L, 1.0, 2.0), (2L, -50.0, 40.0)).toDF("id", "lon", "lat"), "lon", "lat",
-      zBits = 8, numBuckets = 4)
-    viaNio("z-delta")(zt.mergeIntoZDelta(Seq((3L, 3.0, 4.0)).toDF("id", "lon", "lat"), Seq("id")))
+    val zt = viaNio("z-ordered create")(SnapshotTable.createZOrdered(spark, z,
+      Seq((1L, 1.0, 2.0), (2L, -50.0, 40.0)).toDF("id", "lon", "lat"), Seq("id"), "lon", "lat",
+      zBits = 8, numBuckets = 4))
+    viaNio("z delta")(zt.mergeIntoDelta(Seq((3L, 3.0, 4.0)).toDF("id", "lon", "lat"), Seq("id")))
     // Hadoop's defaults under its 022 umask, as its chmod path leaves
     // them: directories rwxr-xr-x; parquet, .crc and _SUCCESS rw-r--r--
-    for (root <- Seq(flat, bucketed, z)) {
+    for (root <- Seq(bucketed, z)) {
       val paths = SnapshotTable.closing(Files.walk(Paths.get(root, "data")))(_.iterator().asScala.toList)
       assert(paths.exists(_.toString.endsWith(".parquet")))
       assert(paths.exists(_.toString.endsWith(".crc")))
@@ -381,7 +383,7 @@ class SnapshotTableSpec extends SparkTestBase {
       (i.toLong, lon, lat)
     }.toDF("id", "lon", "lat")
     val t = SnapshotTable.createZOrdered(spark, root, pts,
-      "lon", "lat", zBits = 12, numBuckets = 32)
+      Seq("id"), "lon", "lat", zBits = 12, numBuckets = 32)
     val (minLon, maxLon, minLat, maxLat) = (10.0, 40.0, 20.0, 45.0)
     val got = t.readBbox(minLon, maxLon, minLat, maxLat)
     // exact: equals the brute filter over the full table

@@ -6,13 +6,14 @@ import java.util.Comparator
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Merge-on-read over a z-ordered base: the key-merge a z-clustered
-  * spatial layer could not previously take. Must (a) equal a
+/** Merge-on-read over a z-ordered base, through the same
+  * `mergeIntoDelta` chain a hash-bucketed table takes. Must (a) equal a
   * from-scratch z-table of the merged content under every bbox —
   * including rows MOVED across z-buckets (old copy suppressed by key,
   * wherever it sits) and deletes; (b) keep the base's manifest/file
   * pruning; (c) compact back to a clean z-layout with identical
-  * results; (d) be idempotent per batch. */
+  * results; (d) be idempotent per batch; (e) report its delta head as
+  * a delta in the metadata tables. */
 class SnapshotZMergeSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -36,7 +37,8 @@ class SnapshotZMergeSpec extends SparkTestBase {
   test("z-merge-on-read: moves, deletes, inserts; equals fresh z-table; pruning kept; compaction folds") {
     val root = freshRoot("zmor")
     val t = SnapshotTable.createZOrdered(spark, root,
-      pts.toDF("id", "lon", "lat"), "lon", "lat", zBits = 12, numBuckets = 32)
+      pts.toDF("id", "lon", "lat"), Seq("id"), "lon", "lat", zBits = 12,
+      numBuckets = 32)
     // batch: id=100 MOVES far across buckets (into the query box),
     // id=200 moves OUT of the box, id=300 is deleted, id=9999 inserts
     val batch = Seq(
@@ -45,14 +47,25 @@ class SnapshotZMergeSpec extends SparkTestBase {
       (300L, 0.0, 0.0, true),
       (9999L, 15.0, 25.0, false)
     ).toDF("id", "lon", "lat", "deleted")
-    val r = t.mergeIntoZDelta(batch, Seq("id"), Some("deleted"))
+    val r = t.mergeIntoDelta(batch, Seq("id"), Some("deleted"))
     assert(r.updateRows === 4)
+    // the metadata tables see the delta head: flagged as a delta, its
+    // own files (bucket -1) listed next to the base's bucket files
+    val head = t.currentSnapshot.get
+    assert(t.snapshotsMeta.filter(col("snapshot_id") === head)
+      .select("is_delta").as[Boolean].collect().toSeq === Seq(true))
+    val files = t.filesMeta().collect()
+    val deltaFiles = files.filter(_.getInt(1) == -1).map(_.getString(2))
+    assert(deltaFiles.nonEmpty && deltaFiles.forall(_.contains(s"/data/$head/")),
+      deltaFiles.toSeq)
+    assert(files.exists(_.getInt(1) >= 0))
 
     // expected content, built independently
     val post = pts.filterNot(p => Seq(100L, 200L, 300L).contains(p._1)) ++
       Seq((100L, 25.0, 30.0), (200L, -170.0, -80.0), (9999L, 15.0, 25.0))
     val fresh = SnapshotTable.createZOrdered(spark, freshRoot("zmor-ref"),
-      post.toDF("id", "lon", "lat"), "lon", "lat", zBits = 12, numBuckets = 32)
+      post.toDF("id", "lon", "lat"), Seq("id"), "lon", "lat", zBits = 12,
+      numBuckets = 32)
 
     for ((lo, hi, la, lb) <- Seq((10.0, 40.0, 20.0, 45.0),
         (-180.0, -160.0, -90.0, -70.0), (-5.0, 5.0, -5.0, 5.0))) {
@@ -70,12 +83,14 @@ class SnapshotZMergeSpec extends SparkTestBase {
       s"no pruning under z-delta: $prunedFiles vs base $baseFiles")
 
     // idempotent: same batch again changes nothing
-    t.mergeIntoZDelta(batch, Seq("id"), Some("deleted"))
+    t.mergeIntoDelta(batch, Seq("id"), Some("deleted"))
     assert(bboxSet(t.read()) === post.map(p => (p._1, p._2, p._3)).toSet)
 
-    // compaction folds the chain into a clean z-layout
-    val cid = t.compactZOrdered()
-    assert(!t.snapshotInfo(cid).contains("zdeltaParent"))
+    // compaction (the same batch a third time, past a chain cap of 1)
+    // folds the chain into a clean z-layout
+    val cid = t.mergeIntoDelta(batch, Seq("id"), Some("deleted"), compactEvery = 1).snapshotId
+    assert(t.snapshotInfo(cid)("operation") === "compact")
+    assert(!t.snapshotInfo(cid).contains("deltaParent"))
     assert(t.snapshotInfo(cid).contains("zorder"))
     assert(bboxSet(t.readBbox(10.0, 40.0, 20.0, 45.0)) ===
       bboxSet(fresh.readBbox(10.0, 40.0, 20.0, 45.0)))
@@ -85,7 +100,7 @@ class SnapshotZMergeSpec extends SparkTestBase {
 
     // empty batch never commits
     val before = t.currentSnapshot.get
-    val r0 = t.mergeIntoZDelta(
+    val r0 = t.mergeIntoDelta(
       Seq.empty[(Long, Double, Double, Boolean)]
         .toDF("id", "lon", "lat", "deleted"), Seq("id"), Some("deleted"))
     assert(r0.updateRows === 0L && t.currentSnapshot.get === before)
@@ -94,16 +109,16 @@ class SnapshotZMergeSpec extends SparkTestBase {
   test("z-merge auto-compacts past compactEvery; bucketed merges still refused on z tables") {
     val root = freshRoot("zmor2")
     val t = SnapshotTable.createZOrdered(spark, root,
-      pts.take(256).toDF("id", "lon", "lat"), "lon", "lat",
+      pts.take(256).toDF("id", "lon", "lat"), Seq("id"), "lon", "lat",
       zBits = 12, numBuckets = 32)
     for (k <- 1 to 4)
-      t.mergeIntoZDelta(Seq((k.toLong, 1.0 * k, 1.0 * k, false))
+      t.mergeIntoDelta(Seq((k.toLong, 1.0 * k, 1.0 * k, false))
         .toDF("id", "lon", "lat", "deleted"), Seq("id"), Some("deleted"),
         compactEvery = 2)
     // with compactEvery = 2, merge #3 must have folded the chain
     // (later merges legitimately open a fresh chain on top)
     val ops = t.snapshots.map(id => t.snapshotInfo(id)("operation"))
-    assert(ops.contains("compact+merge"), s"chain never compacted: $ops")
+    assert(ops.contains("compact"), s"chain never compacted: $ops")
     // result correct after the mixed chain/compaction history
     val got = t.read().select(col("id"), col("lon"))
       .as[(Long, Double)].collect().toMap
@@ -112,6 +127,6 @@ class SnapshotZMergeSpec extends SparkTestBase {
     val ex = intercept[IllegalArgumentException] {
       t.mergeInto(Seq((1L, 0.0, 0.0)).toDF("id", "lon", "lat"), Seq("id"))
     }
-    assert(ex.getMessage.contains("mergeIntoZDelta"))
+    assert(ex.getMessage.contains("mergeIntoDelta"))
   }
 }
