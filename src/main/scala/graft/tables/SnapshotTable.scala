@@ -136,13 +136,16 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
 
   /** Merge-on-read overlay: `base` ∪ the `deltas`' files, LATEST commit
     * wins per key (a delta replaces the key's whole row family; `__del`
-    * tombstones drop it). One shuffle on the key. */
-  private def overlay(base: DataFrame, deltas: Seq[Long], keyCols: Seq[String]): DataFrame = {
+    * tombstones drop it). One shuffle on the key. A delta's files are
+    * scanned with the schema of the head manifest `info` (every chain
+    * manifest carries the same one forward) plus the `__del` flag; the
+    * `__b` partition column the dir layout adds is dropped. */
+  private def overlay(info: Map[String, String], base: DataFrame, deltas: Seq[Long]): DataFrame = {
     val all = deltas.zipWithIndex.map { case (d, i) =>
-      scanDelta(d).drop("__b").withColumn("__c", lit(i + 1))
+      scan(info, Seq(dataDir(d).toString), ", __del BOOLEAN").drop("__b").withColumn("__c", lit(i + 1))
     }.foldLeft(base.withColumn("__del", lit(false)).withColumn("__c", lit(0)))(_ unionByName _)
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
+      .partitionBy(tableKeys(info).map(col): _*)
     all.withColumn("__mc", max(col("__c")).over(w))
       .filter(col("__c") === col("__mc") && !col("__del"))
       .drop("__del", "__c", "__mc")
@@ -162,7 +165,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     val base = if (paths.nonEmpty) scan(info, paths) else empty(info)
     chainOf(id, info)._2 match {
       case Nil => base
-      case deltas => overlay(base, deltas, tableKeys(info))
+      case deltas => overlay(info, base, deltas)
     }
   }
 
@@ -183,12 +186,6 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
       case Some(ddl) => spark.read.schema(ddl + extra).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
     }
-
-  /** A merge-on-read delta commit's files: the table schema plus the
-    * `__del` tombstone flag (and the `__b` partition column the dir
-    * layout adds). */
-  private def scanDelta(d: Long): DataFrame =
-    scan(snapshotInfo(d), Seq(dataDir(d).toString), ", __del BOOLEAN")
 
   /** CDC read between two snapshots (Delta `table_changes` analogue):
     * one row per key whose state differs, tagged insert / update /
@@ -272,13 +269,16 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   def commit(df: DataFrame, operation: String): Long =
     commitAs(snapshotInfo(current), df, operation)
 
-  /** [[commit]] under the layout of the parsed manifest `info`. */
-  private def commitAs(info: Map[String, String], df: DataFrame, operation: String): Long = {
+  /** [[commit]] under the layout of the parsed manifest `info`;
+    * `beforeCommit` runs after the data write and before the manifest
+    * is written, so a check that throws there commits nothing. */
+  private def commitAs(info: Map[String, String], df: DataFrame, operation: String,
+      beforeCommit: () => Unit = () => ()): Long = {
     val numBuckets = info("numBuckets").toInt
     zCols(info) match {
       case Some((lonCol, latCol)) => commitZOrdered(df, operation, tableKeys(info),
-        lonCol, latCol, info("zbits").toInt, numBuckets)
-      case None => commitBucketed(df, operation, tableKeys(info), numBuckets)
+        lonCol, latCol, info("zbits").toInt, numBuckets, beforeCommit)
+      case None => commitBucketed(df, operation, tableKeys(info), numBuckets, beforeCommit)
     }
   }
 
@@ -348,9 +348,10 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * Per-bucket counts ride the write as observed metrics — the commit
     * is ONE Spark job. */
   private def commitBucketed(df: DataFrame, operation: String,
-      keyCols: Seq[String], numBuckets: Int): Long = {
+      keyCols: Seq[String], numBuckets: Int, beforeCommit: () => Unit = () => ()): Long = {
     val id = currentSnapshot.getOrElse(0L) + 1
     val counts = writeBucketed(df, keyCols, numBuckets, id)
+    beforeCommit()
     commitLayout(id, operation, keyCols, numBuckets, df.schema,
       counts.keys.map(_ -> id).toMap, counts, writtenBucketBytes(dataDir(id)))
   }
@@ -384,7 +385,8 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * OPTIMIZE ZORDER BY / Iceberg spatial-partition-transform analogue);
     * merges reach it only merge-on-read ([[mergeIntoDelta]]). */
   private def commitZOrdered(df: DataFrame, operation: String, keyCols: Seq[String],
-      lonCol: String, latCol: String, zBits: Int, numBuckets: Int): Long = {
+      lonCol: String, latCol: String, zBits: Int, numBuckets: Int,
+      beforeCommit: () => Unit = () => ()): Long = {
     require(Integer.bitCount(numBuckets) == 1 && numBuckets > 1,
       s"numBuckets must be a power of two, got $numBuckets")
     val shift = 2 * zBits - Integer.numberOfTrailingZeros(numBuckets)
@@ -396,6 +398,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     val counts = writeCounted(
       withZ.repartition(numBuckets, col("__b"))
         .sortWithinPartitions(col("__b"), col("zval")), dir, numBuckets)
+    beforeCommit()
     commitLayout(id, operation, keyCols, numBuckets, withZ.drop("__b").schema,
       counts.keys.map(_ -> id).toMap, counts, writtenBucketBytes(dir),
       Map("zorder" -> s"$lonCol,$latCol", "zbits" -> zBits.toString))
@@ -450,7 +453,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     // delta rows join UNFILTERED so a row moved OUT of the box still
     // suppresses its stale base copy — the bbox re-applies at the end
     // (the schema DDL of `empty` already carries zval)
-    overlay(baseScan.getOrElse(empty(info)), chain, tableKeys(info))
+    overlay(info, baseScan.getOrElse(empty(info)), chain)
       .filter(bboxPred)
   }
 
@@ -779,11 +782,12 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
       keys: Option[Iterable[Any]]): MergeResult = {
     val d = delta(updates, keyCols, info("numBuckets").toInt, keys)
     val rows = d.dropKeys(read()).unionByName(inserts(d.rows, deleteMarker).drop("__b"))
-    val (id, applied) =
-      try {
-        val id = commitAs(info, rows, "compact")
-        (id, d.applied())
-      } finally d.release()
+    // the applied count, and a key set's stray-row check, are read once
+    // the rows are written and before the manifest commits them
+    var applied = 0L
+    val id =
+      try commitAs(info, rows, "compact", () => applied = d.applied())
+      finally d.release()
     MergeResult(id, applied)
   }
 }

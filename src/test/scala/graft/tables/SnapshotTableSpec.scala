@@ -199,6 +199,14 @@ class SnapshotTableSpec extends SparkTestBase {
       Some("deleted"), keys = Some(Set(1L, 2L)))
     assert(t.snapshotInfo(t.currentSnapshot.get)("operation") === "delta")
     assert(state() === Map(1L -> Set("a9"), 3L -> Set("c1")))
+    // a compaction with a delta row outside the key set fails before
+    // it commits: the head and the resolved rows stay as they were
+    val (head, rows) = (t.currentSnapshot, state())
+    val e = intercept[IllegalArgumentException](t.mergeIntoDelta(
+      Seq((5L, "e1", false)).toDF("k", "v", "deleted"), Seq("k"), Some("deleted"),
+      compactEvery = 1, keys = Some(Set(6L))))
+    assert(e.getMessage.contains("outside the merge's key set"))
+    assert(t.currentSnapshot === head && state() === rows)
     // compaction: key 3 goes, key 4 arrives
     val r = t.mergeIntoDelta(Seq((4L, "d1", false)).toDF("k", "v", "deleted"), Seq("k"),
       Some("deleted"), compactEvery = 1, keys = Some(Set(3L, 4L)))

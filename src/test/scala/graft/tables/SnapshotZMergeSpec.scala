@@ -123,6 +123,14 @@ class SnapshotZMergeSpec extends SparkTestBase {
     val got = t.read().select(col("id"), col("lon"))
       .as[(Long, Double)].collect().toMap
     for (k <- 1 to 4) assert(got(k.toLong) === 1.0 * k)
+    // a z compaction with a delta row outside the key set fails before
+    // it commits
+    val (head, rows) = (t.currentSnapshot, t.read().collect().toSet)
+    val stray = intercept[IllegalArgumentException](t.mergeIntoDelta(
+      Seq((5L, 5.0, 5.0, false)).toDF("id", "lon", "lat", "deleted"), Seq("id"),
+      Some("deleted"), compactEvery = 1, keys = Some(Set(6L))))
+    assert(stray.getMessage.contains("outside the merge's key set"))
+    assert(t.currentSnapshot === head && t.read().collect().toSet === rows)
     // the eager bucketed merge still refuses (z layout), pointing at MOR
     val ex = intercept[IllegalArgumentException] {
       t.mergeInto(Seq((1L, 0.0, 0.0)).toDF("id", "lon", "lat"), Seq("id"))
