@@ -11,15 +11,24 @@ import org.apache.spark.sql.functions._
 object GeoFunctions {
 
   /** Exact Column mirror of [[CellIndex.cellAt]]. */
-  def cellAt(lon: Column, lat: Column, res: Int): Column = {
-    val n = CellIndex.width(res)
-    def clamp(v: Column): Column =
-      when(v < 0, lit(0L)).when(v >= n, lit(n - 1)).otherwise(v)
-    val cx = clamp(floor((lon + 180.0) / 360.0 * n).cast("long"))
-    val cy = clamp(floor((lat + 90.0) / 180.0 * n).cast("long"))
+  def cellAt(lon: Column, lat: Column, res: Int): Column =
     lit(res.toLong << CellIndex.ResShift)
-      .bitwiseOR(shiftleft(cx, CellIndex.XShift))
-      .bitwiseOR(cy)
+      .bitwiseOR(shiftleft(gridX(lon, res), CellIndex.XShift))
+      .bitwiseOR(gridY(lat, res))
+
+  /** Grid column of `lon` at `res`: floor((lon + 180) / 360 · width),
+    * cast to long and clamped to [0, width(res) - 1] — the x of
+    * [[CellIndex.cellAt]], so lon = 180 falls in the last column. */
+  def gridX(lon: Column, res: Int): Column =
+    clampToGrid(floor((lon + 180.0) / 360.0 * CellIndex.width(res)).cast("long"), res)
+
+  /** Grid row of `lat` at `res` — the y of [[CellIndex.cellAt]]. */
+  def gridY(lat: Column, res: Int): Column =
+    clampToGrid(floor((lat + 90.0) / 180.0 * CellIndex.width(res)).cast("long"), res)
+
+  private def clampToGrid(v: Column, res: Int): Column = {
+    val n = CellIndex.width(res)
+    when(v < 0, lit(0L)).when(v >= n, lit(n - 1)).otherwise(v)
   }
 
   /** DuckDB SQL mirror of [[cellAt]] for oracle queries. */

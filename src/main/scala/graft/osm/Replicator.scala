@@ -77,7 +77,7 @@ class Replicator(spark: SparkSession, root: String) {
     val applied = applyOps(ChangePipeline.dedupLatest(ops))
     val maxSeq = ops.agg(max(col("seq"))).head().getInt(0)
     Files.createDirectories(ckpt.getParent)
-    Files.write(ckpt, maxSeq.toString.getBytes(StandardCharsets.UTF_8))
+    SnapshotTable.writeAtomically(ckpt, maxSeq.toString)
     applied
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.text.TextFunctions._
+import graft.synth.SynthUniverse.{DocChanges, docChanges}
 
 /** Deduplication operators over `documents` — the core of a web-scale
   * training-data pipeline (exact, n-gram Jaccard, MinHash+LSH banding,
@@ -512,13 +513,7 @@ object DedupQueries {
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val baseFp = simhashOf(docs).cache()
       val basePairs = simhashPairs(baseFp, baseFp)
-      val updated = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val deletedIds = docs.filter(col("doc_id") % 13 === 5)
-        .select(col("doc_id"))
-      val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti")
-      val affected = updated.select(col("doc_id")).union(deletedIds).distinct()
+      val DocChanges(_, _, updatedLive, affected) = docChanges(docs)
       val keep = basePairs
         .join(affected.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_anti")
         .join(affected.withColumnRenamed("doc_id", "id_b"), Seq("id_b"), "left_anti")
@@ -823,17 +818,12 @@ object DedupQueries {
     * `_stored` bench twins). */
   private def pairDeltaFrom(docs: DataFrame, baseBands: DataFrame,
       baseSh: DataFrame, basePairs: DataFrame): PairDelta = {
-    val updated = docs.filter(col("doc_id") % 7 === 3)
-      .select(col("doc_id"),
-        concat(col("text"), lit(" merge stream merge")).as("text"))
-    val deletedIds = docs.filter(col("doc_id") % 13 === 5)
-      .select(col("doc_id"))
+    val batch = docChanges(docs)
     // r6: updatedLive/affected/updBands/updSh are BATCH-sized and each
     // feeds 2+ branches below — cache them so the batch's shingle and
     // band derivations run once, not once per consumer (guide §1.2)
-    val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti").cache()
-    val affected = updated.select(col("doc_id")).union(deletedIds)
-      .distinct().cache()
+    val updatedLive = batch.updatedLive.cache()
+    val affected = batch.touched.cache()
     val keep = basePairs
       .join(affected.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_anti")
       .join(affected.withColumnRenamed("doc_id", "id_b"), Seq("id_b"), "left_anti")

@@ -28,6 +28,28 @@ object GraphQueries {
       explode(array((1 to 3).map(k =>
         pmod(col("doc_id") * 31 + k * 7, lit(n))): _*)).as("dst"))
 
+  /** [[links]] over the surviving documents `post` after the standard
+    * change batch: a document with doc_id % 7 = 3 re-points its three
+    * links. */
+  private def linksAfterChange(post: DataFrame, n: Long): DataFrame =
+    post.select(col("doc_id").as("src"),
+      explode(array((1 to 3).map(k =>
+        when(col("doc_id") % 7 === 3, pmod(col("doc_id") * 37 + k * 11, lit(n)))
+          .otherwise(pmod(col("doc_id") * 31 + k * 7, lit(n)))): _*)).as("dst"))
+
+  /** The 6-link undirected graph (u, v), u < v: document d links to the
+    * first d % 6 + 1 of six targets; self-loops and repeats dropped. */
+  private def undirected6(docs: DataFrame, n: Long): DataFrame =
+    docs.select(col("doc_id").as("src"),
+        explode(filter(array((1 to 6).map(k =>
+          when(lit(k) <= col("doc_id") % 6 + 1,
+            pmod(col("doc_id") * 31 + k * 7 + k * k, lit(n)))): _*),
+          c => c.isNotNull)).as("dst"))
+      .filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v"))
+      .distinct()
+
   /** One damped PageRank step: r'(v) = 0.15 + 0.85·Σ r(u)/out(u) in
     * micro-units with truncated integer division. One shuffle on src
     * (the join), one map-side-combined shuffle on dst (the sum); at
@@ -222,10 +244,7 @@ object GraphQueries {
         .filter(col("doc_id") % 7 === 3 || col("doc_id") % 13 === 5)
         .select(col("doc_id").as("src"))
       val postDocs = docs.filter(col("doc_id") % 13 =!= 5)
-      val postLinks = postDocs.select(col("doc_id").as("src"),
-        explode(array((1 to 3).map(k =>
-          when(col("doc_id") % 7 === 3, pmod(col("doc_id") * 37 + k * 11, lit(n)))
-            .otherwise(pmod(col("doc_id") * 31 + k * 7, lit(n)))): _*)).as("dst"))
+      val postLinks = linksAfterChange(postDocs, n)
       val r0 = docs.select(col("doc_id"), lit(1000000L).as("rank"))
       val rank1Stored = step(docs, baseLinks, r0)
         .withColumnRenamed("rank", "rank1")
@@ -454,10 +473,7 @@ object GraphQueries {
       val n = docs.count()
       val baseLinks = links(docs, n)
       val postDocs = docs.filter(col("doc_id") % 13 =!= 5)
-      val postLinksAll = postDocs.select(col("doc_id").as("src"),
-        explode(array((1 to 3).map(k =>
-          when(col("doc_id") % 7 === 3, pmod(col("doc_id") * 37 + k * 11, lit(n)))
-            .otherwise(pmod(col("doc_id") * 31 + k * 7, lit(n)))): _*)).as("dst"))
+      val postLinksAll = linksAfterChange(postDocs, n)
       val stored = bfsHops(docs.filter(col("doc_id") % 50 === 0),
         baseLinks, K)
       val changedSrc = docs
@@ -578,15 +594,7 @@ object GraphQueries {
       // bound surfaces as an error, never a silent mismatch.
       val docs = Tables.documents(s, dir).select(col("doc_id"))
       val n = docs.count()
-      val e = docs.select(col("doc_id").as("src"),
-          explode(filter(array((1 to 6).map(k =>
-            when(lit(k) <= col("doc_id") % 6 + 1,
-              pmod(col("doc_id") * 31 + k * 7 + k * k, lit(n)))): _*),
-            c => c.isNotNull)).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("u"),
-          greatest(col("src"), col("dst")).as("v"))
-        .distinct()
+      val e = undirected6(docs, n)
       graft.operators.KCore.membership(e, k = 5, maxRounds = 14)
     }),
     "q192_anchor_terms" -> ((s, dir) => {
@@ -629,15 +637,7 @@ object GraphQueries {
       // the unroll equals the converge-then-stop exactly).
       val docs = Tables.documents(s, dir).select(col("doc_id"))
       val n = docs.count()
-      val e = docs.select(col("doc_id").as("src"),
-          explode(filter(array((1 to 6).map(k =>
-            when(lit(k) <= col("doc_id") % 6 + 1,
-              pmod(col("doc_id") * 31 + k * 7 + k * k, lit(n)))): _*),
-            c => c.isNotNull)).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("u"),
-          greatest(col("src"), col("dst")).as("v"))
-        .distinct()
+      val e = undirected6(docs, n)
       graft.operators.Mis.of(e, maxRounds = 8)
     }),
     "q218_label_prop" -> ((s, dir) => {
@@ -851,10 +851,7 @@ object GraphQueries {
             greatest(col("src"), col("dst")).as("v")).distinct()
       val epre = undirected(links(docs, n))
       val post = docs.filter(col("doc_id") % 13 =!= 5)
-      val lpost = post.select(col("doc_id").as("src"),
-          explode(array((1 to 3).map(k =>
-            when(col("doc_id") % 7 === 3, pmod(col("doc_id") * 37 + k * 11, lit(n)))
-              .otherwise(pmod(col("doc_id") * 31 + k * 7, lit(n)))): _*)).as("dst"))
+      val lpost = linksAfterChange(post, n)
         .join(post.select(col("doc_id").as("dst")), Seq("dst"), "left_semi")
       val epost = undirected(lpost)
       graft.operators.Triangles.count(epre)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.synth.{SynthSql, SynthUniverse}
+import graft.synth.SynthUniverse.{DocChanges, docChanges}
 import graft.spatial.SpatialJoin
 import graft.geo.GeoFunctions
 
@@ -28,6 +29,11 @@ object SpatialQueries {
     * ('window', 'row' — ~780 points at sf0.01). */
   val Q82Box = (-12.0, 29.0, -36.0, 4.0)
 
+  /** Each user's track in time order, with the full (ts, event_id)
+    * tie-break the oracle's windows use. */
+  private val trackOrder = org.apache.spark.sql.expressions.Window
+    .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+
   /** q199/q204's candidate track pairs: each user's first-12 lattice
     * positions (exact-BIGINT coordinates), blocked on the track head's
     * coarse cell — never all-pairs. At corpus scale the block key
@@ -35,13 +41,11 @@ object SpatialQueries {
     * (user_a, user_b, xa, ya, xb, yb). */
   private def trackPairs12(s: SparkSession, dir: String): DataFrame = {
     val L = 12
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val pos = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"),
-        (col("event_id") * 17 % 320000).as("xi"),
-        (col("event_id") * 23 % 150000).as("yi"))
-      .withColumn("rn", row_number().over(w))
+        SynthUniverse.eventX.as("xi"),
+        SynthUniverse.eventY.as("yi"))
+      .withColumn("rn", row_number().over(trackOrder))
       .filter(col("rn") <= L)
     val tracks = pos.groupBy(col("user_id"))
       .agg(count(lit(1)).as("np"),
@@ -66,13 +70,11 @@ object SpatialQueries {
     * window and the downstream groupBy share the user_id partitioning,
     * so consumers stay ONE exchange. */
   private def trackPoints12(s: SparkSession, dir: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"),
-        (col("event_id") * 17 % 320000).as("x"),
-        (col("event_id") * 23 % 150000).as("y"))
-      .withColumn("rn", row_number().over(w))
+        SynthUniverse.eventX.as("x"),
+        SynthUniverse.eventY.as("y"))
+      .withColumn("rn", row_number().over(trackOrder))
       .filter(col("rn") <= 12)
       .groupBy(col("user_id"))
       .agg(collect_list(struct(col("x"), col("y"))).as("ps"))
@@ -81,12 +83,19 @@ object SpatialQueries {
         transform(col("ps"), p => p.getField("y")).as("ys"))
   }
 
+  /** The point-occupancy raster at `res`: (ix, iy, cnt) — each occupied
+    * cell of the clamped grid with its point count. */
+  private def occupancy(points: DataFrame, res: Int): DataFrame =
+    points.select(GeoFunctions.gridX(col("lon"), res).as("ix"),
+        GeoFunctions.gridY(col("lat"), res).as("iy"))
+      .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("cnt"))
+
   /** q203/q208's event-density raster: (cx, cy, z) — occupied 4000-unit
     * lattice cells with their event counts as the elevation surface. */
   private def densityCells(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
-      .select(expr("(event_id * 17 % 320000) div 4000").as("cx"),
-        expr("(event_id * 23 % 150000) div 4000").as("cy"))
+      .select(call_function("div", SynthUniverse.eventX, lit(4000)).as("cx"),
+        call_function("div", SynthUniverse.eventY, lit(4000)).as("cy"))
       .groupBy(col("cx"), col("cy")).agg(count(lit(1)).as("z"))
 
   /** q287's conflation over an arbitrary (doc_id, entity, lon, lat)
@@ -670,11 +679,7 @@ object SpatialQueries {
       val t = graft.tables.SnapshotTable.createZOrdered(s, root,
         SynthUniverse.points(s, dir), Seq("doc_id", "entity"), "lon", "lat", ZBits,
         numBuckets = 32)
-      val updated = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val deletedIds = docs.filter(col("doc_id") % 13 === 5).select(col("doc_id"))
-      val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti")
+      val DocChanges(_, deletedIds, updatedLive, _) = docChanges(docs)
       val newPts = SynthUniverse.pointsOf(updatedLive)
       val removedKeys = SynthUniverse.points(s, dir)
         .join(updatedLive.select(col("doc_id")), Seq("doc_id"), "left_semi")
@@ -809,14 +814,10 @@ object SpatialQueries {
       // integers BEFORE summing, so the aggregate is order-insensitive
       // (IEEE sqrt is correctly rounded — both engines see identical
       // segment doubles).
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, dir).select(col("event_id"), col("ts"), col("user_id"),
-          ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("lon"),
-          ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("lat"))
+      SynthUniverse.tracks(s, dir)
         .select(col("user_id"),
-          (col("lon") - lag(col("lon"), 1).over(w)).as("dx"),
-          (col("lat") - lag(col("lat"), 1).over(w)).as("dy"))
+          (col("lon") - lag(col("lon"), 1).over(trackOrder)).as("dx"),
+          (col("lat") - lag(col("lat"), 1).over(trackOrder)).as("dy"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
           coalesce(sum(round(sqrt(col("dx") * col("dx") + col("dy") * col("dy")) * 1e7, 0)
@@ -852,8 +853,8 @@ object SpatialQueries {
       // (guide §1.2 per-task work; see bboxOverlapJoin.leftCarry)
       val segs = Tables.events(s, dir).select(
           col("event_id").as("id"),
-          ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("px"),
-          ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("py"),
+          SynthUniverse.eventLon.as("px"),
+          SynthUniverse.eventLat.as("py"),
           ((col("event_id") * 31 % 200).cast("double") / 100.0 - 1.0).as("dx"),
           ((col("event_id") * 37 % 200).cast("double") / 100.0 - 1.0).as("dy"))
         .select(col("id"), col("px"), col("py"),
@@ -883,14 +884,12 @@ object SpatialQueries {
       // ONE shuffle on user_id (the lag/lead window); everything else
       // is codegen arithmetic — at 100 TB each user's track decimates
       // independently inside its partition.
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, dir).select(col("event_id"), col("ts"), col("user_id"),
-          ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("lon"),
-          ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("lat"))
+      SynthUniverse.tracks(s, dir)
         .select(col("user_id"), col("event_id"), col("lon"), col("lat"),
-          lag(col("lon"), 1).over(w).as("plon"), lag(col("lat"), 1).over(w).as("plat"),
-          lead(col("lon"), 1).over(w).as("nlon"), lead(col("lat"), 1).over(w).as("nlat"))
+          lag(col("lon"), 1).over(trackOrder).as("plon"),
+          lag(col("lat"), 1).over(trackOrder).as("plat"),
+          lead(col("lon"), 1).over(trackOrder).as("nlon"),
+          lead(col("lat"), 1).over(trackOrder).as("nlat"))
         .withColumn("area2_e7",
           round(abs((col("lon") - col("plon")) * (col("nlat") - col("plat")) -
             (col("lat") - col("plat")) * (col("nlon") - col("plon"))) * 1e7, 0)
@@ -952,12 +951,7 @@ object SpatialQueries {
         .groupBy(col("level"), col("tile"))
         .agg(count(lit(1)).as("n_points"))
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val updated = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val deletedIds = docs.filter(col("doc_id") % 13 === 5).select(col("doc_id"))
-      val affected = updated.select(col("doc_id")).union(deletedIds).distinct()
-      val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti")
+      val DocChanges(_, _, updatedLive, affected) = docChanges(docs)
       // stored pyramid stand-in
       val stored = pyramid(SynthUniverse.points(s, dir))
       val removed = pyramid(SynthUniverse.points(s, dir)
@@ -978,8 +972,6 @@ object SpatialQueries {
       // never hash-match): octant = sign tests on (dx, dy) plus
       // |dx| vs |dy| comparisons, all exact. One user_id shuffle (the
       // lag window), then a map-side-combined count.
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       val adx = abs(col("dx"))
       val ady = abs(col("dy"))
       val octant =
@@ -988,11 +980,9 @@ object SpatialQueries {
           .when(adx >= ady, when(col("dy") >= 0, 3).otherwise(4))
           .when(col("dy") > 0, when(col("dx") >= 0, 1).otherwise(2))
           .otherwise(when(col("dx") >= 0, 6).otherwise(5))
-      Tables.events(s, dir).select(col("event_id"), col("ts"), col("user_id"),
-          ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("lon"),
-          ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("lat"))
-        .withColumn("dx", col("lon") - lag(col("lon"), 1).over(w))
-        .withColumn("dy", col("lat") - lag(col("lat"), 1).over(w))
+      SynthUniverse.tracks(s, dir)
+        .withColumn("dx", col("lon") - lag(col("lon"), 1).over(trackOrder))
+        .withColumn("dy", col("lat") - lag(col("lat"), 1).over(trackOrder))
         .filter(col("dx").isNotNull)
         .groupBy(col("user_id"), octant.as("octant"))
         .agg(count(lit(1)).as("n_steps"))
@@ -1024,14 +1014,7 @@ object SpatialQueries {
       // per target, one equi-join back on the bounded occupied-cell
       // table. Never a raster self-join.
       val n = graft.geo.CellIndex.width(ContourRes)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
-      val base = SynthUniverse.points(s, dir)
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
-        .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("cnt"))
+      val base = occupancy(SynthUniverse.points(s, dir), ContourRes)
       val nb = base
         .select(col("ix"), col("iy"), col("cnt"),
           explode(sequence(lit(-1), lit(1))).as("dx"))
@@ -1106,13 +1089,7 @@ object SpatialQueries {
       // whole mention families. Full-recompute oracle.
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val base = conflate(s, SynthUniverse.points(s, dir))
-      val updated = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val deletedIds = docs.filter(col("doc_id") % 13 === 5)
-        .select(col("doc_id"))
-      val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti")
-      val touched = updated.select(col("doc_id")).union(deletedIds).distinct()
+      val DocChanges(_, _, updatedLive, touched) = docChanges(docs)
       base.join(touched, Seq("doc_id"), "left_anti")
         .unionByName(conflate(s, SynthUniverse.pointsOf(updatedLive)))
     }),
@@ -1203,15 +1180,10 @@ object SpatialQueries {
       // combined aggregates ((cell, lang) → cell). Single-point cells
       // emit 1e6 by convention (a one-sample cell is trivially
       // concentrated).
-      val n = graft.geo.CellIndex.width(ContourRes)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
       val pts = SynthUniverse.points(s, dir)
         .select(col("doc_id"),
-          q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
+          GeoFunctions.gridX(col("lon"), ContourRes).as("ix"),
+          GeoFunctions.gridY(col("lat"), ContourRes).as("iy"))
         .join(Tables.documents(s, dir).select(col("doc_id"), col("lang")),
           "doc_id")
       val perLang = pts.groupBy(col("ix"), col("iy"), col("lang"))
@@ -1238,24 +1210,14 @@ object SpatialQueries {
       // hash-stable. ONE user-keyed window (the lead) + ONE cell
       // shuffle; per-user track ordering carries the same full
       // (ts, event_id) tie-break as the trajectory family.
-      import org.apache.spark.sql.expressions.Window
-      val n = graft.geo.CellIndex.width(ContourRes)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      Tables.events(s, dir).select(col("event_id"), col("ts"), col("user_id"),
-          ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("lon"),
-          ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("lat"))
+      SynthUniverse.tracks(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"),
           // events.ts is TIMESTAMP_NTZ; the session pins UTC, so the
           // cast is a pure reinterpretation — micros stay exact
           unix_micros(col("ts").cast("timestamp")).as("t"),
-          q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
-        .withColumn("t2", lead(col("t"), 1).over(w))
+          GeoFunctions.gridX(col("lon"), ContourRes).as("ix"),
+          GeoFunctions.gridY(col("lat"), ContourRes).as("iy"))
+        .withColumn("t2", lead(col("t"), 1).over(trackOrder))
         .groupBy(col("ix"), col("iy"))
         .agg(count(lit(1)).as("n_pings"),
           countDistinct(col("user_id")).as("n_users"),
@@ -1278,14 +1240,7 @@ object SpatialQueries {
       // source windows — an independent formulation the BFS must
       // reproduce exactly on an obstacle-free grid.
       val n = graft.geo.CellIndex.width(ContourRes)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
-      val base = SynthUniverse.points(s, dir)
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
-        .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("cnt"))
+      val base = occupancy(SynthUniverse.points(s, dir), ContourRes)
       val stats = base.agg(sum(col("cnt")).as("total"),
         count(lit(1)).as("nc"))
       val src = base.crossJoin(broadcast(stats))
@@ -1320,14 +1275,7 @@ object SpatialQueries {
       // map-side-combined shuffle on the target tile; border tiles
       // keep partial windows (out-of-range neighbors skipped).
       val n = graft.geo.CellIndex.width(TileRes)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
-      val base = SynthUniverse.points(s, dir)
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
-        .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("cnt"))
+      val base = occupancy(SynthUniverse.points(s, dir), TileRes)
       base
         .select(col("ix"), col("iy"), col("cnt"),
           explode(sequence(lit(-1), lit(1))).as("dx"))
@@ -1348,17 +1296,13 @@ object SpatialQueries {
       // stops. Exact arithmetic: the d2 <= R² predicate and the
       // duration are mirrored expression-for-expression in the oracle.
       val r2 = StopR * StopR
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      Tables.events(s, dir).select(col("event_id"), col("ts"), col("user_id"),
-          ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("lon"),
-          ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("lat"))
-        .withColumn("dx", col("lon") - lag(col("lon"), 1).over(w))
-        .withColumn("dy", col("lat") - lag(col("lat"), 1).over(w))
+      SynthUniverse.tracks(s, dir)
+        .withColumn("dx", col("lon") - lag(col("lon"), 1).over(trackOrder))
+        .withColumn("dy", col("lat") - lag(col("lat"), 1).over(trackOrder))
         .withColumn("new_run",
           when(col("dx").isNull ||
             col("dx") * col("dx") + col("dy") * col("dy") > r2, 1L).otherwise(0L))
-        .withColumn("run_id", sum(col("new_run")).over(w))
+        .withColumn("run_id", sum(col("new_run")).over(trackOrder))
         .groupBy(col("user_id"), col("run_id"))
         .agg(min(col("event_id")).as("first_event"),
           count(lit(1)).as("n_points"),
@@ -1378,9 +1322,7 @@ object SpatialQueries {
       val wDesc = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
       val tile = GeoFunctions.cellAt(col("lon"), col("lat"), TileRes)
-      Tables.events(s, dir).select(col("event_id"), col("ts"), col("user_id"),
-          ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("lon"),
-          ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("lat"))
+      SynthUniverse.tracks(s, dir)
         .withColumn("ra", row_number().over(wAsc))
         .withColumn("rd", row_number().over(wDesc))
         .filter(col("ra") === 1 || col("rd") === 1)
@@ -1400,13 +1342,9 @@ object SpatialQueries {
       // the boundary-inclusive codegen PIP refines both endpoints in
       // one pass. distinct() collapses the both-endpoint-cells-hit
       // duplicate (bounded at 2 rows per transition).
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val steps = Tables.events(s, dir).select(col("event_id"), col("ts"), col("user_id"),
-          ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("lon"),
-          ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("lat"))
-        .withColumn("plon", lag(col("lon"), 1).over(w))
-        .withColumn("plat", lag(col("lat"), 1).over(w))
+      val steps = SynthUniverse.tracks(s, dir)
+        .withColumn("plon", lag(col("lon"), 1).over(trackOrder))
+        .withColumn("plat", lag(col("lat"), 1).over(trackOrder))
         .filter(col("plon").isNotNull)
       val cand = steps.select(col("user_id"), col("event_id"),
         col("lon"), col("lat"), col("plon"), col("plat"),
@@ -1572,8 +1510,8 @@ object SpatialQueries {
       // per row instead of many times per candidate — see q113 note)
       val segs = Tables.events(s, dir).select(
           col("event_id").as("id"),
-          ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("px"),
-          ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("py"),
+          SynthUniverse.eventLon.as("px"),
+          SynthUniverse.eventLat.as("py"),
           ((col("event_id") * 31 % 200).cast("double") / 100.0 - 1.0).as("dx"),
           ((col("event_id") * 37 % 200).cast("double") / 100.0 - 1.0).as("dy"))
         .select(col("id"), col("px"), col("py"),
@@ -1691,8 +1629,8 @@ object SpatialQueries {
       // and a hot-tile cutoff (q115's stopword note), which this
       // plan's shape absorbs unchanged.
       val t = Tables.events(s, dir).select(col("user_id"),
-          ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("lon"),
-          ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("lat"))
+          SynthUniverse.eventLon.as("lon"),
+          SynthUniverse.eventLat.as("lat"))
         .select(col("user_id"),
           GeoFunctions.cellAt(col("lon"), col("lat"), TileRes).as("tile"))
         .distinct()
@@ -1751,15 +1689,7 @@ object SpatialQueries {
       // anywhere (the engine keeps its no-unpartitioned-window
       // invariant). This measurement is what feeds the salting
       // decision (q30b's histogram pre-pass).
-      val n = graft.geo.CellIndex.width(ContourRes)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
-      SynthUniverse.points(s, dir)
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
-        .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("cnt"))
+      occupancy(SynthUniverse.points(s, dir), ContourRes)
         .agg(sort_array(collect_list(struct(col("cnt"), col("ix"), col("iy"))))
           .as("cells"))
         .select(posexplode(col("cells")))
@@ -1888,7 +1818,7 @@ object SpatialQueries {
       def road(j: Int) = -70000L + j * 20000L
       val tr = Tables.events(s, dir)
         .select(col("user_id").as("u"), col("ts"), col("event_id"),
-          (col("event_id") * 23 % 150000 - 75000).as("y"))
+          (SynthUniverse.eventY - 75000).as("y"))
         .groupBy(col("u"))
         .agg(sort_array(collect_list(
           struct(col("ts"), col("event_id"), col("y")))).as("tk"))
@@ -1975,8 +1905,8 @@ object SpatialQueries {
       val nextW = w0.rowsBetween(1, Window.unboundedFollowing)
       var df = Tables.events(s, dir)
         .select(col("user_id").as("u"), col("ts"), col("event_id"),
-          (col("event_id") * 17 % 320000 - 160000).as("x"),
-          (col("event_id") * 23 % 150000 - 75000).as("y"))
+          (SynthUniverse.eventX - 160000).as("x"),
+          (SynthUniverse.eventY - 75000).as("y"))
         .withColumn("pos", row_number().over(
           Window.partitionBy(col("u")).orderBy(col("ts"), col("event_id"))))
         .withColumn("np", count(lit(1)).over(Window.partitionBy(col("u"))))
@@ -2066,14 +1996,7 @@ object SpatialQueries {
       // exact integers, so idw_milli is an integral function both
       // engines fold identically regardless of aggregation order.
       val n = graft.geo.CellIndex.width(ContourRes)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
-      val base = SynthUniverse.points(s, dir)
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
-        .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("cnt"))
+      val base = occupancy(SynthUniverse.points(s, dir), ContourRes)
       idwOf(base, n)
     }),
     "q170_emerging_hotspot" -> ((s, dir) => {
@@ -2088,14 +2011,9 @@ object SpatialQueries {
       // Day = doc_id % 30 — the deterministic publication-day stand-in
       // (events' ts lattice degenerates to 2 coarse cells on its last
       // day, measured; the doc assignment exercises every anchor).
-      val n = graft.geo.CellIndex.width(HotspotRes)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
       SynthUniverse.points(s, dir)
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"),
+        .select(GeoFunctions.gridX(col("lon"), HotspotRes).as("ix"),
+          GeoFunctions.gridY(col("lat"), HotspotRes).as("iy"),
           (col("doc_id") % 30).as("day"))
         .groupBy(col("ix"), col("iy"), col("day"))
         .agg(count(lit(1)).as("cnt"))
@@ -2118,15 +2036,7 @@ object SpatialQueries {
       // them); products ride DECIMAL(38,0) so the ppm scaling never
       // overflows; the final integral divide is sign-split because
       // Spark `div` truncates while DuckDB `//` floors.
-      val n = graft.geo.CellIndex.width(ContourRes)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
-      val cells = SynthUniverse.points(s, dir)
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
-        .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("cnt"))
+      val cells = occupancy(SynthUniverse.points(s, dir), ContourRes)
       moranOf(cells)
     }),
     "q235_lisa" -> ((s, dir) => {
@@ -2141,15 +2051,7 @@ object SpatialQueries {
       // JOIN-FREE (q125/q162's shape), one map-side-combined sum per
       // target cell, one equi-join back to the occupied set — no
       // window, no pair explosion, one corpus shuffle total.
-      val n = graft.geo.CellIndex.width(ContourRes)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
-      val cells = SynthUniverse.points(s, dir)
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
-        .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("cnt"))
+      val cells = occupancy(SynthUniverse.points(s, dir), ContourRes)
       val stats = cells.agg(count(lit(1)).as("nc"), sum(col("cnt")).as("s"))
       val d = cells.crossJoin(broadcast(stats))
         .select(col("ix"), col("iy"), (col("nc") * col("cnt") - col("s")).as("d"))
@@ -2196,8 +2098,8 @@ object SpatialQueries {
             .bitwiseOR(shiftleft(col("cx"), graft.geo.CellIndex.XShift))
             .bitwiseOR(col("cy")).as("cell"))
       val pts = Tables.events(s, dir).select(col("event_id"), col("ts"),
-          ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("lon"),
-          ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("lat"))
+          SynthUniverse.eventLon.as("lon"),
+          SynthUniverse.eventLat.as("lat"))
         .withColumn("cell", GeoFunctions.cellAt(col("lon"), col("lat"), PipRes))
       pts.join(env, "cell")
         .filter(col("lat") >= col("y0") && col("lat") <= col("y0") + col("h"))
@@ -2224,15 +2126,7 @@ object SpatialQueries {
       // 5/10, else 1). Missing raster cells are vacuously below the
       // level — the scatter never materializes them, so the state is
       // O(occupied cells), never O(grid).
-      val n = graft.geo.CellIndex.width(ContourRes)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
-      val base = SynthUniverse.points(s, dir)
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
-        .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("cnt"))
+      val base = occupancy(SynthUniverse.points(s, dir), ContourRes)
       val thr = base.agg(expr("sum(cnt) div count(1)").as("thr"))
       base.crossJoin(broadcast(thr))
         .filter(col("cnt") >= col("thr"))
@@ -2269,8 +2163,8 @@ object SpatialQueries {
       // scale); total cost is candidate-pairs-bounded, never
       // all-pairs.
       val pos = Tables.events(s, dir).select(col("user_id"),
-          (col("event_id") * 17 % 320000 - 160000).as("x"),
-          (col("event_id") * 23 % 150000 - 75000).as("y"))
+          (SynthUniverse.eventX - 160000).as("x"),
+          (SynthUniverse.eventY - 75000).as("y"))
         .distinct() // Hausdorff is over point SETS
       // res-5 tile straight from integer milli-degrees: exact int div
       val tiles = pos.select(col("user_id"),
@@ -2422,14 +2316,7 @@ object SpatialQueries {
       // target's own count comes back by ONE left join; the three
       // global scalars ride in as a broadcast one-row cross join.
       val n = graft.geo.CellIndex.width(7)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
-      val base = SynthUniverse.points(s, dir)
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
-        .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("cnt"))
+      val base = occupancy(SynthUniverse.points(s, dir), 7)
         .cache()
       giStarFlags(base, n)
     }),
@@ -2451,26 +2338,13 @@ object SpatialQueries {
       // in-query as oracle scaffolding (q52/q70 adjudication); oracle
       // = q187's full formulation on the post-change corpus.
       val n = graft.geo.CellIndex.width(7)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
-      def raster(pts: DataFrame): DataFrame = pts
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
-        .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("cnt"))
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val updated = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val deletedIds = docs.filter(col("doc_id") % 13 === 5).select(col("doc_id"))
-      val affected = updated.select(col("doc_id")).union(deletedIds).distinct()
-      val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti")
-      val stored = raster(SynthUniverse.points(s, dir))
-      val removed = raster(SynthUniverse.points(s, dir)
-          .join(affected, Seq("doc_id"), "left_semi"))
+      val DocChanges(_, _, updatedLive, affected) = docChanges(docs)
+      val stored = occupancy(SynthUniverse.points(s, dir), 7)
+      val removed = occupancy(SynthUniverse.points(s, dir)
+          .join(affected, Seq("doc_id"), "left_semi"), 7)
         .withColumnRenamed("cnt", "r")
-      val added = raster(SynthUniverse.pointsOf(updatedLive))
+      val added = occupancy(SynthUniverse.pointsOf(updatedLive), 7)
         .withColumnRenamed("cnt", "a")
       val maintained = stored
         .join(removed, Seq("ix", "iy"), "full_outer")
@@ -2531,14 +2405,9 @@ object SpatialQueries {
       // live there too). The encode is graft.geo.HilbertIndexExpr —
       // one static codegen call per OCCUPIED CELL (never per point:
       // the raster groupBy runs first, the curve prices |cells| rows).
-      val n = graft.geo.CellIndex.width(8)
-      def q(v: Column, hi: Long): Column = {
-        val f = floor(v).cast("long")
-        when(f < 0, lit(0L)).when(f >= hi, lit(hi - 1)).otherwise(f)
-      }
       SynthUniverse.points(s, dir)
-        .select(q((col("lon") + 180.0) / 360.0 * n, n).as("ix"),
-          q((col("lat") + 90.0) / 180.0 * n, n).as("iy"))
+        .select(GeoFunctions.gridX(col("lon"), 8).as("ix"),
+          GeoFunctions.gridY(col("lat"), 8).as("iy"))
         .groupBy(col("ix"), col("iy")).agg(count(lit(1)).as("n_points"))
         .select(col("ix"), col("iy"),
           graft.geo.Hilbert.indexCol(8, col("ix"), col("iy")).as("hkey"),
@@ -2606,8 +2475,7 @@ object SpatialQueries {
       // the localized-update regime adaptive-tile IVM exists for.
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val updated = docs.filter(col("doc_id") % 97 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
+        .select(col("doc_id"), SynthUniverse.updatedText.as("text"))
       val deletedIds = docs.filter(col("doc_id") % 89 === 5).select(col("doc_id"))
       val affected = updated.select(col("doc_id")).union(deletedIds).distinct()
       val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti")
@@ -2802,8 +2670,8 @@ object SpatialQueries {
       // at corpus-scale per-user histories.
       Tables.events(s, dir)
         .select(col("user_id"),
-          expr("(event_id * 17 % 320000) div 100").as("x"),
-          expr("(event_id * 23 % 150000) div 100").as("y"))
+          call_function("div", SynthUniverse.eventX, lit(100)).as("x"),
+          call_function("div", SynthUniverse.eventY, lit(100)).as("y"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
           sum(col("y")).as("sy"),
@@ -2837,8 +2705,8 @@ object SpatialQueries {
       // combined shuffles, exact floor-ppm, no window, no self-join
       // of the event stream.
       val flags = Tables.events(s, dir)
-        .select(expr("(event_id * 17 % 320000) div 4000").as("cx"),
-          expr("(event_id * 23 % 150000) div 4000").as("cy"),
+        .select(call_function("div", SynthUniverse.eventX, lit(4000)).as("cx"),
+          call_function("div", SynthUniverse.eventY, lit(4000)).as("cy"),
           col("user_id"),
           when(datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) < 15,
             1L).otherwise(0L).as("ia"),

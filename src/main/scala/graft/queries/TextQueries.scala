@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.text.TextFunctions._
+import graft.synth.SynthUniverse
+import graft.synth.SynthUniverse.{DocChanges, docChanges}
 
 /** Text-analysis operators over the `documents` table — the
   * language-ID / quality-scoring / token-counting / fingerprinting
@@ -172,13 +174,7 @@ object TextQueries {
       // oracle over the post-change corpus.
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val base = winnowOf(docs)
-      val updated = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val deletedIds = docs.filter(col("doc_id") % 13 === 5)
-        .select(col("doc_id"))
-      val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti")
-      val touched = updated.select(col("doc_id")).union(deletedIds).distinct()
+      val DocChanges(_, _, updatedLive, touched) = docChanges(docs)
       base.join(touched, Seq("doc_id"), "left_anti")
         .unionByName(winnowOf(updatedLive))
     }),
@@ -754,10 +750,7 @@ object TextQueries {
       val train = grams.filter(col("doc_id") % 11 =!= 0)
       val stored = train.join(broadcast(b0), Seq("g"), "left_semi")
         .groupBy(col("doc_id")).agg(countDistinct(col("g")).as("n_hits"))
-      val upd = benchDocs0.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val del = benchDocs0.filter(col("doc_id") % 13 === 5).select(col("doc_id"))
+      val DocChanges(upd, del, _, _) = docChanges(benchDocs0)
       val post = benchDocs0
         .join(upd.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .unionByName(upd)
@@ -1025,12 +1018,7 @@ object TextQueries {
           array_join(slice(col("ts"), (col("p") * 8 + 1).cast("int"), lit(8)), " ")
             .as("chunk"))
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val updated = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val deletedIds = docs.filter(col("doc_id") % 13 === 5).select(col("doc_id"))
-      val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti")
-      val touchedIds = updated.select(col("doc_id")).union(deletedIds).distinct()
+      val DocChanges(_, _, updatedLive, touchedIds) = docChanges(docs)
       val stored = chunksOf(docs).groupBy(col("chunk"))
         .agg(min(struct(col("doc_id"), col("p"))).as("f"))
       val affChunks = chunksOf(docs.join(touchedIds, Seq("doc_id"), "left_semi"))
@@ -1204,9 +1192,7 @@ object TextQueries {
       // (source, bucket), and the tiny per-source totals broadcast
       // back. At T1*T2 near 2^63 the products need decimal — noted.
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text"))
-      val changed = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"), col("source"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
+      val changed = docChanges(docs).updated
       val fin = docs.filter(col("doc_id") % 13 =!= 5)
         .join(changed.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .unionByName(changed.filter(col("doc_id") % 13 =!= 5))
@@ -1322,12 +1308,7 @@ object TextQueries {
       // evaluation — the bench clears state between reps
       val baseTf = tfOf(docs).cache()
       val baseIndex = index(baseTf).cache()
-      val updated = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val deletedIds = docs.filter(col("doc_id") % 13 === 5)
-        .select(col("doc_id"))
-      val affectedDocs = updated.select(col("doc_id")).union(deletedIds).distinct()
+      val DocChanges(updated, deletedIds, _, affectedDocs) = docChanges(docs)
       val removedTf = baseTf.join(affectedDocs, Seq("doc_id"), "left_semi")
       val addedTf = tfOf(updated)
         .join(deletedIds, Seq("doc_id"), "left_anti") // update ∩ delete → gone
@@ -1384,13 +1365,7 @@ object TextQueries {
       // recompute on the post-change corpus.
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val stored = cooccurrencePairsOf(docs)
-      val updated = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val deletedIds = docs.filter(col("doc_id") % 13 === 5)
-        .select(col("doc_id"))
-      val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti")
-      val affected = updated.select(col("doc_id")).union(deletedIds).distinct()
+      val DocChanges(_, _, updatedLive, affected) = docChanges(docs)
       val neg = cooccurrencePairsOf(docs.join(affected, Seq("doc_id"), "left_semi"))
         .select(col("w1"), col("w2"), (-col("n_pairs")).as("n_pairs"))
       val pos = cooccurrencePairsOf(updatedLive)
@@ -1722,8 +1697,8 @@ object TextQueries {
       // no floats.
       Tables.events(s, dir)
         .select(col("user_id"),
-          expr("(event_id * 17 % 320000) div 4000").as("cx"),
-          expr("(event_id * 23 % 150000) div 4000").as("cy"))
+          call_function("div", SynthUniverse.eventX, lit(4000)).as("cx"),
+          call_function("div", SynthUniverse.eventY, lit(4000)).as("cy"))
         .groupBy(col("user_id"), col("cx"), col("cy"))
         .agg(count(lit(1)).as("ni"))
         .groupBy(col("user_id"))
@@ -1920,15 +1895,8 @@ object TextQueries {
         .select(explode(tokens(col("text"))).as("term"))
         .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
       val stored = termCounts(docs)
-      val updated = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val deletedIds = docs.filter(col("doc_id") % 13 === 5)
-        .select(col("doc_id"))
-      val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti")
-      val touched = docs.join(
-        updated.select(col("doc_id")).union(deletedIds).distinct(),
-        Seq("doc_id"), "left_semi")
+      val DocChanges(_, _, updatedLive, touchedIds) = docChanges(docs)
+      val touched = docs.join(touchedIds, Seq("doc_id"), "left_semi")
       val delta = termCounts(touched)
         .select(col("term"), (-col("cnt")).as("d"))
         .unionByName(termCounts(updatedLive)
@@ -2194,13 +2162,7 @@ object TextQueries {
         .select(col("c.j").as("j"), col("c.bkt").as("bkt"),
           lit(sign).as("dv"))
       val stored = cellsOf(docs, 1L)
-      val updated = docs.filter(col("doc_id") % 7 === 3)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" merge stream merge")).as("text"))
-      val deletedIds = docs.filter(col("doc_id") % 13 === 5)
-        .select(col("doc_id"))
-      val updatedLive = updated.join(deletedIds, Seq("doc_id"), "left_anti")
-      val affected = updated.select(col("doc_id")).union(deletedIds).distinct()
+      val DocChanges(_, _, updatedLive, affected) = docChanges(docs)
       val neg = cellsOf(docs.join(affected, Seq("doc_id"), "left_semi"), -1L)
       val pos = cellsOf(updatedLive, 1L)
       stored.unionByName(neg).unionByName(pos)

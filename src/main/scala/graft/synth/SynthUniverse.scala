@@ -104,6 +104,43 @@ object SynthUniverse {
         ((col("hlat") % 150000) / 1000.0 - 75.0 + (col("doc_id") * 7 % 89) * 0.03).as("lat"))
   }
 
+  /** An event's track point on the integer milli-degree lattice:
+    * x in [0, 320000), y in [0, 150000), offset by (160, 75) degrees. */
+  val eventX: Column = col("event_id") * 17 % 320000
+  val eventY: Column = col("event_id") * 23 % 150000
+
+  /** [[eventX]]/[[eventY]] as degrees — the position of an event. */
+  val eventLon: Column = eventX.cast("double") / 1000.0 - 160.0
+  val eventLat: Column = eventY.cast("double") / 1000.0 - 75.0
+
+  /** tracks(event_id, ts, user_id, lon, lat): every event as a point of
+    * its user's track. */
+  def tracks(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir).select(col("event_id"), col("ts"), col("user_id"),
+      eventLon.as("lon"), eventLat.as("lat"))
+
+  /** An updated document's text: the old text plus " merge stream
+    * merge", which adds mentions of two gazetteer entities. */
+  val updatedText: Column = concat(col("text"), lit(" merge stream merge"))
+
+  /** The standard document change batch the IVM queries maintain
+    * against: doc_id % 7 = 3 is updated ([[updatedText]], other columns
+    * kept), doc_id % 13 = 5 is deleted, and a document both updated and
+    * deleted is gone. */
+  final case class DocChanges(
+      updated: DataFrame,      // every updated document, post-change text
+      deletedIds: DataFrame,   // (doc_id) of every deleted document
+      updatedLive: DataFrame,  // updated less deleted: the rows to re-derive
+      touched: DataFrame)      // distinct (doc_id) whose base rows go
+
+  def docChanges(docs: DataFrame): DocChanges = {
+    val updated = docs.filter(col("doc_id") % 7 === 3).withColumn("text", updatedText)
+    val deletedIds = docs.filter(col("doc_id") % 13 === 5).select(col("doc_id"))
+    DocChanges(updated, deletedIds,
+      updated.join(deletedIds, Seq("doc_id"), "left_anti"),
+      updated.select(col("doc_id")).union(deletedIds).distinct())
+  }
+
   /** changes: OsmChange-style ops derived from events. Columns:
     * (seq=event_id, ts, kind, action, id, version, lon, lat). */
   def changes(s: SparkSession, dir: String): DataFrame =
@@ -120,8 +157,7 @@ object SynthUniverse {
         .when(col("event_id") % 3 === 1, col("event_id") * 104729 % 15000)
         .otherwise(col("event_id") * 31 % 1500).as("id"),
       (lit(1) + col("user_id") % 5).cast("int").as("version"),
-      ((col("event_id") * 17 % 320000).cast("double") / 1000.0 - 160.0).as("lon"),
-      ((col("event_id") * 23 % 150000).cast("double") / 1000.0 - 75.0).as("lat"))
+      eventLon.as("lon"), eventLat.as("lat"))
 
   // ---- layer metadata formulas (mirrored in [[SynthSql]]) ------------
 

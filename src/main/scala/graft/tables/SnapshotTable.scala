@@ -253,11 +253,7 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
          | "committedAtMs": "${System.currentTimeMillis()}"}""".stripMargin
     Files.write(metaDir.resolve(s"snapshot-$id.json"),
       json.getBytes(StandardCharsets.UTF_8))
-    // atomic-ish pointer swap: write sibling then move
-    val tmp = metaDir.resolve(s"current.tmp.$id")
-    Files.write(tmp, id.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, metaDir.resolve("current"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    SnapshotTable.writeAtomically(metaDir.resolve("current"), id.toString)
     id
   }
 
@@ -538,19 +534,28 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
   private def keyedDelta(updates: DataFrame, keyCols: Seq[String], numBuckets: Int,
       keys: Iterable[Any]): Delta = {
     val key = setKey(keyCols)
-    val hit = coalesce(GraftSqlShim.inSet(col(key), keys), lit(false))
-    // observed in this table's session, which runs the write
+    val hit = inKeys(keyCols, keys)
+    val (rows, applied) = observeKeys(GraftSqlShim.inSession(spark, updates)
+      .withColumn("__b", bucketExpr(keyCols, numBuckets)), hit)
+    new Delta(rows, keys.iterator.map(bucketOf(updates.schema(key), numBuckets)).toSet,
+      _.filter(!hit), applied, () => ())
+  }
+
+  /** Whether a row's key is in a caller's key set. */
+  private def inKeys(keyCols: Seq[String], keys: Iterable[Any]): Column =
+    coalesce(GraftSqlShim.inSet(col(setKey(keyCols)), keys), lit(false))
+
+  /** `rows` (a frame of this table's session, which runs the write)
+    * observed against a key set: once a write over them has run, the
+    * returned check yields their count and fails if any row's key is
+    * outside the set (`hit` false). */
+  private def observeKeys(rows: DataFrame, hit: Column): (DataFrame, () => Long) = {
     val obs = Observation()
-    val rows = GraftSqlShim.inSession(spark, updates)
-      .withColumn("__b", bucketExpr(keyCols, numBuckets))
-      .observe(obs, count(lit(1)).as("n"), count_if(!hit).as("strays"))
-    val applied = () => {
+    (rows.observe(obs, count(lit(1)).as("n"), count_if(!hit).as("strays")), () => {
       val strays = obs.get("strays").asInstanceOf[Long]
       require(strays == 0L, s"$strays delta rows at $root have keys outside the merge's key set")
       obs.get("n").asInstanceOf[Long]
-    }
-    new Delta(rows, keys.iterator.map(bucketOf(updates.schema(key), numBuckets)).toSet,
-      _.filter(!hit), applied, () => ())
+    })
   }
 
   /** ONE aggregate over a cached, `__b`-tagged delta returns its
@@ -643,9 +648,10 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
     * the table's lon/lat columns, which the updates must carry.
     *
     * `keys` mean what they mean to [[mergeInto]]: a key with no delta
-    * row is deleted. The delta commit carries a tombstone for every key
-    * (a key's upsert rows in the same commit win over it), and a
-    * compaction drops the keys without a stats pass. */
+    * row is deleted, and a delta row whose key is outside the set fails
+    * the merge before it commits. The delta commit carries a tombstone
+    * for every key (a key's upsert rows in the same commit win over it),
+    * and a compaction drops the keys without a stats pass. */
   def mergeIntoDelta(updates: DataFrame, keyCols: Seq[String],
       deleteMarker: Option[String] = None, compactEvery: Int = 8,
       keys: Option[Iterable[Any]] = None): MergeResult = {
@@ -662,13 +668,19 @@ class SnapshotTable(val spark: SparkSession, val root: String) {
         case Some(m) => rows.withColumnRenamed(m, "__del")
         case None => rows.withColumn("__del", lit(false))
       }
-      val withDel = keys.fold(marked)(ks => marked.unionByName(tombstones(marked.schema, keyCols, ks)))
+      val (observed, checkKeys) = keys.fold((marked, () => 0L))(ks =>
+        observeKeys(GraftSqlShim.inSession(spark, marked), inKeys(keyCols, ks)))
+      val withDel = keys.fold(observed)(ks => observed.unionByName(tombstones(marked.schema, keyCols, ks)))
         .withColumn("__b", bucketExpr(keyCols, numBuckets))
       val id = cur + 1
       val dir = dataDir(id)
       // the delta commit is ONE Spark job: the write carries its own
-      // observed per-bucket counts
+      // observed per-bucket counts and the key-set check
       val counts = writeCounted(clusterByBucket(withDel, numBuckets), dir, numBuckets)
+      // a delta row outside the key set refuses the commit before any
+      // manifest names the data dir
+      try checkKeys()
+      catch { case e: IllegalArgumentException => SnapshotTable.deleteRecursively(dir); throw e }
       val updateRows = counts.values.sum
       if (updateRows == 0L) {
         // an empty batch must not commit: a delta snapshot whose data
@@ -802,6 +814,16 @@ object SnapshotTable {
     * thousands of merges per session; leaked FDs accumulate). */
   private[graft] def closing[A <: java.util.stream.BaseStream[_, _], R](st: A)(f: A => R): R =
     try f(st) finally st.close()
+
+  /** Replace the content of `target` with `text` through a sibling temp
+    * file and an atomic move, so a crash leaves the old content or the
+    * new one, never a truncated file. */
+  private[graft] def writeAtomically(target: Path, text: String): Unit = {
+    val tmp = target.resolveSibling(s"${target.getFileName}.tmp")
+    Files.write(tmp, text.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
 
   /** THE recursive directory delete (walk, reverse-sort, delete),
     * FD-safe; no-op on a missing path. Every rm -rf in the codebase

@@ -189,7 +189,8 @@ class SnapshotTableSpec extends SparkTestBase {
   }
 
   test("a key set is authoritative in delta commits and compactions too") {
-    val t = SnapshotTable.create(spark, freshRoot("keyed-mor"),
+    val root = freshRoot("keyed-mor")
+    val t = SnapshotTable.create(spark, root,
       Seq((1L, "a1"), (1L, "a2"), (2L, "b1"), (3L, "c1")).toDF("k", "v"),
       Seq("k"), numBuckets = 4)
     def state(): Map[Long, Set[String]] = t.read().as[(Long, String)]
@@ -199,9 +200,16 @@ class SnapshotTableSpec extends SparkTestBase {
       Some("deleted"), keys = Some(Set(1L, 2L)))
     assert(t.snapshotInfo(t.currentSnapshot.get)("operation") === "delta")
     assert(state() === Map(1L -> Set("a9"), 3L -> Set("c1")))
-    // a compaction with a delta row outside the key set fails before
-    // it commits: the head and the resolved rows stay as they were
+    // a delta commit or a compaction with a delta row outside the key
+    // set fails before it commits: the head and the resolved rows stay
+    // as they were, and the refused delta leaves no data dir
     val (head, rows) = (t.currentSnapshot, state())
+    val stray = intercept[IllegalArgumentException](t.mergeIntoDelta(
+      Seq((5L, "e1", false)).toDF("k", "v", "deleted"), Seq("k"), Some("deleted"),
+      compactEvery = 8, keys = Some(Set(6L))))
+    assert(stray.getMessage.contains("outside the merge's key set"))
+    assert(t.currentSnapshot === head && state() === rows)
+    assert(!Files.exists(Paths.get(root, "data", (head.get + 1).toString)))
     val e = intercept[IllegalArgumentException](t.mergeIntoDelta(
       Seq((5L, "e1", false)).toDF("k", "v", "deleted"), Seq("k"), Some("deleted"),
       compactEvery = 1, keys = Some(Set(6L))))
